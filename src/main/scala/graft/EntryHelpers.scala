@@ -257,10 +257,10 @@ private[graft] object EntryHelpers {
   }.mkString(", ")
 
   /** DuckDB argmax-with-ties-to-earlier over the s_* scores plus the CJK
-   * density gate — the langId CASE (fold order en, es, de, fr). NULL text
-   * pins to 'en' explicitly: with NULL scores every comparison is NULL and
-   * the CASE would otherwise fall through to 'fr', while the Spark fold's
-   * when() chain keeps its ('en', -1) seed. */
+   * density gate — the langId rule (scoring order en, es, de, fr). NULL
+   * text pins to 'en' explicitly: with NULL scores every comparison is NULL
+   * and the CASE would otherwise fall through to 'fr', while the Spark
+   * LangId kernel maps null text to 'en'. */
   private[graft] val SqlLangCase: String =
     """CASE WHEN text IS NULL THEN 'en'
       | WHEN length(text) - length(regexp_replace(text, '[\x{4e00}-\x{9fff}]', '', 'g')) > length(text) * 0.3 THEN 'zh'

@@ -15,8 +15,23 @@ import java.nio.charset.StandardCharsets
   * Optional third arg: a comma-separated query subset.
   */
 object PlanTool {
+  /** The queries to dump. Default: the timed surface; an explicit
+    * comma-separated subset may name ANY declared query (plan evidence for
+    * untimed operators, e.g. s06's salted pairs), and a name that is not
+    * declared fails the run instead of being skipped. */
+  def queryNames(subset: Option[String]): Seq[String] = subset match {
+    case Some(list) =>
+      val names = list.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
+      val unknown = names.filterNot(SparkEntry.queries.contains)
+      require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+      names
+    case None =>
+      SparkEntry.benchQueries ++ TpchSuite.sql.keys.toSeq.sorted.map(n => s"${n}_tpch")
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanTool <roundDir> <suffix> [q1,q2,...]")
+    val names = queryNames(args.lift(2))
     val outDir = Paths.get("plans", args(0))
     val suffix = args(1)
     Files.createDirectories(outDir)
@@ -30,13 +45,6 @@ object PlanTool {
     // plan-inspection mode (same as graft.Plans): operators that terminally
     // localCheckpoint show the real chain instead of a Scan ExistingRDD
     spark.conf.set("graft.explain.deferCheckpoint", "true")
-    val hNames = TpchSuite.sql.keys.toSeq.sorted.map(n => s"${n}_tpch")
-    // default: the timed surface; an explicit subset may name ANY declared
-    // query (plan evidence for untimed operators, e.g. s06's salted pairs)
-    val names =
-      if (args.length >= 3)
-        args(2).split(",").toSeq.filter(SparkEntry.queries.contains)
-      else SparkEntry.benchQueries ++ hNames
     for (name <- names) {
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)

@@ -5,21 +5,21 @@ import org.apache.spark.sql.functions._
 
 /**
  * Text-analysis operators for corpus curation: token counting, quality
- * metrics, n-gram-heuristic language ID, and document fingerprinting.
- * Everything except the fingerprint/langid scorers is pure
- * `org.apache.spark.sql.functions` (whole-stage-codegen'd; no UDF in the
- * per-character hot paths).
+ * metrics, stopword-heuristic language ID, and document fingerprinting.
+ * The per-document scorers (token/quality counts, language ID,
+ * fingerprint) are native codegen'd expressions that read each document
+ * once; the rest is pure `org.apache.spark.sql.functions`
+ * (whole-stage-codegen'd; no UDF in the per-character hot paths).
  */
 object TextFunctions {
 
   /** Whitespace token count (0 for blank — including tab/newline-only
-   * text: the guard strips ALL whitespace, not just spaces, matching the
+   * text: the guard looks for ANY non-whitespace character, matching the
    * shingle stage's blank-document convention). Boundary tokens follow
    * the library-wide `split(trim(text), "\s+")` convention the oracles
-   * and the shingle expressions share. */
-  def tokenCount(text: Column): Column =
-    when(length(regexp_replace(text, "\\s", "")) === 0, lit(0))
-      .otherwise(size(split(trim(text), "\\s+")))
+   * and the shingle expressions share. The `tokens` field of
+   * [[textStats]], so token boundaries are defined in one place. */
+  def tokenCount(text: Column): Column = textStats(text).getField("tokens")
 
   /** BPE-ish subword token estimate: word-pieces + digits + punctuation as
    * separate tokens (regex approximation of a byte-pair tokenizer's
@@ -35,59 +35,48 @@ object TextFunctions {
     when(length(regexp_replace(text, "\\s", "")) > 0,
       split(trim(text), "\\s+")).otherwise(array().cast("array<string>"))
 
-  /** Count of characters matching a regex character class (the class is
-   * removed and the length delta measured). */
-  def charClassCount(text: Column, charClassRegex: String): Column =
-    length(text) - length(regexp_replace(text, charClassRegex, ""))
-
-  private val StopwordsEn = Seq("the", "a", "an", "and", "or", "of", "to",
-    "in", "is", "are", "was", "for", "on", "with", "as", "at", "by", "it")
+  /** One-pass per-document counts, struct<chars, tokens, punct, digits,
+   * stopwords, non_ws> — see [[graft.functions.expressions.TextStats]]. */
+  def textStats(text: Column): Column =
+    org.apache.spark.sql.graftshim.ColumnBridge.column(
+      graft.functions.expressions.TextStats(
+        org.apache.spark.sql.graftshim.ColumnBridge.expression(text)))
 
   /** Quality metrics bundle: token/char counts, punctuation & digit counts,
-   * stopword hits, mean word length, and a composite [0,1] score. All
-   * integer counts plus deterministic double ratios. */
-  def qualityMetrics(text: Column): Seq[(String, Column)] = {
-    val toks = split(trim(lower(text)), "\\s+")
-    val nTok = tokenCount(text)
-    val nStop = size(filter(toks, t => t.isin(StopwordsEn: _*)))
+   * stopword hits, mean word length. All integer counts plus
+   * deterministic double ratios, every one derived from one [[textStats]]
+   * struct: in a projection Spark evaluates that struct once per row
+   * (subexpression elimination), so the document is read once. */
+  def qualityMetrics(text: Column): Seq[(String, Column)] =
+    metricsOf(textStats(text))
+
+  /** The quality metrics over a [[textStats]] struct. */
+  private def metricsOf(stats: Column): Seq[(String, Column)] = {
+    val nTok = stats.getField("tokens")
+    val nStop = stats.getField("stopwords")
     Seq(
-      "n_chars" -> length(text),
+      "n_chars" -> stats.getField("chars"),
       "n_tokens" -> nTok,
-      "n_punct" -> charClassCount(text, "[\\p{Punct}]"),
-      "n_digits" -> charClassCount(text, "[0-9]"),
+      "n_punct" -> stats.getField("punct"),
+      "n_digits" -> stats.getField("digits"),
       "n_stopwords" -> nStop,
       "stopword_ratio" -> when(nTok > 0, nStop.cast("double") / nTok).otherwise(lit(0.0)),
       "mean_word_len" -> when(nTok > 0,
-        length(regexp_replace(text, "\\s+", "")).cast("double") / nTok).otherwise(lit(0.0))
+        stats.getField("non_ws").cast("double") / nTok).otherwise(lit(0.0))
     )
   }
 
-  private val LangStopwords: Map[String, Seq[String]] = Map(
-    "en" -> Seq("the", "and", "of", "to", "in", "is", "that", "for", "with", "was"),
-    "es" -> Seq("el", "la", "de", "que", "y", "en", "los", "del", "las", "por"),
-    "de" -> Seq("der", "die", "und", "das", "ist", "nicht", "mit", "ein", "den", "von"),
-    "fr" -> Seq("le", "la", "les", "des", "est", "et", "dans", "une", "que", "pour"),
-  )
-
   /**
-   * N-gram/stopword heuristic language ID over {en,es,de,fr,zh}:
-   * CJK-codepoint density decides zh; otherwise the language with the most
-   * stopword hits wins (ties → en). Pure native expressions — the scoring
-   * is a static CASE over array_intersect sizes, no UDF.
+   * Stopword-heuristic language ID over {en,es,de,fr,zh}: CJK-codepoint
+   * density above 0.3 decides zh; otherwise the language with the most
+   * distinct stopword hits wins (ties → the earlier of en, es, de, fr).
+   * One native pass per document
+   * ([[graft.functions.expressions.LangId]]); null text is `en`.
    */
-  def langId(text: Column): Column = {
-    val toks = split(trim(lower(text)), "\\s+")
-    val cjk = charClassCount(text, "[\\u4e00-\\u9fff]")
-    val scores = LangStopwords.map { case (lang, words) =>
-      lang -> size(array_intersect(toks, array(words.map(lit): _*)))
-    }
-    // note: array_intersect counts distinct stopword *types*, robust for ID
-    val best = scores.foldLeft[(Column, Column)]((lit("en"), lit(-1))) {
-      case ((bl, bs), (lang, s)) =>
-        (when(s > bs, lit(lang)).otherwise(bl), when(s > bs, s).otherwise(bs))
-    }
-    when(cjk > length(text) * 0.3, lit("zh")).otherwise(best._1)
-  }
+  def langId(text: Column): Column =
+    org.apache.spark.sql.graftshim.ColumnBridge.column(
+      graft.functions.expressions.LangId(
+        org.apache.spark.sql.graftshim.ColumnBridge.expression(text)))
 
   /**
    * 64-bit rolling polynomial fingerprint (Rabin-Karp style, base 31 with
@@ -446,19 +435,28 @@ object TextFunctions {
         (col("__s").cast("double") / col("n_tokens")).as("importance"))
   }
 
-  /** Quality filter composing [[qualityMetrics]]: keep documents within
-   * the given bounds (the curation filter of a training-data pipeline). */
+  /** Quality filter over [[qualityMetrics]]: keep documents within the
+   * given bounds (the curation filter of a training-data pipeline). Null
+   * text is dropped. */
   def qualityFilter(
       df: DataFrame, textCol: String,
       minTokens: Int = 5,
       maxStopwordRatio: Double = 1.0,
       minStopwordRatio: Double = 0.0,
       maxMeanWordLen: Double = Double.MaxValue): DataFrame = {
-    val m = qualityMetrics(col(textCol)).toMap
-    df.filter(m("n_tokens") >= minTokens &&
-      m("stopword_ratio") <= maxStopwordRatio &&
-      m("stopword_ratio") >= minStopwordRatio &&
-      m("mean_word_len") <= maxMeanWordLen)
+    // The condition names the text column exactly once: the bounds read a
+    // lambda variable bound to the one textStats struct. Filter pushdown
+    // copies a projected alias into every reference to it, and FilterExec
+    // does no subexpression elimination, so each extra reference would
+    // re-run the text's whole upstream derivation (e.g. a PII-redaction
+    // chain) once more per row.
+    df.filter(exists(array(textStats(col(textCol))), stats => {
+      val m = metricsOf(stats).toMap
+      m("n_tokens") >= minTokens &&
+        m("stopword_ratio") <= maxStopwordRatio &&
+        m("stopword_ratio") >= minStopwordRatio &&
+        m("mean_word_len") <= maxMeanWordLen
+    }))
   }
 
   /**

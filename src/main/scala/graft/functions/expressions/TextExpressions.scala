@@ -2,10 +2,14 @@ package graft.functions.expressions
 
 import java.text.Normalizer
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{CollationFactory, CollationSupport}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -232,4 +236,246 @@ object FixMojibake {
       case _: java.nio.charset.CharacterCodingException => None
     }
   }
+}
+
+/**
+ * `text_stats(text)` → struct<chars, tokens, punct, digits, stopwords,
+ * non_ws> (all int): the per-document counts behind
+ * [[graft.functions.TextFunctions.qualityMetrics]], read in one pass over
+ * the UTF-8 bytes instead of one regex scan per count. Null text gives a
+ * null struct. Every field equals the Catalyst formulation it replaces:
+ *
+ *  - `chars`     = `length(text)` (code points)
+ *  - `tokens`    = `size(split(trim(text), "\s+"))`, 0 when the text has
+ *                  no non-`\s` character
+ *  - `punct`     = characters matching Java's `\p{Punct}` (ASCII)
+ *  - `digits`    = characters matching `[0-9]`
+ *  - `stopwords` = tokens of `split(trim(lower(text)), "\s+")` in
+ *                  [[TextStats.Stopwords]], with multiplicity
+ *  - `non_ws`    = `length(regexp_replace(text, "\s", ""))`
+ *
+ * Token boundaries, trimming and lowercasing are [[TextScan]]'s, shared
+ * with [[LangId]].
+ */
+case class TextStats(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = TextStats.Schema
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    child.dataType match {
+      case StringType => TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"text_stats requires a string column, got ${other.catalogString}")
+    }
+
+  // read the way Spark's Lower reads it, so stopword matching lowercases
+  // exactly as lower(text) does
+  private lazy val useICU = SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+
+  override def nullSafeEval(v: Any): Any =
+    TextStats.compute(v.asInstanceOf[UTF8String], useICU)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val obj = "graft.functions.expressions.TextStats$.MODULE$"
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $obj.compute($c, $useICU);")
+  }
+
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+object TextStats {
+  val Schema: StructType = StructType(
+    Seq("chars", "tokens", "punct", "digits", "stopwords", "non_ws")
+      .map(StructField(_, IntegerType, nullable = false)))
+
+  /** The English stopword list of the quality metrics. */
+  val Stopwords: Seq[String] = Seq("the", "a", "an", "and", "or", "of", "to",
+    "in", "is", "are", "was", "for", "on", "with", "as", "at", "by", "it")
+
+  private val Lex = new Lexicon(Stopwords)
+
+  def compute(s: UTF8String, useICU: Boolean): InternalRow = {
+    val r = TextScan.run(s, Lex, useICU)
+    new GenericInternalRow(Array[Any](
+      r.chars, r.tokens, r.punct, r.digits, r.hits.sum, r.chars - r.spaces))
+  }
+}
+
+/**
+ * `lang_id(text)` → string: stopword-heuristic language ID over
+ * {en, es, de, fr, zh} in one pass. A document whose share of CJK
+ * ideographs (U+4E00–U+9FFF) is above 0.3 of its characters is `zh`;
+ * otherwise each language scores the number of DISTINCT words of its
+ * stopword list among the lowercased whitespace tokens, and a language
+ * must score strictly higher than every earlier one in the order
+ * en, es, de, fr to win (ties go to the earlier; no hits is `en`). Null
+ * text is `en`.
+ */
+case class LangId(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = StringType
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    child.dataType match {
+      case StringType => TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"lang_id requires a string column, got ${other.catalogString}")
+    }
+
+  private lazy val useICU = SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+
+  override def nullable: Boolean = false
+  override def eval(input: InternalRow): Any =
+    LangId.detect(child.eval(input).asInstanceOf[UTF8String], useICU)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    val obj = "graft.functions.expressions.LangId$.MODULE$"
+    ev.copy(
+      code = c.code +
+        code"""
+           |${CodeGenerator.javaType(dataType)} ${ev.value} =
+           |  $obj.detect(${c.isNull} ? null : ${c.value}, $useICU);
+         """.stripMargin,
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+object LangId {
+  /** Stopword lists in scoring order: the first language wins ties. */
+  val Languages: Seq[(String, Seq[String])] = Seq(
+    "en" -> Seq("the", "and", "of", "to", "in", "is", "that", "for", "with", "was"),
+    "es" -> Seq("el", "la", "de", "que", "y", "en", "los", "del", "las", "por"),
+    "de" -> Seq("der", "die", "und", "das", "ist", "nicht", "mit", "ein", "den", "von"),
+    "fr" -> Seq("le", "la", "les", "des", "est", "et", "dans", "une", "que", "pour"))
+
+  private val Lex = new Lexicon(Languages.flatMap(_._2).distinct)
+  private val Names = Languages.map(l => UTF8String.fromString(l._1)).toArray
+  private val Zh = UTF8String.fromString("zh")
+  /** per language, the lexicon index of each of its words */
+  private val WordIds: Array[Array[Int]] =
+    Languages.map(_._2.map(Lex.indexOf).toArray).toArray
+
+  def detect(s: UTF8String, useICU: Boolean): UTF8String = {
+    if (s == null) return Names(0)
+    val r = TextScan.run(s, Lex, useICU)
+    if (r.cjk > r.chars * 0.3) return Zh
+    var best = 0
+    var bestScore = -1
+    var l = 0
+    while (l < WordIds.length) {
+      var score = 0
+      for (w <- WordIds(l)) if (r.hits(w) > 0) score += 1
+      if (score > bestScore) { best = l; bestScore = score }
+      l += 1
+    }
+    Names(best)
+  }
+}
+
+/** A fixed list of lowercase ASCII words, looked up by token. */
+private[expressions] final class Lexicon(words: Seq[String]) {
+  require(words.forall(w => w.nonEmpty && w.forall(c => c >= 'a' && c <= 'z')),
+    "lexicon words must be lowercase ASCII")
+
+  private val index = new java.util.HashMap[UTF8String, Integer]()
+  words.zipWithIndex.foreach { case (w, i) => index.put(UTF8String.fromString(w), i) }
+  private val maxLen = words.map(_.length).max
+
+  def size: Int = words.length
+  def indexOf(w: String): Int = index.get(UTF8String.fromString(w)).intValue
+
+  /** Index of `lower(token)` for the token `b[from, until)`, or -1. */
+  def lookup(b: Array[Byte], from: Int, until: Int, useICU: Boolean): Int = {
+    var chars = 0
+    var plain = true // ASCII with no upper-case letter: lower() is the identity
+    var i = from
+    while (i < until) {
+      val c = b(i)
+      if ((c & 0xC0) != 0x80) chars += 1
+      if (c < 0 || (c >= 'A' && c <= 'Z')) plain = false
+      i += 1
+    }
+    // lowercasing maps each code point to one or more (İ → i + U+0307),
+    // so a token longer than every word cannot lowercase to one
+    if (chars > maxLen) return -1
+    val tok = UTF8String.fromBytes(b, from, until - from)
+    val key = if (plain) tok
+      else CollationSupport.Lower.exec(tok, CollationFactory.UTF8_BINARY_COLLATION_ID, useICU)
+    val ix = index.get(key)
+    if (ix == null) -1 else ix.intValue
+  }
+}
+
+/** What one pass over a document's bytes counts; see [[TextScan.run]]. */
+private[expressions] final class TextScan(lexiconSize: Int) {
+  var chars = 0
+  var spaces = 0
+  var tokens = 0
+  var punct = 0
+  var digits = 0
+  var cjk = 0
+  /** per lexicon word, how many tokens lowercase to it */
+  val hits = new Array[Int](lexiconSize)
+}
+
+private[expressions] object TextScan {
+  /** Java regex `\s` (no UNICODE_CHARACTER_CLASS): [ \t\n\x0B\f\r].
+   * NBSP and the U+2000 block are not `\s`. */
+  private def isSpace(c: Byte): Boolean = c == ' ' || (c >= '\t' && c <= '\r')
+
+  /** `\p{Punct}`: the 32 ASCII punctuation characters. */
+  private def isPunct(c: Byte): Boolean =
+    (c >= '!' && c <= '/') || (c >= ':' && c <= '@') ||
+      (c >= '[' && c <= '`') || (c >= '{' && c <= '~')
+
+  /**
+   * One pass over `s` (UTF-8; every counted class is ASCII or a whole
+   * 3-byte sequence). Tokens follow `split(trim(s), "\s+")`, the library-
+   * wide convention: `trim` strips ASCII spaces (0x20) only, and
+   * `String.split` with limit -1 yields one more piece than there are
+   * `\s` runs, leading and trailing empty pieces included; a document
+   * with no non-`\s` character has 0 tokens. Each non-empty token is
+   * looked up in `lex` after lowercasing as `lower(s)` does.
+   */
+  def run(s: UTF8String, lex: Lexicon, useICU: Boolean): TextScan = {
+    val r = new TextScan(lex.size)
+    val b = s.getBytes
+    val n = b.length
+    var from = 0
+    while (from < n && b(from) == ' ') from += 1
+    var until = n
+    while (until > from && b(until - 1) == ' ') until -= 1
+    var runs = 0
+    var tokStart = -1
+    var i = 0
+    while (i < n) {
+      val c = b(i)
+      if (isSpace(c)) {
+        r.spaces += 1
+        if (i >= from && i < until) {
+          if (tokStart >= 0) {
+            hit(r, lex.lookup(b, tokStart, i, useICU))
+            tokStart = -1
+            runs += 1
+          } else if (i == from) runs += 1
+        }
+      } else {
+        if (tokStart < 0 && i >= from && i < until) tokStart = i
+        if (c >= '0' && c <= '9') r.digits += 1
+        else if (isPunct(c)) r.punct += 1
+        else if (c >= 0xE4.toByte && c <= 0xE9.toByte && i + 2 < n) {
+          val cp = ((c & 0x0F) << 12) | ((b(i + 1) & 0x3F) << 6) | (b(i + 2) & 0x3F)
+          if (cp >= 0x4E00 && cp <= 0x9FFF) r.cjk += 1
+        }
+      }
+      i += 1
+    }
+    if (tokStart >= 0) hit(r, lex.lookup(b, tokStart, until, useICU))
+    r.chars = s.numChars()
+    r.tokens = if (r.chars == r.spaces) 0 else runs + 1
+    r
+  }
+
+  private def hit(r: TextScan, ix: Int): Unit = if (ix >= 0) r.hits(ix) += 1
 }

@@ -31,6 +31,8 @@ class ExpressionsCodegenSpec extends SparkTestBase {
       MinHashSignature(sh, 8, seed = 42L),
       SimHash64(sh),
       Fingerprint64(textRef),
+      TextStats(textRef),
+      LangId(textRef),
       L2Normalize(vecRef),
       HyperplaneKeys(vecRef, dim = 4, nTables = 2, nBits = 8, seed = 7L, probes = 1),
       RandomProject(vecRef, outDim = 8, seed = 5L),
@@ -90,6 +92,12 @@ class ExpressionsCodegenSpec extends SparkTestBase {
             case ArrayType(IntegerType, _) =>
               assert(out.getArray(i).toIntArray.toSeq ===
                 interp.asInstanceOf[GenericArrayData].toIntArray.toSeq, clue)
+            case StringType =>
+              assert(out.getUTF8String(i) === interp, clue)
+            case st: StructType if st.forall(_.dataType == IntegerType) =>
+              val n = st.size
+              assert((0 until n).map(out.getStruct(i, n).getInt) ===
+                (0 until n).map(interp.asInstanceOf[InternalRow].getInt), clue)
             case other => fail(s"unhandled type $other for $clue")
           }
         }
