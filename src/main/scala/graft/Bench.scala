@@ -112,10 +112,60 @@ object Bench {
     } catch { case _: Throwable => Map.empty }
   }
 
+  /** Sleeps in 15 s steps while the 1-min load is above `bar`, for at
+   * most `capSec` seconds; returns the seconds waited. */
+  private def waitForLoad(bar: Double, capSec: Int, label: String): Int = {
+    var waited = 0
+    while (loadavg1m > bar && waited < capSec) {
+      System.err.println(f"BENCH $label loadavg ${loadavg1m}%.2f > $bar%.1f, sleeping 15s")
+      Thread.sleep(15000); waited += 15
+    }
+    waited
+  }
+
+  /** Timed runs per query (min-of-N) for the headline and h suites. */
+  private val Runs = 3
+  private val HRuns = 2
+
+  /** The result line: one JSON object whose keys come in this fixed
+   * order. A query with no successful run reads `"error"`. */
+  private[graft] def resultLine(results: Seq[(String, Option[Double])],
+      hResults: Seq[(String, Option[Double])], loadStart: Double,
+      loadEnd: Double, loadDecayed: Double, waitedSec: Int,
+      retried: Boolean, outliers: Seq[(String, Double)],
+      remeasured: Boolean, contended: Boolean, sfDir: String): String = {
+    def obj(rs: Seq[(String, Option[Double])]): String = rs.map {
+      case (k, Some(v)) => "\"" + k + f"""\":$v%.3f"""
+      case (k, None) => "\"" + k + "\":\"error\""
+    }.mkString("{", ",", "}")
+    Seq(
+      "metric" -> "\"total\"",
+      "value" -> f"${results.flatMap(_._2).sum}%.3f",
+      "unit" -> "\"sec\"",
+      "runs" -> Runs.toString,
+      "agg" -> "\"min\"",
+      "errors" -> results.count(_._2.isEmpty).toString,
+      "queries" -> obj(results),
+      "h_total" -> f"${hResults.flatMap(_._2).sum}%.3f",
+      "h_runs" -> HRuns.toString,
+      "h_errors" -> hResults.count(_._2.isEmpty).toString,
+      "h_queries" -> obj(hResults),
+      "loadavg_start" -> f"$loadStart%.2f",
+      "loadavg_end" -> f"$loadEnd%.2f",
+      "loadavg_end_decayed" -> f"$loadDecayed%.2f",
+      "loadavg_waited_sec" -> waitedSec.toString,
+      "retried" -> retried.toString,
+      "outliers_first_pass" -> obj(outliers.map { case (k, v) => k -> Some(v) }),
+      "outliers_remeasured" -> remeasured.toString,
+      "stamp_load" -> f"$StampLoad%.1f",
+      "contended" -> contended.toString,
+      "sf" -> ("\"" + sfDir + "\"")
+    ).map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
+    val spark = GraftSession.builder()
       // signature/verification frames at bench scale are tens of MB; let
       // them broadcast instead of paying two shuffle-join sorts (at real
       // scale they exceed this and AQE falls back to sort-merge)
@@ -127,11 +177,7 @@ object Bench {
     // Wait in 15 s steps (bounded) for the 1-min load to decay below the
     // threshold before timing anything; if it never does, proceed but
     // mark the line contended.
-    var waited = 0
-    while (loadavg1m > ContendedLoad && waited < 300) {
-      System.err.println(f"BENCH WAIT loadavg ${loadavg1m}%.2f > $ContendedLoad%.1f, sleeping 15s")
-      Thread.sleep(15000); waited += 15
-    }
+    val waited = waitForLoad(ContendedLoad, 300, "WAIT")
     val loadStart = loadavg1m
 
     /** Drop every cached/localCheckpointed block so the next measurement
@@ -175,21 +221,16 @@ object Bench {
         name -> times.minOption
       }
 
-    def fmt(rs: Seq[(String, Option[Double])]): String = rs.map {
-      case (k, Some(v)) => "\"" + k + f"""\":$v%.3f"""
-      case (k, None) => "\"" + k + "\":\"error\""
-    }.mkString("{", ",", "}")
-
     // steady-state throughput: 3 runs per query, report the min (first run
     // pays one-off whole-stage-codegen JIT compilation, ~6s on the heavy
     // dedup pipelines; a third run tightens the min against background
     // noise on a shared box — measured run-to-run spread is ~1.5x)
-    var results = time(names, runs = 3)
+    var results = time(names, Runs)
     // TPC-H-adapted relational suite: 2 runs (22 queries; the min still
     // sheds the per-plan codegen cost, and the suite is ~1 s/query)
     val hNames = TpchSuite.sql.keys.toSeq.sorted.map(n => s"${n}_tpch")
       .filter(SparkEntry.queries.contains)
-    var hResults = time(hNames, runs = 2)
+    var hResults = time(hNames, HRuns)
     var loadEnd = loadavg1m
 
     // END-load guard: the start gate can't see contention that ARRIVES
@@ -201,11 +242,7 @@ object Bench {
     // line is stamped contended for the cross-round ledger.
     var retried = false
     if (loadEnd > ContendedLoad) {
-      var waited2 = 0
-      while (loadavg1m > ContendedLoad && waited2 < 300) {
-        System.err.println(f"BENCH RETRY WAIT loadavg ${loadavg1m}%.2f > $ContendedLoad%.1f, sleeping 15s")
-        Thread.sleep(15000); waited2 += 15
-      }
+      waitForLoad(ContendedLoad, 300, "RETRY WAIT")
       if (loadavg1m <= ContendedLoad) {
         retried = true
         def minMerge(a: Seq[(String, Option[Double])],
@@ -215,8 +252,8 @@ object Bench {
             k -> (v ++ bm.getOrElse(k, None)).minOption
           }
         }
-        results = minMerge(results, time(names, runs = 3))
-        hResults = minMerge(hResults, time(hNames, runs = 2))
+        results = minMerge(results, time(names, Runs))
+        hResults = minMerge(hResults, time(hNames, HRuns))
         loadEnd = loadavg1m
       }
     }
@@ -235,11 +272,7 @@ object Bench {
     if (firstPass.nonEmpty) {
       System.err.println(s"BENCH OUTLIERS vs ledger: ${firstPass.map {
         case (n, v) => f"$n=$v%.3f (ref ${refs(n)}%.3f)" }.mkString(", ")}")
-      var waited3 = 0
-      while (loadavg1m > StampLoad && waited3 < 300) {
-        System.err.println(f"BENCH OUTLIER WAIT loadavg ${loadavg1m}%.2f > $StampLoad%.1f, sleeping 15s")
-        Thread.sleep(15000); waited3 += 15
-      }
+      waitForLoad(StampLoad, 300, "OUTLIER WAIT")
       if (loadavg1m <= StampLoad) {
         remeasured = true
         val names2 = firstPass.map(_._1)
@@ -259,13 +292,7 @@ object Bench {
         System.err.println("BENCH OUTLIERS stand un-re-measured (load never decayed)")
       }
     }
-    val remStr = firstPass.map { case (k, v) =>
-      "\"" + k + f"""\":$v%.3f""" }.mkString("{", ",", "}")
 
-    val errs = results.count(_._2.isEmpty)
-    val hErrs = hResults.count(_._2.isEmpty)
-    val total = results.flatMap(_._2).sum
-    val hTotal = hResults.flatMap(_._2).sum
     // The `contended` stamp (r16, judge ask #4): the raw END loadavg is
     // dominated by the bench's OWN 32-thread run — an idle-box run used
     // to self-stamp contended purely from its own end-load. Stamp from
@@ -273,14 +300,12 @@ object Bench {
     // steps) for the 1-min load to shed the bench's own contribution,
     // then read it. Raw end-load keeps its role as the retry/outlier
     // trigger above; only the decayed figure feeds the stamp.
-    var loadDecayed = loadEnd
-    var waitedStamp = 0
-    while (loadDecayed > StampLoad && waitedStamp < 90) {
-      Thread.sleep(15000); waitedStamp += 15
-      loadDecayed = loadavg1m
-    }
+    val loadDecayed =
+      if (loadEnd <= StampLoad) loadEnd
+      else { waitForLoad(StampLoad, 90, "STAMP WAIT"); loadavg1m }
     val contended = loadStart > StampLoad || loadDecayed > StampLoad
-    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","runs":3,"agg":"min","errors":$errs,"queries":${fmt(results)},"h_total":$hTotal%.3f,"h_runs":2,"h_errors":$hErrs,"h_queries":${fmt(hResults)},"loadavg_start":$loadStart%.2f,"loadavg_end":$loadEnd%.2f,"loadavg_end_decayed":$loadDecayed%.2f,"loadavg_waited_sec":$waited,"retried":$retried,"outliers_first_pass":$remStr,"outliers_remeasured":$remeasured,"stamp_load":$StampLoad%.1f,"contended":$contended,"sf":"$sfDir"}"""
+    val line = resultLine(results, hResults, loadStart, loadEnd, loadDecayed,
+      waited, retried, firstPass, remeasured, contended, sfDir)
     println(line)
     // r17 (judge ask #1): the driver has never parsed the stdout line —
     // sbt's logger prefixes it "[info] " and appends "[success] ..."

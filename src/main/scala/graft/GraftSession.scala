@@ -12,11 +12,17 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
  */
 object GraftSession {
 
+  /** Local parallelism when none is given: `SPARK_GRAFT_CPUS` when set,
+   * else the cores this JVM sees. */
+  private def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+
   /** Builder preconfigured for large-scale work: AQE (coalescing + skew
    * join), sane local shuffle parallelism, UTC. `cores` should be cluster
    * parallelism; shuffle partitions scale with it (at a real 1000-executor
    * deployment, set `spark.sql.shuffle.partitions` ≈ 2-3× total cores). */
-  def builder(master: String = "local[32]", cores: Int = 32): SparkSession.Builder =
+  def builder(master: String = s"local[$defaultCores]",
+      cores: Int = defaultCores): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", cores.toString)

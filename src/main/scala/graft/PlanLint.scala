@@ -1,10 +1,10 @@
 package graft
 
-/** Plan lint over EVERY conformance query: flags physical-plan shapes that
-  * are scale hazards unless intentional — CartesianProduct,
-  * BroadcastNestedLoopJoin, global (empty-partition) windows, and
-  * SinglePartition exchanges. Run after plan-affecting changes; the
-  * expected-flag inventory and why each is intentional live in PLANS.md.
+/** Plan lint: flags physical-plan shapes that are scale hazards unless
+  * intentional — CartesianProduct, BroadcastNestedLoopJoin, global
+  * (empty-partition) windows, and SinglePartition exchanges. The
+  * adjudicated inventory over every conformance query is PLANS.md
+  * (`graft.Plans inventory`).
   */
 object PlanLint {
   /** `plan.collect` that sees THROUGH AQE wrappers: AdaptiveSparkPlanExec
@@ -25,9 +25,8 @@ object PlanLint {
     here ++ children.flatMap(collectUnwrapped(_)(pf))
   }
 
-  /** The four scale-hazard flags of a physical plan — ONE definition
-   * shared by this main and the PLANS.md adjudicated inventory, so the
-   * two can never report different hazard sets. GLOBALWINDOW is
+  /** The four scale-hazard flags of a physical plan, as the PLANS.md
+   * adjudicated inventory reports them. GLOBALWINDOW is
    * structural, not string-matched: Expression.toString flattens an
    * empty partitionSpec so "windowspecdefinition(," never renders, and
    * AQE wraps the tree in AdaptiveSparkPlanExec (a LEAF node — a plain
@@ -46,21 +45,5 @@ object PlanLint {
       "GLOBALWINDOW" -> globalWindow,
       "SINGLEPART" -> plan.contains("SinglePartition")
     ).filter(_._2).map(_._1)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder("local[8]", 8).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val fs = flags(fn(spark, dir).queryExecution.executedPlan)
-        if (fs.nonEmpty) println(s"LINT $name: ${fs.mkString(",")}")
-      } catch {
-        case e: Throwable => println(s"LINT $name: ERROR ${e.getClass.getSimpleName}")
-      }
-    }
-    println("LINT done")
-    spark.stop()
   }
 }

@@ -23,10 +23,10 @@ object TemporalOps {
    * immediately (the default, leak-free path). With the session conf
    * `graft.explain.deferCheckpoint=true` the result is returned
    * UN-materialized instead — its full physical plan stays inspectable
-   * (`.explain`, PlanLint) rather than collapsing to a `Scan ExistingRDD`
-   * — at the cost of NOT freeing the base. Plan-inspection harnesses only
-   * (graft.Plans sets it and clears leaked blocks itself); never enable it
-   * in a pipeline. */
+   * (`.explain`, PlanLint.flags) rather than collapsing to a
+   * `Scan ExistingRDD` — at the cost of NOT freeing the base.
+   * Plan-inspection harnesses only (graft.Plans sets it in both modes and
+   * clears leaked blocks itself); never enable it in a pipeline. */
   private def materializeAndFree(result: DataFrame, base: DataFrame): DataFrame =
     if (result.sparkSession.conf
         .getOption("graft.explain.deferCheckpoint").contains("true")) result

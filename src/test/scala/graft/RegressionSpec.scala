@@ -167,14 +167,4 @@ class RegressionSpec extends SparkTestBase {
         emb.filter(col("vec_id") < 0), emb, "vec_id", "embedding", 3))
     assert(ex.getMessage.contains("dimension"))
   }
-
-  test("PlanTool fails on an unknown query name instead of skipping it") {
-    val e = intercept[IllegalArgumentException] {
-      PlanTool.queryNames(Some("t01_text_analyze,t01_text_analyse,nope"))
-    }
-    assert(e.getMessage.contains("unknown query name(s): t01_text_analyse, nope"))
-    assert(PlanTool.queryNames(Some("t01_text_analyze,q60_sql_curation")) ===
-      Seq("t01_text_analyze", "q60_sql_curation"))
-    assert(PlanTool.queryNames(None).contains("h01_tpch"))
-  }
 }
