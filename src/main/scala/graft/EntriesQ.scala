@@ -421,7 +421,7 @@ private[graft] object EntriesQ {
         val rowsOk = m1.map(_._2).sum == o.count()
         val detOk = m1 == m2
         val contentOk = graft.api.DfUtils.dfEq(
-          s.read.parquet(s"$out/a").drop("__shard"), o)
+          eng(s).load(s"$out/a", "parquet").drop("__shard"), o)
         eng(s).toDF(Seq(Seq(if (verifyOk) 1L else 0L, if (rowsOk) 1L else 0L,
           if (detOk) 1L else 0L, if (contentOk) 1L else 0L)),
           "verify_ok:long,rows_ok:long,det_ok:long,content_ok:long")

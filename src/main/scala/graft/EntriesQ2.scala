@@ -544,7 +544,7 @@ private[graft] object EntriesQ2 {
             .withColumn("batch_id", lit(id))
             .write.mode("append").parquet(outDir)
       }
-      val partials = s.read.parquet(outDir)
+      val partials = eng(s).load(outDir, "parquet")
       val merged = Sketches.hllMergeEstimate(partials, Seq("event_type"))
       val hier = Sketches.hllMergeEstimate(
         Sketches.hllMergePartial(
@@ -586,7 +586,7 @@ private[graft] object EntriesQ2 {
             .withColumn("batch_id", lit(id))
             .write.mode("append").parquet(outDir)
       }
-      val partials = s.read.parquet(outDir)
+      val partials = eng(s).load(outDir, "parquet")
       val nBatches = partials.select(countDistinct(col("batch_id")))
         .first().getLong(0)
       val hh = Sketches.frequentItems(partials.drop("batch_id"),
@@ -638,13 +638,13 @@ private[graft] object EntriesQ2 {
           val survivors =
             if (fs.exists(outPath))
               Dedup.dropNearDuplicatesAgainst(internal, "doc_id", "text",
-                s.read.parquet(outDir), "doc_id", "text",
+                eng(s).load(outDir, "parquet"), "doc_id", "text",
                 shingleK = 3, threshold = 0.5)
             else internal
           survivors.write.mode("append").parquet(outDir)
         }
       }
-      val surv = s.read.parquet(outDir)
+      val surv = eng(s).load(outDir, "parquet")
       val dropped = docs.join(surv.select("doc_id"), Seq("doc_id"),
         "left_anti")
       val survDirty = Dedup.ngramJaccardJoin(surv, "doc_id", "text",

@@ -13,7 +13,7 @@ private[graft] object EntryHelpers {
 
 
   private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    eng(s).load(s"$dir/$name.parquet")
 
   /** events.parquet has shipped in two generations: ts as TIMESTAMP(NANOS)
    * (Spark's vectorized reader rejects it — read nanos-as-long via the

@@ -5,6 +5,7 @@ import graft.operators.Repartitioner
 import graft.schema.SchemaExpr
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.graftshim.ColumnBridge
+import org.apache.spark.sql.execution.datasources.parquet.DriverFooterSchema
 import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.expressions.{Expression, WindowExpression}
@@ -12,6 +13,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{broadcast => sparkBroadcast, _}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
+
+import scala.util.control.NonFatal
 
 /**
  * Spark-native implementation of the engine vocabulary. Each operator is a
@@ -427,16 +430,28 @@ class SparkGraftEngine(val spark: SparkSession) extends GraftEngine {
 
   // ---- IO --------------------------------------------------------------
 
+  /** The format named by the extension of the last non-empty path segment,
+   * glob tail dropped, so `/x/out.csv/` is csv; parquet when none is named. */
   private def inferFormat(path: String, format: String): String =
     if (format.nonEmpty) format
-    else path.replaceAll("\\*.*$", "").split("\\.").last.toLowerCase match {
-      case "parquet" => "parquet"
-      case "csv" => "csv"
-      case "json" => "json"
-      case "orc" => "orc"
-      case _ => "parquet"
+    else {
+      val segment = path.replaceAll("\\*.*$", "").split("/").filter(_.nonEmpty)
+        .lastOption.getOrElse("")
+      val dot = segment.lastIndexOf('.')
+      (if (dot < 0) "" else segment.substring(dot + 1).toLowerCase) match {
+        case ext @ ("csv" | "json" | "orc") => ext
+        case _ => "parquet"
+      }
     }
 
+  /** Reads `path` as a DataFrame. A parquet load with no options whose path
+   * is one file or a flat directory (no glob, `mergeSchema` conf off) takes
+   * its schema from the one footer Spark's inference would pick, read on the
+   * driver with the session's parquet confs as they are now
+   * ([[org.apache.spark.sql.execution.datasources.parquet.DriverFooterSchema]]),
+   * so the load starts no Spark job. Every other load, and one whose footer
+   * cannot be picked or read (missing path, empty directory, corrupt footer,
+   * illegal type), is Spark's own inference, errors included. */
   def load(path: String, format: String = "", columns: Seq[String] = Nil,
       options: Map[String, String] = Map.empty): DataFrame = {
     val fmt = inferFormat(path, format)
@@ -446,6 +461,11 @@ class SparkGraftEngine(val spark: SparkSession) extends GraftEngine {
     val withDefaults = fmt match {
       case "csv" if !options.keys.exists(_.equalsIgnoreCase("header")) =>
         reader.option("header", "true")
+      case "parquet" if options.isEmpty =>
+        val footerSchema =
+          try DriverFooterSchema.infer(spark, path)
+          catch { case NonFatal(_) => None }
+        footerSchema.fold(reader)(s => reader.schema(s))
       case _ => reader
     }
     val df = withDefaults.load(path)

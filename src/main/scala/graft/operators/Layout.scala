@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.engine.SparkGraftEngine
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -164,7 +165,7 @@ object Layout {
     // an all-rows-filtered export writes no parquet files (manifest []) —
     // schema inference then fails, but that is an intact empty export
     val got = try {
-      val back = spark.read.parquet(path)
+      val back = SparkGraftEngine(spark).load(path, "parquet")
       val dataCols = back.columns.filterNot(_ == "__shard").toSeq
       readBackManifest(back, dataCols).map(t => t._1 -> (t._2, t._3)).toMap
     } catch {
@@ -178,7 +179,7 @@ object Layout {
   private def readManifestFromFiles(
       spark: org.apache.spark.sql.SparkSession, path: String,
       dataCols: Seq[String]): Seq[(Int, Long, String)] =
-    try readBackManifest(spark.read.parquet(path), dataCols)
+    try readBackManifest(SparkGraftEngine(spark).load(path, "parquet"), dataCols)
     catch {
       case _: org.apache.spark.sql.AnalysisException => Seq.empty
     }

@@ -71,6 +71,22 @@ class GraftSqlSpec extends SparkTestBase {
     assert(res.last.get.count() === 4)
   }
 
+  test("load/save infer the format from the last non-empty path segment") {
+    val dir = Files.createTempDirectory("graftsql").toString
+    engine.save(d1, s"$dir/out.csv")
+    assert(new java.io.File(s"$dir/out.csv").list().exists(_.endsWith(".csv")))
+    // a trailing slash used to leave "csv/" as the extension: read as parquet
+    assertDfEq(engine.load(s"$dir/out.csv/", columns = Seq("k:str", "v:int")),
+      Seq(Seq("a", 3), Seq("a", 1), Seq("b", 9), Seq("b", 2)))
+    // a dot in a parent directory names no format; neither does a bare name
+    engine.save(d1, s"$dir/v1.csv/part")
+    engine.save(d1, s"$dir/csv")
+    Seq(s"$dir/v1.csv/part", s"$dir/csv").foreach { p =>
+      assert(new java.io.File(p).list().exists(_.endsWith(".parquet")), p)
+      assert(engine.load(p).count() === 4)
+    }
+  }
+
   test("LOAD COLUMNS / DROP COLUMNS / PREPARTITION BY accept backtick-quoted names with spaces and commas") {
     // r10 regression: kwArg tokenized on [^\s,]+ so `x y` captured as `x
     // and the q117 odd-column gate query threw UNRESOLVED_COLUMN
