@@ -59,7 +59,7 @@ object Plans {
     // actual exchanges/windows. The deferred mode leaks each op's
     // once-scanned base by design — clearState frees the blocks between
     // queries.
-    spark.conf.set("graft.explain.deferCheckpoint", "true")
+    spark.conf.set(Materialize.DeferConf, "true")
     try run(spark) finally spark.stop()
   }
 

@@ -114,10 +114,13 @@ object DfUtils {
    * per-partition totals the prefix sum already collects — consumers that
    * need the total (ntile's bucket rule) get it without a second scan,
    * and from the SAME materialized stage (a separate `df.count()` could
-   * disagree on a non-re-evaluation-stable input). */
+   * disagree on a non-re-evaluation-stable input). A caller that
+   * materializes the result itself passes its scope's `eager`, so the
+   * stage is freed with the scope. */
   private[graft] def runningTotalWithSum(
       df: DataFrame, orderCols: Seq[String], weight: org.apache.spark.sql.Column,
-      outCol: String): (DataFrame, Long) = {
+      outCol: String,
+      eager: DataFrame => DataFrame = graft.Materialize.eager): (DataFrame, Long) = {
     require(orderCols.nonEmpty, "need at least one order column")
     require(!df.columns.contains(outCol), s"output column '$outCol' already exists")
     val reserved = Seq("__pid", "__w", "__loc", "__base").filter(df.columns.contains)
@@ -136,12 +139,12 @@ object DfUtils {
     require(integral, s"weight must be an integral column, got $wType")
     import org.apache.spark.sql.expressions.Window
     def ocols = orderCols.map(c => col(s"`${c.replace("`", "``")}`"))
-    val staged = df
+    // freeze partition ids for the two derivations
+    val staged = eager(df
       .withColumn("__w", coalesce(weight.cast("long"), lit(0L)))
       .repartitionByRange(ocols: _*)
       .sortWithinPartitions(ocols: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true) // freeze partition ids for the two derivations
+      .withColumn("__pid", spark_partition_id()))
     val totals = staged.groupBy("__pid").agg(sum(col("__w")).as("__t"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     val bases =
@@ -304,12 +307,8 @@ object DfUtils {
         col("n"))
     // materialize once so summary + top-K share one input scan; under the
     // plan-inspection conf the full chain stays visible (two scans there —
-    // harness only, mirrors TemporalOps.materializeAndFree)
-    val counts =
-      if (df.sparkSession.conf
-          .getOption("graft.explain.deferCheckpoint").contains("true"))
-        countsPlan
-      else countsPlan.localCheckpoint(true)
+    // harness only)
+    val counts = graft.Materialize.terminal(countsPlan)
     val summary = counts.agg(count(lit(1)).as("n_keys"),
       sum(col("n")).as("total"), max(col("n")).as("max_n"))
     val top = counts.orderBy(col("n").desc, col("key").asc).limit(topK)

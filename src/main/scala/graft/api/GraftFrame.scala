@@ -59,7 +59,7 @@ final case class GraftFrame(
 
   /** Materialized copy pinned to this JVM's block store — the engine-side
    * analogue of the reference's as_local (breaks upstream lineage). */
-  def asLocal: GraftFrame = copy(native = native.localCheckpoint(true))
+  def asLocal: GraftFrame = copy(native = graft.Materialize.eager(native))
 
   def count: Long = native.count()
   def isEmpty: Boolean = native.isEmpty
@@ -73,12 +73,7 @@ final case class GraftFrame(
   def isBounded: Boolean = !native.isStreaming
   def isLocal: Boolean = native.queryExecution.logical match {
     case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
-    case lr: org.apache.spark.sql.execution.LogicalRDD =>
-      lr.rdd.getStorageLevel !=
-        org.apache.spark.storage.StorageLevel.NONE &&
-        native.sparkSession.sparkContext.getRDDStorageInfo
-          .exists(info => info.id == lr.rdd.id && info.numCachedPartitions > 0)
-    case _ => false
+    case _ => graft.Materialize.isEager(native)
   }
   /** Partition count. NOTE (same cost as the reference's
    * `df.rdd.getNumPartitions`): resolving the partitioning of a lazy plan

@@ -129,7 +129,7 @@ object Dedup {
   def clearSignatureCache(): Unit = {
     val it = shingleCache.values.iterator()
     while (it.hasNext) {
-      org.apache.spark.sql.graftshim.ColumnBridge.unpersistCheckpointed(it.next())
+      graft.Materialize.release(it.next())
     }
     shingleCache.clear()
     signatureCache.clear()
@@ -148,32 +148,6 @@ object Dedup {
       signatureCache.clear()
     }
 
-  /** Driver-cheap fingerprint of a frame's file inputs: count + a bounded
-   * sample of (path, length, modificationTime). Non-file plans (in-memory
-   * test frames) hash to 0 and rely on the canonicalized plan alone. */
-  private def inputFingerprint(df: DataFrame): Long = {
-    val files = df.inputFiles
-    if (files.isEmpty) return 0L
-    val sorted = files.sorted
-    // even spread INCLUDING the last file — integer-stride sampling never
-    // reaches the tail, so a rewrite of an unsampled trailing file would
-    // go undetected (exactly the staleness this fingerprint guards)
-    val sample =
-      if (sorted.length <= 64) sorted.toSeq
-      else (0 until 64).map(i => sorted(((sorted.length - 1).toLong * i / 63).toInt))
-    val conf = df.sparkSession.sessionState.newHadoopConf()
-    var h = 31L * 17 + sorted.length
-    sample.foreach { f =>
-      h = 31 * h + f.##
-      try {
-        val p = new org.apache.hadoop.fs.Path(f)
-        val st = p.getFileSystem(conf).getFileStatus(p)
-        h = 31 * (31 * h + st.getLen) + st.getModificationTime
-      } catch { case _: java.io.IOException => () }
-    }
-    h
-  }
-
   /**
    * Shared shingle stage: (id, sh) — the distinct shingle-hash set per
    * document — materialized once per (input plan, params) and reused by
@@ -186,7 +160,7 @@ object Dedup {
       idCol: String,
       textCol: String,
       shingleK: Int = 3): DataFrame =
-    shingleStageKeyed(df, idCol, textCol, shingleK, inputFingerprint(df))
+    shingleStageKeyed(df, idCol, textCol, shingleK, graft.Materialize.inputFingerprint(df))
 
   private def shingleStageKeyed(
       df: DataFrame, idCol: String, textCol: String, shingleK: Int,
@@ -202,10 +176,9 @@ object Dedup {
     shingleCache.computeIfAbsent(key, _ =>
       // Repartition first: a small parquet arrives as 1-2 splits, which
       // would serialize the CPU-bound shingle stage on one core.
-      spreadForCompute(df)
+      graft.Materialize.eager(spreadForCompute(df)
         .select(col(idCol).as("id"), shingleHashes(col(textCol), shingleK).as("sh"))
-        .filter(size(col("sh")) > 0)
-        .localCheckpoint(true)) // not .persist(): the columnar cache writes array cols element-wise (~20x slower); localCheckpoint serializes rows. Tradeoff: no lineage recompute on executor loss.
+        .filter(size(col("sh")) > 0)))
   }
 
   /**
@@ -226,7 +199,7 @@ object Dedup {
     // (shingleStage may evict), and CHM prohibits recursive updates.
     // One fingerprint computation serves both keys (it costs up to 64
     // FileSystem.getFileStatus calls — a network RPC each on object stores)
-    val fp = inputFingerprint(df)
+    val fp = graft.Materialize.inputFingerprint(df)
     val base = shingleStageKeyed(df, idCol, textCol, shingleK, fp)
     val key = (df.sparkSession, df.queryExecution.logical.canonicalized,
       idCol, textCol, shingleK, numHashes, seed, fp)
@@ -544,9 +517,9 @@ object Dedup {
           ngramJaccardPrefixFiltered(sigs, threshold)
         else {
           val inverted = sigs.select(col("id"), explode(col("sh")).as("s"))
-          val dfs = inverted.groupBy("s").agg(count(lit(1)).as("df"))
-            .filter(col("df") >= 2)
-            .localCheckpoint(true)
+          val dfs = graft.Materialize.eager(
+            inverted.groupBy("s").agg(count(lit(1)).as("df"))
+              .filter(col("df") >= 2))
           val r = dfs.select(sum(col("df").cast("double")).as("occ"),
             sum(col("df").cast("double") * col("df")).as("occ2")).first()
           val amplification =
@@ -821,74 +794,71 @@ object Dedup {
     // (expensive) candidate-generation pipeline. Null-endpoint edges are
     // degenerate (a null id never equi-joins) — drop them uniformly so
     // both paths see the same graph and the driver path cannot NPE.
-    val edgeSrc = pairs.select(col("id_a"), col("id_b"))
-      .filter(col("id_a").isNotNull && col("id_b").isNotNull)
-      .localCheckpoint(true)
-    // driverMaxEdges + 1 must not overflow (Int.MaxValue means "always")
-    val probeLimit = math.min(driverMaxEdges.toLong + 1, Int.MaxValue).toInt
-    val probe =
-      if (driverMaxEdges <= 0 || !driverOrderable)
-        Array.empty[org.apache.spark.sql.Row]
-      else edgeSrc.limit(probeLimit).collect()
-    val idField = df.schema(idCol)
-    val labelSchema = StructType(Seq(
-      StructField("u", idField.dataType), StructField("lbl", idField.dataType)))
-    if (driverMaxEdges > 0 && driverOrderable &&
-        probe.length <= driverMaxEdges) {
-      if (probe.isEmpty) {
-        org.apache.spark.sql.graftshim.ColumnBridge.unpersistCheckpointed(edgeSrc)
-        return df.sparkSession.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](), labelSchema)
-      }
-      // union-find with min-id roots
-      val parent = new java.util.HashMap[Any, Any]()
-      def find(x: Any): Any = {
-        var r = x
-        var p = parent.getOrDefault(r, r)
-        while (p != r) { r = p; p = parent.getOrDefault(r, r) }
-        var c = x // path compression
-        while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
-        r
-      }
-      def lt(a: Any, b: Any): Boolean = (a, b) match {
-        case (x: String, y: String) =>
-          org.apache.spark.unsafe.types.UTF8String.fromString(x)
-            .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(y)) < 0
-        case _ => a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
-      }
-      probe.foreach { r =>
-        val ra = find(r.get(0))
-        val rb = find(r.get(1))
-        if (ra != rb) {
-          if (lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
+    // The pair list is freed when the scope exits: the driver path has
+    // consumed it into the driver, the distributed path's labels are
+    // checkpointed.
+    graft.Materialize.scoped { scope =>
+      val edgeSrc = scope.eager(pairs.select(col("id_a"), col("id_b"))
+        .filter(col("id_a").isNotNull && col("id_b").isNotNull))
+      // driverMaxEdges + 1 must not overflow (Int.MaxValue means "always")
+      val probeLimit = math.min(driverMaxEdges.toLong + 1, Int.MaxValue).toInt
+      val probe =
+        if (driverMaxEdges <= 0 || !driverOrderable)
+          Array.empty[org.apache.spark.sql.Row]
+        else edgeSrc.limit(probeLimit).collect()
+      val idField = df.schema(idCol)
+      val labelSchema = StructType(Seq(
+        StructField("u", idField.dataType), StructField("lbl", idField.dataType)))
+      if (driverMaxEdges > 0 && driverOrderable &&
+          probe.length <= driverMaxEdges) {
+        if (probe.isEmpty)
+          df.sparkSession.createDataFrame(
+            java.util.Collections.emptyList[org.apache.spark.sql.Row](), labelSchema)
+        else {
+          // union-find with min-id roots
+          val parent = new java.util.HashMap[Any, Any]()
+          def find(x: Any): Any = {
+            var r = x
+            var p = parent.getOrDefault(r, r)
+            while (p != r) { r = p; p = parent.getOrDefault(r, r) }
+            var c = x // path compression
+            while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
+            r
+          }
+          def lt(a: Any, b: Any): Boolean = (a, b) match {
+            case (x: String, y: String) =>
+              org.apache.spark.unsafe.types.UTF8String.fromString(x)
+                .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(y)) < 0
+            case _ => a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
+          }
+          probe.foreach { r =>
+            val ra = find(r.get(0))
+            val rb = find(r.get(1))
+            if (ra != rb) {
+              if (lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
+            }
+          }
+          val losers = parent.keySet().toArray.filter(k => find(k) != k)
+            .map(k => org.apache.spark.sql.Row(k, find(k)))
+          broadcast(df.sparkSession.createDataFrame(
+            java.util.Arrays.asList(losers: _*), labelSchema))
         }
+      } else {
+        // beyond the driver bound: ONE distributed connected-components core
+        // for the whole engine — graft.operators.Graph.connectedComponents
+        // (hash-min + a pointer jump per round), so chain-shaped near-dup
+        // clusters (adversarial but possible: A~B~C~... perturbation chains)
+        // inherit the O(log n)-round convergence instead of O(diameter), and
+        // the iterative-join/checkpoint discipline lives in exactly one
+        // place. It raises on non-convergence rather than silently
+        // under-deduplicating (a partial labeling would retain near-dup rows).
+        val labels = graft.operators.Graph
+          .connectedComponents(edgeSrc, "id_a", "id_b", maxIterations)
+        // every node that is not its component's minimum, with that minimum
+        labels.filter(col("node") =!= col("comp"))
+          .select(col("node").as("u"), col("comp").as("lbl"))
       }
-      val losers = parent.keySet().toArray.filter(k => find(k) != k)
-        .map(k => org.apache.spark.sql.Row(k, find(k)))
-      val loserDf = df.sparkSession.createDataFrame(
-        java.util.Arrays.asList(losers: _*), labelSchema)
-      // the pair list is fully consumed into the driver — free its blocks
-      // deterministically rather than waiting for the ContextCleaner
-      org.apache.spark.sql.graftshim.ColumnBridge.unpersistCheckpointed(edgeSrc)
-      return broadcast(loserDf)
     }
-    // beyond the driver bound: ONE distributed connected-components core
-    // for the whole engine — graft.operators.Graph.connectedComponents
-    // (hash-min + a pointer jump per round), so chain-shaped near-dup
-    // clusters (adversarial but possible: A~B~C~... perturbation chains)
-    // inherit the O(log n)-round convergence instead of O(diameter), and
-    // the iterative-join/checkpoint discipline lives in exactly one
-    // place. It raises on non-convergence rather than silently
-    // under-deduplicating (a partial labeling would retain near-dup rows).
-    val labels =
-      try graft.operators.Graph
-        .connectedComponents(edgeSrc, "id_a", "id_b", maxIterations)
-      // the pair list is no longer referenced (labels are checkpointed)
-      finally org.apache.spark.sql.graftshim.ColumnBridge
-        .unpersistCheckpointed(edgeSrc)
-    // every node that is not its component's minimum, with that minimum
-    labels.filter(col("node") =!= col("comp"))
-      .select(col("node").as("u"), col("comp").as("lbl"))
   }
 
   /**
@@ -1217,8 +1187,8 @@ object Dedup {
     val sepRegex = java.util.regex.Pattern.quote(lineSep)
     val lines = split(col(textCol), sepRegex, -1)
 
-    val freq = frequentLineHashes(df, idCol, lines, maxDocFrequency)
-      .localCheckpoint(true)
+    val freq = graft.Materialize.eager(
+      frequentLineHashes(df, idCol, lines, maxDocFrequency))
     val bloomBytes = graft.operators.BloomJoin.buildBloomBytes(
       freq, "__h", fpp)
 
@@ -1376,9 +1346,8 @@ object Dedup {
       idCol: String,
       vecCol: String,
       threshold: Double): DataFrame = {
-    val normed = spreadForCompute(df).select(col(idCol).as("id"),
-      Similarity.l2normalize(col(vecCol)).as("v"))
-      .localCheckpoint(true) // not .persist(): the columnar cache writes array cols element-wise (~20x slower); localCheckpoint serializes rows. Tradeoff: no lineage recompute on executor loss.
+    val normed = graft.Materialize.eager(spreadForCompute(df)
+      .select(col(idCol).as("id"), Similarity.l2normalize(col(vecCol)).as("v")))
     val a = normed.select(col("id").as("id_a"), col("v").as("v_a"))
     val b = normed.select(col("id").as("id_b"), col("v").as("v_b"))
     a.crossJoin(b).filter(col("id_a") < col("id_b"))

@@ -418,10 +418,9 @@ object Similarity {
     require(k >= 1, "k must be >= 1")
     val n = totalRows.getOrElse(corpus.count())
     val frac = math.min(1.0, sampleSize.toDouble / math.max(1L, n))
-    val sample = Dedup.spreadForCompute(corpus)
+    val sample = graft.Materialize.eager(Dedup.spreadForCompute(corpus)
       .select(l2normalize(col(vecCol)).as("v"))
-      .sample(withReplacement = false, frac, seed)
-      .localCheckpoint(true) // not .persist(): columnar cache writes arrays element-wise (~20x slower)
+      .sample(withReplacement = false, frac, seed))
     // init: k DISTINCT sample rows — duplicate vectors would seed duplicate
     // centroids whose higher-index cell stays empty forever (ties resolve
     // to the lower index), silently shrinking effective k. Sorted by a
@@ -527,9 +526,8 @@ object Similarity {
       threshold: Double, centroids: Array[Array[Double]],
       nProbe: Int = 2, maxBucketSize: Int = 10000): DataFrame = {
     import graft.functions.expressions.VectorExpressions.nearestCells
-    val v = Dedup.spreadForCompute(df)
-      .select(col(idCol).as("id"), l2normalize(col(vecCol)).as("v"))
-      .localCheckpoint(true) // not .persist(): columnar cache writes arrays element-wise (~20x slower)
+    val v = graft.Materialize.eager(Dedup.spreadForCompute(df)
+      .select(col(idCol).as("id"), l2normalize(col(vecCol)).as("v")))
     val banded = v.select(col("id"),
       explode(nearestCells(col("v"), centroids, nProbe)).as("cell"))
     val pairIds = Dedup.bucketPairs(banded, Seq("cell"), maxBucketSize)
@@ -557,9 +555,8 @@ object Similarity {
     // intersect) — the recall of ~15× more tables for (nBits+1)× keys.
     // Precision is unaffected: every candidate is exact-cosine verified.
     val keys = hyperplaneKeys(dim, nTables, nBits, seed, probes)
-    val v = Dedup.spreadForCompute(df)
-      .select(col(idCol).as("id"), l2normalize(col(vecCol)).as("v"))
-      .localCheckpoint(true) // not .persist(): the columnar cache writes array cols element-wise (~20x slower); localCheckpoint serializes rows. Tradeoff: no lineage recompute on executor loss.
+    val v = graft.Materialize.eager(Dedup.spreadForCompute(df)
+      .select(col(idCol).as("id"), l2normalize(col(vecCol)).as("v")))
     val banded = v.withColumn("bk", explode(keys(col("v"))))
     val pairIds = Dedup.bucketPairs(banded, Seq("bk"), maxBucketSize)
     val a = v.select(col("id").as("id_a"), col("v").as("v_a"))
@@ -802,7 +799,7 @@ object Similarity {
       .withColumn("codes", pqEncode(col("cv"), codebooks))
     // checkpoint only when the re-rank actually reuses the encoded corpus;
     // at refine = 0 it is consumed once and materializing it buys nothing
-    val c = if (refine > 0) cPlan.localCheckpoint(true) else cPlan
+    val c = if (refine > 0) graft.Materialize.eager(cPlan) else cPlan
     val q = queries
       .select(col(idCol).as("query_id"), l2normalize(col(vecCol)).as("qv"))
       .withColumn("cell", explode(nearestCells(col("qv"), centroids, nProbe)))

@@ -256,15 +256,15 @@ object Stats {
       s"column collides with internal name '$r'"))
     val finite = cols.map(c =>
       abs(col(c).cast("double")) < Double.PositiveInfinity).reduce(_ && _)
-    val base = df.filter(finite)
-      .select(cols.map(c => col(c).cast("double").as(c)): _*)
-      .localCheckpoint(true) // scanned once per column for rank maps
-    try {
+    graft.Materialize.scoped { scope =>
+      // scanned once per column for rank maps
+      val base = scope.eager(df.filter(finite)
+        .select(cols.map(c => col(c).cast("double").as(c)): _*))
       var ranked = base
       cols.zipWithIndex.foreach { case (c, i) =>
         val counts = base.groupBy(col(c)).agg(count(lit(1)).as("__cnt"))
         val indexed = graft.api.DfUtils.runningTotalWithSum(
-          counts, Seq(c), col("__cnt"), "__rkbase")._1
+          counts, Seq(c), col("__cnt"), "__rkbase", scope.eager)._1
         val rankMap = indexed.select(col(c),
           (col("__rkbase").cast("double") +
             (col("__cnt").cast("double") + 1.0) / 2.0).as(s"__rank$i"))
@@ -273,12 +273,10 @@ object Stats {
       val ranks = ranked.select(cols.zipWithIndex.map { case (c, i) =>
         col(s"__rank$i").as(c)
       }: _*)
-      correlationMatrix(ranks, cols).withColumnRenamed("corr", "spearman")
-        // the localCheckpoint must outlive the lazy result: materialize
-        // the small (pairs-sized) output before freeing the base
-        .localCheckpoint(true)
-    } finally {
-      org.apache.spark.sql.graftshim.ColumnBridge.unpersistCheckpointed(base)
+      // the base and rank stages must outlive the lazy result: materialize
+      // the small (pairs-sized) output before the scope frees them
+      graft.Materialize.eager(
+        correlationMatrix(ranks, cols).withColumnRenamed("corr", "spearman"))
     }
   }
 

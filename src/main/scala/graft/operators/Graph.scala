@@ -69,67 +69,51 @@ object Graph {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
     val w = weightCol.map(c => col(c).cast("double")).getOrElse(lit(1.0))
-    // every helper checkpoint is tracked and freed in finally: ONLY the
-    // returned ranks may survive — on an error path too (localCheckpoint
-    // blocks are not lineage-recoverable; leaking the edge-list-sized
-    // layout until ContextCleaner gets around to it defeats the point)
-    val unpersist = org.apache.spark.sql.graftshim.ColumnBridge.unpersistCheckpointed _
-    val helpers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var ranks: DataFrame = null
-    var done = false
-    try {
+    // only the returned ranks survive the scope, on an error path too:
+    // leaking the edge-list-sized layout until the ContextCleaner gets
+    // around to it defeats the point
+    graft.Materialize.scoped { scope =>
       // checkpoint the endpoint projection ONCE and derive both the edge
       // layout and the node universe from it: two independent evaluations
       // of a re-evaluation-unstable input (a sample, a mutable source)
       // could disagree on the edge/node sets and silently break Σrank = 1
-      val endpoints = edges
+      val endpoints = scope.eager(edges
         .select(col(srcCol).as("__src"), col(dstCol).as("__dst"), w.as("__w"))
-        .filter(col("__src").isNotNull && col("__dst").isNotNull)
-        .localCheckpoint(true)
-      helpers += endpoints
+        .filter(col("__src").isNotNull && col("__dst").isNotNull))
       // abs(w) < +Inf is false for NaN too (NaN-is-largest ordering), so
       // one predicate drops null, non-positive, AND non-finite weights
-      val e = endpoints
+      val e = scope.eager(endpoints
         .filter(abs(col("__w")) < Double.PositiveInfinity && col("__w") > 0)
-        .repartition(col("__src"))
-        .localCheckpoint(true)
-      helpers += e
-      val nodes = endpoints.select(col("__src").as("node"))
+        .repartition(col("__src")))
+      val nodes = scope.eager(endpoints.select(col("__src").as("node"))
         .union(endpoints.select(col("__dst").as("node")))
-        .distinct()
-        .localCheckpoint(true)
-      helpers += nodes
-      unpersist(endpoints)
+        .distinct())
+      scope.release(endpoints)
       val n = nodes.count()
       require(n > 0, "edge list has no non-null endpoints")
-      val outDeg = e.groupBy(col("__src").as("node"))
-        .agg(sum(col("__w")).as("__deg"))
-        .localCheckpoint(true)
-      helpers += outDeg
+      val outDeg = scope.eager(e.groupBy(col("__src").as("node"))
+        .agg(sum(col("__w")).as("__deg")))
       // restart distribution: uniform 1/n, or 1/|seeds∩nodes| on the
       // seed set (personalized) — one (node, __p0) frame drives the
       // init, the teleport term, AND the dangling redistribution
-      val p0 = (seedsOpt match {
+      val p0 = scope.eager(seedsOpt match {
         case None => nodes.withColumn("__p0", lit(1.0 / n))
         case Some(sd) =>
           // checkpoint BEFORE count() + join: a re-evaluation-unstable
           // seed frame (a sample, a mutable source) evaluated twice could
           // make k disagree with the mask and silently break Σrank = 1 —
           // the same hazard the endpoints checkpoint above guards
-          val present = nodes.join(
+          val present = scope.eager(nodes.join(
             sd.select(col(sd.columns.head).as("node")).distinct(),
-            Seq("node"), "left_semi").localCheckpoint(true)
-          helpers += present
+            Seq("node"), "left_semi"))
           val k = present.count()
           require(k > 0, "no seed node is present in the graph")
           nodes.join(present.withColumn("__m", lit(1)), Seq("node"), "left")
             .select(col("node"),
               when(col("__m").isNotNull, lit(1.0 / k))
                 .otherwise(lit(0.0)).as("__p0"))
-      }).localCheckpoint(true)
-      helpers += p0
-      ranks = p0.select(col("node"), col("__p0").as("rank"))
-        .localCheckpoint(true)
+      })
+      var ranks = scope.eager(p0.select(col("node"), col("__p0").as("rank")))
       for (_ <- 1 to iterations) {
         // mass parked on dangling nodes (no out-edges) — ONE scalar
         val dangling = ranks.join(outDeg, Seq("node"), "left_anti")
@@ -143,23 +127,18 @@ object Graph {
           .agg(sum(col("__w") * col("rank") / col("__deg")).as("__in"))
         val prev = ranks
         // rank = (1−d)·p0 + d·dangling·p0 + d·in  (p0 = 1/n uniform)
-        ranks = p0.join(contribs, Seq("node"), "left")
+        ranks = scope.eager(p0.join(contribs, Seq("node"), "left")
           .select(col("node"),
             (lit(1.0 - damping) * col("__p0") +
               lit(damping * dangling) * col("__p0") +
               lit(damping) * coalesce(col("__in"), lit(0.0)))
-              .as("rank"))
-          .localCheckpoint(true)
+              .as("rank")))
         // the previous iteration's checkpoint blocks are dead the moment
         // the new one materializes — without this, storage grows by
         // iterations × |nodes|
-        unpersist(prev)
+        scope.release(prev)
       }
-      done = true
       ranks
-    } finally {
-      helpers.foreach(unpersist)
-      if (!done && ranks != null) unpersist(ranks)
     }
   }
 
@@ -256,35 +235,25 @@ object Graph {
       iterations: Int = 5, weightCol: Option[String] = None): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     val w = weightCol.map(c => col(c).cast("double")).getOrElse(lit(1.0))
-    val unpersist = org.apache.spark.sql.graftshim.ColumnBridge.unpersistCheckpointed _
-    val helpers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var labels: DataFrame = null
-    var done = false
-    try {
-      val endpoints = edges
+    graft.Materialize.scoped { scope =>
+      val endpoints = scope.eager(edges
         .select(col(srcCol).as("__src"), col(dstCol).as("__dst"), w.as("__w"))
-        .filter(col("__src").isNotNull && col("__dst").isNotNull)
-        .localCheckpoint(true)
-      helpers += endpoints
+        .filter(col("__src").isNotNull && col("__dst").isNotNull))
       // undirected: each edge votes in both directions; decimal weights
       // make every later sum exact (abs < +Inf rejects NaN too)
       val good = endpoints
         .filter(abs(col("__w")) < Double.PositiveInfinity && col("__w") > 0)
         .select(col("__src"), col("__dst"),
           col("__w").cast("decimal(20,6)").as("__w"))
-      val e2 = good
+      val e2 = scope.eager(good
         .union(good.select(col("__dst").as("__src"), col("__src").as("__dst"),
           col("__w")))
-        .repartition(col("__src"))
-        .localCheckpoint(true)
-      helpers += e2
-      val nodes = endpoints.select(col("__src").as("node"))
+        .repartition(col("__src")))
+      val nodes = scope.eager(endpoints.select(col("__src").as("node"))
         .union(endpoints.select(col("__dst").as("node")))
-        .distinct()
-        .localCheckpoint(true)
-      helpers += nodes
-      unpersist(endpoints)
-      labels = nodes.withColumn("label", col("node")).localCheckpoint(true)
+        .distinct())
+      scope.release(endpoints)
+      var labels = scope.eager(nodes.withColumn("label", col("node")))
       for (_ <- 1 to iterations) {
         val votes = e2.join(labels, col("__src") === col("node"))
           .groupBy(col("__dst"), col("label"))
@@ -293,16 +262,11 @@ object Graph {
           .agg(min_by(col("label"),
             struct((-col("__mass")).as("nm"), col("label"))).as("__new"))
         val prev = labels
-        labels = prev.join(winners, Seq("node"), "left")
-          .select(col("node"), coalesce(col("__new"), col("label")).as("label"))
-          .localCheckpoint(true)
-        unpersist(prev)
+        labels = scope.eager(prev.join(winners, Seq("node"), "left")
+          .select(col("node"), coalesce(col("__new"), col("label")).as("label")))
+        scope.release(prev)
       }
-      done = true
       labels
-    } finally {
-      helpers.foreach(unpersist)
-      if (!done && labels != null) unpersist(labels)
     }
   }
 
@@ -399,32 +363,22 @@ object Graph {
       edges: DataFrame, srcCol: String, dstCol: String,
       maxIterations: Int = 30): DataFrame = {
     require(maxIterations >= 1, s"maxIterations must be >= 1, got $maxIterations")
-    val unpersist = org.apache.spark.sql.graftshim.ColumnBridge.unpersistCheckpointed _
-    val helpers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      val endpoints = edges
+    graft.Materialize.scoped { scope =>
+      val endpoints = scope.eager(edges
         .select(col(srcCol).as("__a"), col(dstCol).as("__b"))
-        .filter(col("__a").isNotNull && col("__b").isNotNull)
-        .localCheckpoint(true)
-      helpers += endpoints
+        .filter(col("__a").isNotNull && col("__b").isNotNull))
       val half = endpoints.filter(col("__a") =!= col("__b"))
-      val sym = half.select(col("__a").as("u"), col("__b").as("v"))
+      val sym = scope.eager(half.select(col("__a").as("u"), col("__b").as("v"))
         .union(half.select(col("__b").as("u"), col("__a").as("v")))
         .distinct()
-        .repartition(col("u"))
-        .localCheckpoint(true)
-      helpers += sym
+        .repartition(col("u")))
       // node universe from the RAW endpoints: self-loop-only nodes stay
       // (singletons); derived from the same checkpoint so an unstable
       // input cannot disagree between the edge and node views
-      val nodes = endpoints.select(col("__a").as("node"))
-        .union(endpoints.select(col("__b").as("node"))).distinct()
-        .localCheckpoint(true)
-      helpers += nodes
-      unpersist(endpoints)
-      var backing = nodes.select(col("node"), col("node").as("comp"))
-        .localCheckpoint(true)
-      helpers += backing
+      val nodes = scope.eager(endpoints.select(col("__a").as("node"))
+        .union(endpoints.select(col("__b").as("node"))).distinct())
+      scope.release(endpoints)
+      var backing = scope.eager(nodes.select(col("node"), col("node").as("comp")))
       var labels = backing
       var it = 0
       var changed = 1L
@@ -434,18 +388,16 @@ object Graph {
           .groupBy(col("v").as("node")).agg(min(col("comp")).as("__nmin"))
         val lookup = labels
           .select(col("node").as("__c"), col("comp").as("__cc"))
-        val joined = labels.join(nmin, Seq("node"), "left")
+        val joined = scope.eager(labels.join(nmin, Seq("node"), "left")
           .withColumn("__step",
             least(col("comp"), coalesce(col("__nmin"), col("comp"))))
           // pointer jump: the label of my (old) label is <= my label
           .join(lookup, col("__step") === col("__c"), "left")
           .select(col("node"), col("comp"),
             least(col("__step"), coalesce(col("__cc"), col("__step")))
-              .as("__new"))
-          .localCheckpoint(true)
-        helpers += joined
+              .as("__new")))
         changed = joined.filter(col("__new") < col("comp")).count()
-        unpersist(backing)
+        scope.release(backing)
         backing = joined
         labels = joined.select(col("node"), col("__new").as("comp"))
         it += 1
@@ -454,8 +406,8 @@ object Graph {
         s"connectedComponents did not converge in $maxIterations rounds " +
           "(still-shrinking labels) — raise maxIterations; components this " +
           "deep usually mean a chain-shaped graph, not a near-dup cluster")
-      labels.localCheckpoint(true)
-    } finally helpers.foreach(unpersist)
+      scope.eager(labels)
+    }
   }
 
   def triangleCount(

@@ -18,23 +18,6 @@ import org.apache.spark.sql.functions._
  */
 object TemporalOps {
 
-  /** Terminal materialization for operators that scan a once-checkpointed
-   * base: eagerly checkpoint the result so the base's blocks can be freed
-   * immediately (the default, leak-free path). With the session conf
-   * `graft.explain.deferCheckpoint=true` the result is returned
-   * UN-materialized instead — its full physical plan stays inspectable
-   * (`.explain`, PlanLint.flags) rather than collapsing to a
-   * `Scan ExistingRDD` — at the cost of NOT freeing the base.
-   * Plan-inspection harnesses only (graft.Plans sets it in both modes and
-   * clears leaked blocks itself); never enable it in a pipeline. */
-  private def materializeAndFree(result: DataFrame, base: DataFrame): DataFrame =
-    if (result.sparkSession.conf
-        .getOption("graft.explain.deferCheckpoint").contains("true")) result
-    else
-      try result.localCheckpoint(true)
-      finally org.apache.spark.sql.graftshim.ColumnBridge
-        .unpersistCheckpointed(base)
-
   /**
    * For every left row, attach the payload columns of the latest right row
    * with `right.tsCol <= left.tsCol` within the same `keys` (an ASOF LEFT
@@ -372,14 +355,12 @@ object TemporalOps {
     require(userCol != "steps_completed" && !steps.indices
       .map(i => s"step_${i + 1}").contains(userCol),
       "userCol collides with an output column")
-    val base = df
-      .select(col(userCol).as("__u"),
-        unix_timestamp(col(tsCol)).as("__t"), col(eventCol).as("__e"))
-      .filter(col("__u").isNotNull && col("__t").isNotNull)
-      .localCheckpoint(true) // scanned once per funnel step
-    // failure while BUILDING the chain must still free the materialized
-    // base (the happy path frees it inside materializeAndFree)
-    val out = try {
+    graft.Materialize.scoped { scope =>
+      // scanned once per funnel step
+      val base = scope.eager(df
+        .select(col(userCol).as("__u"),
+          unix_timestamp(col(tsCol)).as("__t"), col(eventCol).as("__e"))
+        .filter(col("__u").isNotNull && col("__t").isNotNull))
       val s1 = base.filter(col("__e") === steps.head)
       // greedy: one anchor per user (earliest). restart: every distinct
       // step-1 timestamp is an attempt anchor; the chain below is
@@ -411,16 +392,12 @@ object TemporalOps {
           attempts.withColumn("__rn", row_number().over(w))
             .filter(col("__rn") === 1).drop("__rn")
         } else attempts
-      best.select((col("__u").as(userCol) +:
+      // materialize before the scope frees the checkpointed base (or
+      // defer for plan inspection — see Materialize.terminal)
+      graft.Materialize.terminal(best.select((col("__u").as(userCol) +:
         steps.indices.map(i => col(s"step_${i + 1}"))) :+
-        col("steps_completed"): _*)
-    } catch { case t: Throwable =>
-      org.apache.spark.sql.graftshim.ColumnBridge.unpersistCheckpointed(base)
-      throw t
+        col("steps_completed"): _*))
     }
-    // materialize before freeing the checkpointed base (or defer for plan
-    // inspection — see materializeAndFree)
-    materializeAndFree(out, base)
   }
 
   /**
@@ -448,12 +425,11 @@ object TemporalOps {
     // input (a sample) could disagree on a user's cohort vs activity
     // rows (negative offsets, retention > 1), silently; and even stable
     // inputs would pay a second full scan
-    val activity = df
-      .filter(col(userCol).isNotNull && col(tsCol).isNotNull)
-      .select(col(userCol).as("__u"), bucket.as("__p"))
-      .distinct()
-      .localCheckpoint(true)
-    val out = try {
+    graft.Materialize.scoped { scope =>
+      val activity = scope.eager(df
+        .filter(col(userCol).isNotNull && col(tsCol).isNotNull)
+        .select(col(userCol).as("__u"), bucket.as("__p"))
+        .distinct())
       val first = activity.groupBy(col("__u")).agg(min(col("__p")).as("__c"))
       val counts = activity.join(first, Seq("__u"))
         .groupBy(col("__c").as("cohort_start"),
@@ -462,18 +438,14 @@ object TemporalOps {
         .agg(count(lit(1)).as("n_active"))
       val sizes = counts.filter(col("period_offset") === 0)
         .select(col("cohort_start"), col("n_active").as("n_cohort"))
-      counts.join(sizes, Seq("cohort_start"))
+      // materialize the (cohorts × offsets)-sized report before the scope
+      // frees the activity projection (or defer for plan inspection)
+      graft.Materialize.terminal(counts.join(sizes, Seq("cohort_start"))
         .select(col("cohort_start"), col("period_offset"), col("n_active"),
           col("n_cohort"),
           (col("n_active").cast("double") / col("n_cohort").cast("double"))
-            .as("retention"))
-    } catch { case t: Throwable =>
-      org.apache.spark.sql.graftshim.ColumnBridge.unpersistCheckpointed(activity)
-      throw t
+            .as("retention")))
     }
-    // materialize the (cohorts × offsets)-sized report before freeing the
-    // activity projection (or defer for plan inspection)
-    materializeAndFree(out, activity)
   }
 
   /**

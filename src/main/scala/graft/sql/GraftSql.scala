@@ -1866,38 +1866,33 @@ object GraftSql {
 
     /** WEAK CHECKPOINT [LAZY] → persist; [STRONG] CHECKPOINT → parquet
      * round-trip (lineage break); DETERMINISTIC CHECKPOINT ["ns"] →
-     * content-addressed parquet keyed by the canonicalized plan, reused
-     * across runs (reference checkpoint keywords, _visitors.py:249-282,
+     * content-addressed parquet keyed by the analyzed plan and its input
+     * files ([[graft.Materialize.contentKey]]), reused across runs
+     * (reference checkpoint keywords, _visitors.py:249-282,
      * _checkpoint.py:38-108). */
     private def execCheckpoint(stmt: String): DataFrame = {
       val masked = maskQuotes(stmt).toUpperCase
       val kws = Set("WEAK", "STRONG", "DETERMINISTIC", "CHECKPOINT", "LAZY",
         "SINGLE", "PREPARTITION", "BY")
       val d = ref(trailingDfRef(stmt, kws))
+      val root = graft.Materialize.checkpointRoot
+      def tmp = s"$root/sql_${java.util.UUID.randomUUID().toString.take(8)}"
       if (masked.startsWith("WEAK")) {
         val lzy = "\\bLAZY\\b".r.findFirstIn(masked).isDefined
         engine.persist(d, lazyPersist = lzy)
       } else if (masked.startsWith("DETERMINISTIC")) {
         val ns = "\"([^\"]*)\"".r.findFirstMatchIn(stmt).map(_.group(1)).getOrElse("")
-        val md = java.security.MessageDigest.getInstance("SHA-256")
-        md.update(ns.getBytes("UTF-8"))
-        md.update(d.queryExecution.logical.canonicalized.toString.getBytes("UTF-8"))
-        val key = md.digest().take(16).map(b => f"$b%02x").mkString
-        val path = s"/tmp/graft_checkpoints/sql_det_$key"
-        // reuse only a COMPLETE checkpoint: a dir without _SUCCESS is a
-        // crashed partial write — recompute (overwrite) instead of
-        // serving truncated results forever
-        val ok = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
-        val fs = ok.getFileSystem(engine.spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(ok)) engine.save(d, path, "parquet")
-        engine.load(path, "parquet")
+        // a plan over an RDD or in-memory rows has no content key: it is
+        // recomputed like a strong checkpoint, never served from disk
+        graft.Materialize.contentKey(ns, d) match {
+          case Some(key) => graft.Materialize.deterministic(engine, d, s"$root/sql_det_$key")
+          case None => graft.Materialize.strong(engine, d, tmp)
+        }
       } else { // STRONG or bare CHECKPOINT [SINGLE] [PREPARTITION BY ..]
-        val tmp = s"/tmp/graft_checkpoints/sql_${java.util.UUID.randomUUID().toString.take(8)}"
         val single = "\\bSINGLE\\b".r.findFirstIn(masked).isDefined
         val partBy = kwArg(stmt, "PREPARTITION\\s+BY")
           .map(_.split(",").map(_.trim).toSeq).getOrElse(Nil)
-        engine.save(d, tmp, "parquet", partitionBy = partBy, singleFile = single)
-        engine.load(tmp, "parquet")
+        graft.Materialize.strong(engine, d, tmp, partBy, single)
       }
     }
 
@@ -1923,17 +1918,16 @@ object GraftSql {
         // would fill the disk. Older subdirs are deleted — a stale handle
         // fails LOUDLY (missing files) instead of reading the wrong run.
         val base = new org.apache.hadoop.fs.Path(
-          s"/tmp/graft_checkpoints/yield_$name")
+          s"${graft.Materialize.checkpointRoot}/yield_$name")
         val fs = base.getFileSystem(engine.spark.sparkContext.hadoopConfiguration)
         if (fs.exists(base)) fs.listStatus(base).foreach(st => fs.delete(st.getPath, true))
-        val path = s"$base/${java.util.UUID.randomUUID().toString.take(8)}"
-        engine.save(d, path, "parquet")
-        yields(name) = engine.load(path, "parquet")
+        yields(name) = graft.Materialize.strong(engine, d,
+          s"$base/${java.util.UUID.randomUUID().toString.take(8)}")
       } else if ("\\bTABLE\\b".r.findFirstIn(masked).isDefined) {
         engine.saveTable(d, name)
         yields(name) = engine.loadTable(name)
       } else if ("\\bLOCAL\\b".r.findFirstIn(masked).isDefined) {
-        yields(name) = d.localCheckpoint(true)
+        yields(name) = graft.Materialize.eager(d)
       } else {
         yields(name) = d
       }

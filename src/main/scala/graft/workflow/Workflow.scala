@@ -29,24 +29,24 @@ import scala.collection.mutable
  */
 final class Workflow(
     val engine: GraftEngine,
-    checkpointDir: String = "/tmp/graft_checkpoints",
+    checkpointDir: String = graft.Materialize.checkpointRoot,
     autoPersist: Boolean = true) {
 
   private val nodes = mutable.ArrayBuffer.empty[Node]
   private val yields = mutable.LinkedHashMap.empty[String, Node]
 
-  sealed trait Materialize
-  case object NoMat extends Materialize
-  case object WeakCheckpoint extends Materialize
-  case object StrongCheckpoint extends Materialize
-  case object DeterministicCheckpoint extends Materialize
+  sealed trait Mode
+  case object NoMat extends Mode
+  case object WeakCheckpoint extends Mode
+  case object StrongCheckpoint extends Mode
+  case object DeterministicCheckpoint extends Mode
 
   final class Node private[Workflow] (
       val op: String,
       val params: Seq[String],
       val deps: Seq[Node],
       compute: Seq[DataFrame] => DataFrame) {
-    private[Workflow] var mat: Materialize = NoMat
+    private[Workflow] var mat: Mode = NoMat
     private[Workflow] var broadcastHint: Boolean = false
     nodes += this
 
@@ -218,43 +218,26 @@ final class Workflow(
     nodes.foreach(_.deps.foreach(d => outDeg(d.uuid) += 1))
 
     def resolve(n: Node): DataFrame = memo.getOrElseUpdate(n.uuid, {
-      val det = n.mat == DeterministicCheckpoint
-      val detPath = s"$checkpointDir/${n.uuid}"
-      // only a COMPLETE checkpoint (_SUCCESS present) is reusable; a dir
-      // from a crashed partial write must be recomputed, not served
-      var out =
-        if (det && fileExists(s"$detPath/_SUCCESS")) {
-          engine.load(detPath, "parquet")
-        } else {
-          var o = n.execute(n.deps.map(resolve))
-          n.mat match {
-            case WeakCheckpoint => o = engine.persist(o)
-            case StrongCheckpoint =>
-              val p = s"$checkpointDir/run_${java.util.UUID.randomUUID().toString.take(8)}_${n.uuid}"
-              engine.save(o, p, "parquet")
-              o = engine.load(p, "parquet")
-            case DeterministicCheckpoint =>
-              engine.save(o, detPath, "parquet")
-              o = engine.load(detPath, "parquet")
-            case NoMat =>
-              if (autoPersist && outDeg(n.uuid) > 1) o = engine.persist(o)
-          }
-          o
-        }
-      // applied on BOTH branches: a reused deterministic checkpoint must
-      // not silently drop the user's broadcast hint
-      if (n.broadcastHint) out = engine.broadcast(out)
-      out
+      def compute() = n.execute(n.deps.map(resolve))
+      val out = n.mat match {
+        case WeakCheckpoint => engine.persist(compute())
+        case StrongCheckpoint => graft.Materialize.strong(engine, compute(),
+          s"$checkpointDir/run_${java.util.UUID.randomUUID().toString.take(8)}_${n.uuid}")
+        // a reused checkpoint does not compute the node or its inputs
+        case DeterministicCheckpoint =>
+          graft.Materialize.deterministic(engine, compute(), s"$checkpointDir/${n.uuid}")
+        case NoMat =>
+          val o = compute()
+          if (autoPersist && outDeg(n.uuid) > 1) engine.persist(o) else o
+      }
+      // a reused deterministic checkpoint must not silently drop the
+      // user's broadcast hint either
+      if (n.broadcastHint) engine.broadcast(out) else out
     })
 
     val sinks = nodes.filter(n => outDeg(n.uuid) == 0)
     sinks.foreach(resolve)
     yields.map { case (name, node) => name -> memo(node.uuid) }.toMap
-  }
-
-  private def fileExists(path: String): Boolean = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    hPath.getFileSystem(engine.spark.sparkContext.hadoopConfiguration).exists(hPath)
   }
 }
 

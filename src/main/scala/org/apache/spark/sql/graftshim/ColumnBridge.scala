@@ -52,19 +52,6 @@ object ColumnBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.newHadoopConf()
 
-  /** Eagerly free the blocks of a `localCheckpoint(true)`'d frame. The
-   * checkpointed RDD sits behind a `LogicalRDD` plan node; unpersisting it
-   * releases the block-store memory deterministically instead of waiting
-   * for the ContextCleaner to notice the RDD is unreachable. After this,
-   * the frame is UNUSABLE (local checkpoints truncate lineage — the data
-   * cannot be recomputed). No-op for non-checkpoint plans. */
-  def unpersistCheckpointed(df: org.apache.spark.sql.DataFrame): Unit =
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** The output name Spark would assign (alias, attribute name, or the
    * generated pretty name for anonymous expressions). */
   def outputName(c: Column): String = {

@@ -447,19 +447,55 @@ class GraftSqlSpec extends SparkTestBase {
         |""".stripMargin, Map("input" -> d1))
     assert(res.yields("weak").count() === 4)
     assert(res.yields("strong").count() === 4)
-    // deterministic: same logical plan → same content-addressed path,
-    // second run must reuse (same count, file exists once)
-    val script =
-      """SELECT k, v FROM input WHERE v > 1
-        |DETERMINISTIC CHECKPOINT "spec_ns"
-        |YIELD AS out
-        |""".stripMargin
-    val r1 = GraftSql.run(engine, script, Map("input" -> d1))
-    val r2 = GraftSql.run(engine, script, Map("input" -> d1))
+    // deterministic over a file-backed input: same plan and same files →
+    // same content-addressed path, the second run reuses it
+    val src = Files.createTempDirectory("graftsql_det").toString + "/in.parquet"
+    engine.save(d1, src, "parquet")
+    val input = engine.load(src, "parquet")
+    val r1 = GraftSql.run(engine, detScript, Map("input" -> input))
+    val r2 = GraftSql.run(engine, detScript, Map("input" -> input))
     assert(r1.yields("out").count() === 3)
     assert(r2.yields("out").count() === 3)
-    // the reused frame is a parquet scan, not the original computation
+    // the reused frame is a parquet scan of the same checkpoint files
     assert(r2.yields("out").queryExecution.optimizedPlan.toString.contains("Relation"))
+    assert(r2.yields("out").inputFiles.toSet === r1.yields("out").inputFiles.toSet)
+  }
+
+  private val detScript =
+    """SELECT k, v FROM input WHERE v > 1
+      |DETERMINISTIC CHECKPOINT "spec_ns"
+      |YIELD AS out
+      |""".stripMargin
+
+  test("DETERMINISTIC CHECKPOINT serves the rows of the input it reads") {
+    // two parquet files bound to one view name: the statement text is the
+    // same, the rows are not
+    val dir = Files.createTempDirectory("graftsql_det2").toString
+    val a = df(Seq(Seq("a", 5), Seq("b", 6), Seq("c", 0)), "k:str,v:int")
+    val b = df(Seq(Seq("x", 9), Seq("y", 9)), "k:str,v:int")
+    engine.save(a, s"$dir/a.parquet", "parquet")
+    engine.save(b, s"$dir/b.parquet", "parquet")
+    def out(input: org.apache.spark.sql.DataFrame) =
+      GraftSql.run(engine, detScript, Map("input" -> input)).yields("out")
+    assertDfEq(out(engine.load(s"$dir/a.parquet", "parquet")), Seq(Seq("a", 5), Seq("b", 6)))
+    assertDfEq(out(engine.load(s"$dir/b.parquet", "parquet")), Seq(Seq("x", 9), Seq("y", 9)))
+    // in-memory inputs have no content key: each run recomputes
+    assertDfEq(out(a), Seq(Seq("a", 5), Seq("b", 6)))
+    assertDfEq(out(b), Seq(Seq("x", 9), Seq("y", 9)))
+  }
+
+  test("DETERMINISTIC CHECKPOINT recomputes a directory without _SUCCESS") {
+    val src = Files.createTempDirectory("graftsql_det3").toString + "/in.parquet"
+    engine.save(d1, src, "parquet")
+    val input = engine.load(src, "parquet")
+    val first = GraftSql.run(engine, detScript, Map("input" -> input)).yields("out")
+    val ckpt = new java.io.File(new java.net.URI(first.inputFiles.head)).getParentFile
+    // a crashed write: parquet parts of other rows, no _SUCCESS marker
+    engine.save(df(Seq(Seq("zz", 99)), "k:str,v:int"), ckpt.getPath, "parquet")
+    assert(new java.io.File(ckpt, "_SUCCESS").delete())
+    val again = GraftSql.run(engine, detScript, Map("input" -> input)).yields("out")
+    assertDfEq(again, Seq(Seq("a", 3), Seq("b", 9), Seq("b", 2)))
+    assert(new java.io.File(ckpt, "_SUCCESS").exists())
   }
 
   test("YIELD FILE / TABLE / LOCAL variants") {

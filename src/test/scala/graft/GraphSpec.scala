@@ -82,15 +82,44 @@ class GraphSpec extends SparkTestBase {
     got.foreach { case (v, r) => assert(math.abs(r - want(v)) < 1e-12, s"node $v") }
   }
 
-  test("pageRank frees each iteration's checkpoint (bounded executor storage)") {
+  test("materializing operators free their checkpoints (bounded executor storage)") {
+    import graft.functions.Stats
+    import graft.operators.TemporalOps
     val e = (1 to 60).map(i => (i.toLong % 10, (i * 3).toLong % 10))
       .toDF("src", "dst")
-    val before = spark.sparkContext.getPersistentRDDs.size
-    Graph.pageRank(e, "src", "dst", iterations = 15).count()
-    val after = spark.sparkContext.getPersistentRDDs.size
-    // ONLY the returned ranks frame may remain: retired per-iteration
-    // rank tables AND the edge-list-sized helper frames must be freed
-    assert(after - before <= 1, s"leaked ${after - before} cached RDDs")
+    val nums = (1 to 40).map(i => (i.toDouble, math.sqrt(i.toDouble), (i % 7).toDouble))
+      .toDF("x", "y", "z")
+    val events = df((0 until 40).map(i => Seq(s"u${i % 8}",
+      java.time.Instant.ofEpochSecond(i * 86400L).toString.replace("T", " ").replace("Z", ""),
+      Seq("a", "b", "c")(i % 3))), "u:str,ts:datetime,ev:str")
+    // RDDs persisted by `run` and still registered after it; a size
+    // difference would let the ContextCleaner freeing older RDDs
+    // meanwhile hide a leak
+    def grown(run: => Unit): Int = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      run
+      (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+    }
+    // ONLY the returned frame may remain: retired per-iteration tables,
+    // edge-list-sized helpers and scanned bases must be freed
+    val rows: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "pageRank" -> (() => Graph.pageRank(e, "src", "dst", iterations = 15)),
+      "labelPropagation" -> (() => Graph.labelPropagation(e, "src", "dst", iterations = 6)),
+      "connectedComponents" -> (() => Graph.connectedComponents(e, "src", "dst")),
+      "spearmanMatrix" -> (() => Stats.spearmanMatrix(nums, Seq("x", "y", "z"))),
+      "funnel" -> (() => TemporalOps.funnel(events, "u", "ts", "ev",
+        Seq("a", "b", "c"), 7 * 86400L)),
+      "retention" -> (() => TemporalOps.retention(events, "u", "ts", 604800L)))
+    rows.foreach { case (name, op) =>
+      val n = grown(op().count())
+      assert(n <= 1, s"$name left $n cached RDDs")
+    }
+    // a throwing operator frees everything it materialized
+    val chain = df((0L until 59L).map(i => Seq(i, i + 1)), "src:long,dst:long")
+    val n = grown(intercept[IllegalStateException] {
+      Graph.connectedComponents(chain, "src", "dst", maxIterations = 1)
+    })
+    assert(n === 0, s"non-converging connectedComponents leaked $n cached RDDs")
   }
 
   test("pageRank: parallel edges double the contribution; guards") {

@@ -13,6 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
  * diffs as text. This lint enforces that spelling repo-wide (r14
  * verdict "what's wrong" #1; the repo workflow notes flag literal
  * control bytes as a recurring Write-tool hazard).
+ *
+ * Second lint: the library packages materialize intermediate results only
+ * through `graft.Materialize` (one eager primitive, one release path, one
+ * checkpoint root). Entries* and Stress play the user's part and may call
+ * Spark directly.
  */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -39,5 +44,25 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"raw control bytes in source (use \\u escapes):\n${offenders.mkString("\n")}")
+  }
+
+  test("library packages materialize only through graft.Materialize") {
+    import scala.jdk.CollectionConverters._
+    val roots = Seq("api", "engine", "functions", "operators", "sql", "workflow", "transform")
+      .map(p => java.nio.file.Paths.get(s"src/main/scala/graft/$p"))
+    roots.foreach(r => assert(java.nio.file.Files.isDirectory(r), s"missing $r"))
+    val banned = Seq(".localCheckpoint(", "unpersistCheckpointed",
+      "\"graft.explain.deferCheckpoint\"", "/tmp/graft_checkpoints")
+    val hits = roots.flatMap(scalaSources).flatMap { p =>
+      java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.flatMap { case (line, i) =>
+        val t = line.trim
+        // comment lines and trailing `// ...` comments do not count
+        val code =
+          if (t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) ""
+          else line.replaceAll("\\s//\\s.*$", "")
+        banned.filter(code.contains).map(b => s"$p:${i + 1}: $b")
+      }
+    }
+    assert(hits.isEmpty, s"materialize through graft.Materialize:\n${hits.mkString("\n")}")
   }
 }

@@ -57,6 +57,22 @@ class WorkflowSpec extends SparkTestBase {
     assert(evals === 1) // second run read the content-addressed parquet
   }
 
+  test("deterministic checkpoint without _SUCCESS is recomputed, not served") {
+    val dir = Files.createTempDirectory("graft_ckpt3").toString
+    var evals = 0
+    val w = new Workflow(engine, checkpointDir = dir)
+    val node = w.create(Seq(Seq(1), Seq(2), Seq(3)), "x:int")
+      .transform("expensive")(d => { evals += 1; d.filter(col("x") > 1) })
+      .deterministicCheckpoint()
+      .yield_("out")
+    // a crashed write: parquet parts of other rows, no _SUCCESS marker
+    engine.save(df(Seq(Seq(42)), "x:int"), s"$dir/${node.uuid}", "parquet")
+    assert(new java.io.File(s"$dir/${node.uuid}/_SUCCESS").delete())
+    assertDfEq(w.run()("out"), Seq(Seq(2), Seq(3)))
+    assert(evals === 1)
+    assert(new java.io.File(s"$dir/${node.uuid}/_SUCCESS").exists())
+  }
+
   test("strong checkpoint breaks lineage but preserves rows") {
     val w = new Workflow(engine, checkpointDir =
       Files.createTempDirectory("graft_ckpt2").toString)
