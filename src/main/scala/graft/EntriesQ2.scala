@@ -871,16 +871,14 @@ private[graft] object EntriesQ2 {
            |""".stripMargin).yields("out")
     }),
 
-    // checkpoint keywords + YIELD FILE. The checkpoint namespace carries a
-    // cheap data fingerprint (file length): deterministic checkpoints are
-    // content-addressed by PLAN, so a regenerated-but-differently-sized
-    // input must not be served a stale round's parquet.
+    // checkpoint keywords + YIELD FILE. The deterministic checkpoint's key
+    // carries the input files' fingerprint, so a regenerated input is not
+    // served a stale round's parquet.
     "q44_sql_checkpoint" -> ((s, dir) => {
-      val fp = new java.io.File(s"$dir/orders.parquet").length()
       graft.sql.GraftSql.run(eng(s),
         s"""SELECT o_orderkey, o_totalprice FROM orders WHERE o_totalprice > 100000
            |WEAK CHECKPOINT LAZY
-           |DETERMINISTIC CHECKPOINT "q44_$fp"
+           |DETERMINISTIC CHECKPOINT "q44"
            |YIELD FILE AS out
            |""".stripMargin,
         Map("orders" -> t(s, dir, "orders"))).yields("out")
@@ -888,10 +886,7 @@ private[graft] object EntriesQ2 {
 
     // workflow DAG end-to-end: nodes + deterministic checkpoint, oracled
     "q53_workflow" -> ((s, dir) => {
-      val e = eng(s)
-      val fp = new java.io.File(s"$dir/orders.parquet").length()
-      val w = new graft.workflow.Workflow(e,
-        checkpointDir = s"/tmp/graft_checkpoints/q53_$fp")
+      val w = new graft.workflow.Workflow(eng(s), checkpointDir = "/tmp/graft_checkpoints/q53")
       w.load(s"$dir/orders.parquet")
         .filter(col("o_totalprice") > 150000)
         .aggregate(Seq("o_orderstatus"), Seq(

@@ -9,7 +9,7 @@ import scala.collection.mutable
  * The one way the library materializes an intermediate result: [[eager]]
  * in-session checkpoints for iterative and multi-scan operators, and
  * fugue's [[strong]] and [[deterministic]] parquet checkpoints for
- * Workflow and the SQL dialect.
+ * Workflow (and through it the SQL dialect).
  *
  * Release contract: a frame passed to [[release]], or materialized
  * through a [[Scope]] whose block has exited, is UNUSABLE. Local
@@ -18,7 +18,7 @@ import scala.collection.mutable
  */
 object Materialize {
 
-  /** Default root of Workflow's and the SQL dialect's parquet checkpoints. */
+  /** Default root of Workflow's parquet checkpoints. */
   val checkpointRoot = "/tmp/graft_checkpoints"
 
   /** Plan-inspection conf (`graft.Plans` sets it); see [[terminal]]. */
@@ -27,8 +27,18 @@ object Materialize {
   /** Materialize now, in this session's block store, and cut lineage.
    * Not `.persist()`: the columnar cache writes array columns
    * element-wise (about 20x slower) where a local checkpoint serializes
-   * rows. The tradeoff: a lost block is not recomputed from lineage. */
-  def eager(df: DataFrame): DataFrame = df.localCheckpoint(true)
+   * rows. The tradeoff: a lost block is not recomputed from lineage.
+   * The checkpoint RDD's creation site (shown in plans and the UI) is the
+   * caller's first frame outside this object, not this line. */
+  def eager(df: DataFrame): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    val prior = sc.getLocalProperty("callSite.short") // Spark's CallSite.SHORT_FORM
+    Thread.currentThread.getStackTrace.iterator
+      .dropWhile(!_.getClassName.startsWith("graft.Materialize"))
+      .find(!_.getClassName.startsWith("graft.Materialize"))
+      .foreach(f => sc.setCallSite(s"localCheckpoint at ${f.getFileName}:${f.getLineNumber}"))
+    try df.localCheckpoint(true) finally sc.setLocalProperty("callSite.short", prior)
+  }
 
   /** Free the blocks of an [[eager]] frame now instead of when the
    * ContextCleaner notices the frame is unreachable. The frame is
@@ -96,32 +106,45 @@ object Materialize {
     engine.load(path, "parquet")
   }
 
-  /** Content key for a [[deterministic]] checkpoint of `df` under
-   * namespace `ns`: SHA-256 over `ns`, the analyzed canonical plan and
+  /** Content key of the rows `df` reads, for a [[deterministic]]
+   * checkpoint: [[digest]] of the analyzed canonical plan and
    * [[inputFingerprint]] (the canonical plan names a file scan by its
    * format, not its paths). None when a leaf of the plan is not a file
    * scan (an RDD or in-memory rows): nothing identifies the rows it
    * reads, so no earlier result may be served for it. */
-  def contentKey(ns: String, df: DataFrame): Option[String] = {
+  def contentKey(df: DataFrame): Option[String] = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val plan = df.queryExecution.analyzed
     val fileBacked = plan.collectLeaves().forall {
       case lr: LogicalRelation => lr.relation.isInstanceOf[HadoopFsRelation]
       case _ => false
     }
-    Option.when(fileBacked) {
-      val md = java.security.MessageDigest.getInstance("SHA-256")
-      Seq(ns, plan.canonicalized.toString, inputFingerprint(df).toString)
-        .foreach(p => md.update((p.length.toString + ":" + p).getBytes("UTF-8")))
-      md.digest().take(16).map(b => f"$b%02x").mkString
-    }
+    Option.when(fileBacked)(digest(Seq(plan.canonicalized.toString, inputFingerprint(df).toString)))
+  }
+
+  /** SHA-256 over length-prefixed parts (no separator collisions), as 32
+   * hex chars: Workflow node UUIDs and checkpoint keys. */
+  private[graft] def digest(parts: Seq[String]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    parts.foreach(p => md.update((p.length.toString + ":" + p).getBytes("UTF-8")))
+    md.digest().take(16).map(b => f"$b%02x").mkString
   }
 
   /** Driver-cheap fingerprint of a frame's file inputs: count + a bounded
    * sample of (path, length, modificationTime). Non-file plans (in-memory
-   * test frames) hash to 0 and rely on the canonicalized plan alone. */
+   * test frames) hash to 0 and rely on the canonicalized plan alone. The
+   * files come from the analyzed plan, not `Dataset.inputFiles`: that
+   * reads the optimized plan, where a cached frame is an in-memory scan
+   * with no files. */
   private[graft] def inputFingerprint(df: DataFrame): Long = {
-    val files = df.inputFiles
+    import org.apache.spark.sql.execution.FileRelation
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    val files = df.queryExecution.analyzed.collectWithSubqueries {
+      case lr: LogicalRelation => lr.relation match {
+        case f: FileRelation => f.inputFiles.toSeq
+        case _ => Nil
+      }
+    }.flatten.distinct.toArray
     if (files.isEmpty) return 0L
     val sorted = files.sorted
     // even spread INCLUDING the last file — integer-stride sampling never

@@ -406,7 +406,10 @@ class SparkGraftEngine(val spark: SparkSession) extends GraftEngine {
       } finally dfs.keys.foreach { name =>
         prior.get(name) match {
           case Some(d) => d.createOrReplaceTempView(name) // restore shadowed view
-          case None => spark.catalog.dropTempView(name)
+          // the session catalog's drop, not spark.catalog's: that one also
+          // uncaches the frame the view names, so a persisted frame read
+          // by a SELECT would lose its cache
+          case None => spark.sessionState.catalog.dropTempView(name)
         }
       }
     }

@@ -4,6 +4,7 @@ import graft.PartitionSpec
 import graft.engine.GraftEngine
 import graft.schema.SchemaExpr
 import graft.transform.{PartitionCursor, Transform}
+import graft.workflow.Workflow
 import org.apache.spark.sql.{DataFrame, Row}
 import scala.collection.mutable
 
@@ -14,6 +15,21 @@ import scala.collection.mutable
  * through verbatim to `spark.sql` (Catalyst parses/optimizes them — no
  * second SQL engine), while dataflow keywords compile to engine/transform
  * calls.
+ *
+ * As in the reference, a script compiles into one [[graft.workflow.Workflow]]
+ * DAG, which then runs: persist, checkpoints, saves, yields, memoization and
+ * auto-persist of a frame read twice are Workflow's. Each statement's nodes
+ * carry its ordinal and text in their UUIDs, so identical statements are
+ * never merged; a SELECT depends only on the frames it names. Side effects
+ * (SAVE, OUTPUT, PRINT, OUTTRANSFORM, CALLBACK drains, YIELD FILE/TABLE)
+ * take effect in script order, an argument error raised while the DAG runs
+ * still names its statement, and a SUB whose module returns None passes its
+ * first input through. A reused DETERMINISTIC CHECKPOINT skips the
+ * statements it reads from, SUB and PROCESS calls included, as Workflow
+ * skips a reused checkpoint's inputs; a CREATE USING it reads from still
+ * runs, because the frame it creates is part of the key. Checkpoints
+ * follow Workflow's paths: no `sql_*` directory is written, so an old
+ * `sql_det_*` checkpoint is not reused (one recompute).
  *
  * Supported statements (each optionally prefixed with `name =`):
  * {{{
@@ -1044,14 +1060,14 @@ object GraftSql {
       inputs: Map[String, DataFrame] = Map.empty,
       transformers: Map[String, TransformerDef] = Map.empty,
       vars: Map[String, Any] = Map.empty): Result =
-    new Runner(engine, inputs, withBuiltins(Extensions(transformers = transformers)))
+    new Compiler(engine, inputs, withBuiltins(Extensions(transformers = transformers)))
       .run(Template.render(sql, vars))
 
   def runWith(engine: GraftEngine, sql: String,
       inputs: Map[String, DataFrame] = Map.empty,
       extensions: Extensions = Extensions(),
       vars: Map[String, Any] = Map.empty): Result =
-    new Runner(engine, inputs, withBuiltins(extensions)).run(Template.render(sql, vars))
+    new Compiler(engine, inputs, withBuiltins(extensions)).run(Template.render(sql, vars))
 
   /** Render the script's template constructs (the reference feeds FugueSQL
    * through jinja2, fugue/sql/_utils.py) — `{{ expr }}`, `{% if %}`,
@@ -1149,24 +1165,32 @@ object GraftSql {
     sb.toString
   }
 
-  private final class Runner(
+  /** Compiles a script into one [[Workflow]] and runs it. Each statement
+   * builds its nodes inside `w.statement`, keyed by its ordinal and
+   * text: identical statements are not memoized into one, and
+   * an argument error raised while a node runs names its statement. */
+  private final class Compiler(
       engine: GraftEngine,
       inputs: Map[String, DataFrame],
       extensions: Extensions) {
     private def transformers = extensions.transformers
 
-    private val dfs = mutable.LinkedHashMap.empty[String, DataFrame] ++= inputs
-    private val yields = mutable.LinkedHashMap.empty[String, DataFrame]
-    private var last: Option[DataFrame] = None
+    private val w = new Workflow(engine)
+    private type Node = w.Node
+    private val frames = mutable.LinkedHashMap.empty[String, Node]
+    inputs.foreach { case (name, d) => frames(name) = w.df(d, name) }
+    private var last: Option[Node] = None
+    private var ordinal = 0
     // (channel, handler, messages-already-delivered) per CALLBACK clause;
-    // drained after eager statements and at end of run
+    // drained after OUTTRANSFORM and at end of run
     private val pendingDrains = mutable.ArrayBuffer
       .empty[(graft.transform.CallbackChannel, (String, String) => Unit, Array[Int])]
 
     def run(script: String): Result = {
-      splitStatements(script).foreach(exec)
+      splitStatements(script).foreach(compile)
+      val yields = w.run()
       drainCallbacks()
-      Result(last, yields.toMap)
+      Result(last.map(_.result), yields)
     }
 
     /** Deliver callback messages that arrived since the last drain. */
@@ -1177,38 +1201,43 @@ object GraftSql {
         seen(0) = msgs.length
     }
 
-    private def exec(stmtRaw: String): Unit = {
-      var stmt = stmtRaw
-      var target: Option[String] = None
-      stmt match {
-        case Assign(name, rest) => target = Some(name); stmt = rest
-        case _ =>
+    private def compile(stmtRaw: String): Unit = {
+      val (target, stmt) = stmtRaw match {
+        case Assign(name, rest) => (Some(name), rest.trim)
+        case _ => (None, stmtRaw.trim)
       }
+      ordinal += 1
+      // surface WHICH statement failed — a multi-statement script error
+      // without location is hard to act on. nextOption: a dangling
+      // assignment (`q =` with nothing after) reaches here with an EMPTY
+      // statement — found by the fuzz spec
+      val head = stmt.linesIterator.nextOption().getOrElse("<empty>")
+      val label = s"[in statement: ${if (head.length > 80) head.take(80) + "…" else head}]"
       val out =
-        try execBody(stmt.trim)
+        try w.statement(Seq(ordinal.toString, stmt), label)(body(stmt, label))
         catch {
           case e: IllegalArgumentException =>
-            // surface WHICH statement failed — a multi-statement script
-            // error without location is hard to act on
-            // nextOption: a dangling assignment (`q =` with nothing after)
-            // reaches here with an EMPTY statement — found by the fuzz spec;
-            // .next() would turn the clean error into NoSuchElementException
-            val head = stmt.trim.linesIterator.nextOption().getOrElse("<empty>")
-            val loc = if (head.length > 80) head.take(80) + "…" else head
-            throw new IllegalArgumentException(s"${e.getMessage} [in statement: $loc]", e)
+            throw new IllegalArgumentException(s"${e.getMessage} $label", e)
         }
-      out.foreach { d =>
-        last = Some(d)
-        target.foreach(dfs(_) = d)
+      out.foreach { n =>
+        last = Some(n)
+        target.foreach(frames(_) = n)
       }
     }
 
-    private def prev: DataFrame =
+    private def prev: Node =
       last.getOrElse(throw new IllegalArgumentException("no previous dataframe"))
 
-    private def ref(name: Option[String]): DataFrame =
-      name.map(n => dfs.getOrElse(n,
+    private def ref(name: Option[String]): Node =
+      name.map(n => frames.getOrElse(n,
         throw new IllegalArgumentException(s"unknown dataframe '$n'"))).getOrElse(prev)
+
+    /** The statement's node over `deps`: op is its keyword. */
+    private def node(stmt: String, deps: Seq[Node])(f: Seq[DataFrame] => DataFrame): Node =
+      w.process(deps, stmt.toUpperCase.takeWhile(!_.isWhitespace))(f)
+
+    private def unary(stmt: String, d: Node)(f: DataFrame => DataFrame): Node =
+      node(stmt, Seq(d))(dfs => f(dfs.head))
 
     /** Statements whose df-list positions accept inline parenthesized
      * sub-statements (`OUTPUT a, (CREATE [[0]] SCHEMA a:int) USING ...` —
@@ -1218,9 +1247,9 @@ object GraftSql {
       "OUTTRANSFORM", "COTRANSFORM", "ZIP", "PRINT")
     private val InlineInner = "^(?i)(CREATE|LOAD|SELECT|TAKE|SAMPLE)\\b".r
 
-    /** Execute `( <sub-statement> )` groups and splice their generated
+    /** Compile `( <sub-statement> )` groups and splice their generated
      * names back into the statement text. */
-    private def resolveInline(stmt: String): String = {
+    private def resolveInline(stmt: String, label: String): String = {
       val kw = stmt.toUpperCase.takeWhile(!_.isWhitespace)
       if (!InlineHosts.contains(kw)) return stmt
       val masked = maskQuotes(stmt)
@@ -1242,8 +1271,9 @@ object GraftSql {
                 stmt.trim.linesIterator.nextOption().getOrElse("<empty>"))
           val inner = stmt.substring(i + 1, j - 1).trim
           if (InlineInner.findFirstIn(inner).isDefined) {
-            val name = s"__inline_${dfs.size}"
-            dfs(name) = execBody(inner).getOrElse(
+            val name = s"__inline_${frames.size}"
+            frames(name) = w.statement(Seq(s"$ordinal.$name", inner), label)(
+              body(inner, label)).getOrElse(
               throw new IllegalArgumentException(s"inline statement yields nothing: $inner"))
             sb ++= name
           } else sb ++= stmt.substring(i, j) // e.g. USING ext(params)
@@ -1253,37 +1283,36 @@ object GraftSql {
       sb.toString
     }
 
-    private def execBody(stmtRaw: String): Option[DataFrame] = {
-      val stmt = resolveInline(stmtRaw)
-      val upper = stmt.toUpperCase
-      val kw = upper.takeWhile(!_.isWhitespace)
+    private def body(stmtRaw: String, label: String): Option[Node] = {
+      val stmt = resolveInline(stmtRaw, label)
+      val kw = stmt.toUpperCase.takeWhile(!_.isWhitespace)
       kw match {
-        case "LOAD" => Some(execLoad(stmt))
-        case "SAVE" => execSave(stmt) // Some only for SAVE AND USE
-        case "SELECT" | "WITH" => Some(execSelect(stmt))
-        case "CREATE" => Some(execCreate(stmt))
-        case "ZIP" => Some(execZip(stmt))
-        case "TAKE" => Some(execTake(stmt))
-        case "SAMPLE" => Some(execSample(stmt))
-        case "DROPNA" => Some(execDropna(stmt))
-        case "FILLNA" => Some(execFillna(stmt))
-        case "RENAME" => Some(execRename(stmt))
-        case "ALTER" => Some(execAlter(stmt))
-        case "DROP" => Some(execDropCols(stmt))
-        case "DISTINCT" => Some(engine.distinct(ref(wordAfter(stmt, 1))))
-        case "TRANSFORM" => Some(execTransform(stmt))
-        case "OUTTRANSFORM" => execOutTransform(stmt); None
-        case "COTRANSFORM" => Some(execCoTransform(stmt))
-        case "PROCESS" => Some(execProcess(stmt))
-        case "SUB" => execSub(stmt)
-        case "OUTPUT" => execOutput(stmt); None
-        case "PRINT" => execPrint(stmt); None
-        case "PERSIST" => Some(engine.persist(ref(wordAfter(stmt, 1))))
-        case "BROADCAST" => Some(engine.broadcast(ref(wordAfter(stmt, 1))))
+        case "LOAD" => Some(compileLoad(stmt))
+        case "SAVE" => compileSave(stmt) // Some only for SAVE AND USE
+        case "SELECT" | "WITH" => Some(compileSelect(stmt))
+        case "CREATE" => Some(compileCreate(stmt))
+        case "ZIP" => Some(compileZip(stmt))
+        case "TAKE" => Some(compileTake(stmt))
+        case "SAMPLE" => Some(compileSample(stmt))
+        case "DROPNA" => Some(compileDropna(stmt))
+        case "FILLNA" => Some(compileFillna(stmt))
+        case "RENAME" => Some(compileRename(stmt))
+        case "ALTER" => Some(compileAlter(stmt))
+        case "DROP" => Some(compileDropCols(stmt))
+        case "DISTINCT" => Some(unary(stmt, ref(wordAfter(stmt, 1)))(engine.distinct))
+        case "TRANSFORM" => Some(compileTransform(stmt))
+        case "OUTTRANSFORM" => compileOutTransform(stmt); None
+        case "COTRANSFORM" => Some(compileCoTransform(stmt))
+        case "PROCESS" => Some(compileProcess(stmt))
+        case "SUB" => Some(compileSub(stmt))
+        case "OUTPUT" => compileOutput(stmt); None
+        case "PRINT" => compilePrint(stmt); None
+        case "PERSIST" => Some(unary(stmt, ref(wordAfter(stmt, 1)))(identity).persist())
+        case "BROADCAST" => Some(unary(stmt, ref(wordAfter(stmt, 1)))(identity).broadcast())
         case "WEAK" | "STRONG" | "DETERMINISTIC" | "CHECKPOINT" =>
-          Some(execCheckpoint(stmt))
-        case "YIELD" => execYield(stmt); None
-        case "CONNECT" => execConnect(stmt)
+          Some(compileCheckpoint(stmt))
+        case "YIELD" => compileYield(stmt); None
+        case "CONNECT" => compileConnect(stmt, label)
         case other => throw new IllegalArgumentException(s"unknown statement '$other'")
       }
     }
@@ -1311,7 +1340,7 @@ object GraftSql {
         else {
           // an explicit name must RESOLVE — a typo silently falling back
           // to the previous frame would process the wrong data
-          require(dfs.contains(t), s"unknown dataframe '$t' in: ${stmt.trim}")
+          require(frames.contains(t), s"unknown dataframe '$t' in: ${stmt.trim}")
           Some(t)
         }
       }
@@ -1407,16 +1436,16 @@ object GraftSql {
       "(?s)\"[^\"]*\"[^\"(]*\\(([^)]*)\\)".r.findFirstMatchIn(stmt)
         .map(m => parseParams(m.group(1))).getOrElse(Map.empty)
 
-    private def execLoad(stmt: String): DataFrame = {
+    private def compileLoad(stmt: String): Node = {
       val fmt = "(?i)LOAD\\s+(PARQUET|CSV|JSON)?".r.findFirstMatchIn(stmt)
         .flatMap(m => Option(m.group(1))).map(_.toLowerCase).getOrElse("")
       val cols = kwArg(stmt, "COLUMNS").map(splitCols).getOrElse(Nil)
-      engine.load(quoted(stmt), fmt, cols, options = pathParams(stmt))
+      w.load(quoted(stmt), fmt, cols, options = pathParams(stmt))
     }
 
     /** SAVE / SAVE AND USE / SAVE PREPARTITION BY — returns the re-loaded
      * frame for AND USE (reference save_and_use, processors.py:300). */
-    private def execSave(stmt: String): Option[DataFrame] = {
+    private def compileSave(stmt: String): Option[Node] = {
       val masked = maskQuotes(stmt).toUpperCase
       val andUse = "\\bAND\\s+USE\\b".r.findFirstIn(masked).isDefined
       // OVERWRITE | APPEND | TO (TO = fail if exists, _visitors.py:237-241)
@@ -1434,11 +1463,11 @@ object GraftSql {
       val d = ref(wordAfter(stmt, dfIdx).orElse(wordAfter(stmt, 1)))
       val path = quoted(stmt)
       val params = pathParams(stmt)
-      engine.save(d, path, fmt, mode, partitionBy = partBy,
-        singleFile = single, options = params)
+      d.save(path, fmt, mode, partBy, single, params)
       // reload with the SAME options (header/delimiter/...), or the read
-      // side's defaults could disagree with what was just written
-      if (andUse) Some(engine.load(path, fmt, options = params)) else None
+      // side's defaults could disagree with what was just written; built
+      // after the save, so it runs after it
+      if (andUse) Some(w.load(path, fmt, options = params)) else None
     }
 
     /** `[[1,"a"],[2,"b"]]`-style literal rows (reference CREATE DATA,
@@ -1494,65 +1523,85 @@ object GraftSql {
 
     /** CREATE [DATA] [[..]] SCHEMA s — literal frame; CREATE USING creator
      * — driver-side creator extension (_visitors.py:499-518). */
-    private def execCreate(stmt: String): DataFrame = {
+    private def compileCreate(stmt: String): Node = {
       val usingM = "(?i)^CREATE\\s+USING\\s+".r.findFirstMatchIn(stmt)
       if (usingM.isDefined) {
         val (name, params, _) = usingClause(stmt)
         val c = extensions.creators.getOrElse(name,
           throw new IllegalArgumentException(s"unknown creator '$name'"))
-        c.fn(engine, params)
+        node(stmt, Nil)(_ => c.fn(engine, params))
       } else {
         val body = "(?i)^CREATE(?:\\s+DATA)?\\s+".r.replaceFirstIn(stmt, "")
         val schemaIdx = "(?i)\\bSCHEMA\\b".r.findFirstMatchIn(maskQuotes(body))
           .getOrElse(throw new IllegalArgumentException(s"CREATE requires SCHEMA: $stmt"))
         val rows = parseDataLiteral(body.substring(0, schemaIdx.start).trim)
-        val schemaExpr = body.substring(schemaIdx.end).trim
-        engine.toDF(rows, schemaExpr)
+        w.create(rows, body.substring(schemaIdx.end).trim)
       }
     }
 
     /** ZIP df1, df2 [how] BY keys [PRESORT ...] → zipped frame
      * (key cols + __zip_i struct arrays; _visitors.py:520-527). */
-    private def execZip(stmt: String): DataFrame = {
+    private def compileZip(stmt: String): Node = {
       val clipM = "(?i)\\b(INNER|LEFT|RIGHT|FULL|BY|PRESORT)\\b".r
         .findFirstMatchIn(maskQuotes(stmt))
       val clipAt = clipM.map(_.start).getOrElse(stmt.length)
-      val frames = dfRefList(stmt, clipAt)
-      require(frames.size >= 2, s"ZIP needs at least 2 dataframes, got ${frames.size}")
+      val sides = dfRefList(stmt, clipAt)
+      require(sides.size >= 2, s"ZIP needs at least 2 dataframes, got ${sides.size}")
       val how = "(?i)\\b(INNER|LEFT\\s+OUTER|RIGHT\\s+OUTER|FULL\\s+OUTER)\\b".r
         .findFirstIn(maskQuotes(stmt))
         .map(_.toLowerCase.replaceAll("\\s+", "_")).getOrElse("inner")
       val keys = kwArg(stmt, "BY").map(splitCols)
         .getOrElse(throw new IllegalArgumentException("ZIP requires BY keys"))
-      val presort = "(?i)PRESORT\\s+((?:(?:`(?:[^`]|``)*`|[A-Za-z0-9_]+)(?:\\s+(?:ASC|DESC))?\\s*,?\\s*)+)".r
-        .findFirstMatchIn(stmt)
-        .map(m => PartitionSpec.parsePresort(m.group(1))).getOrElse(Nil)
-      Transform.zipFrames(frames, keys, how, presort)
+      val presort = partitionSpec(stmt).presort
+      node(stmt, sides)(Transform.zipFrames(_, keys, how, presort))
     }
 
-    private def execSelect(stmt: String): DataFrame = {
-      // register all known dfs as temp views, add implicit FROM if absent.
-      // Both the FROM presence check and the clause-insertion point look
-      // only at TOP-LEVEL text (parens masked): a FROM inside a subquery
-      // must not suppress the implicit FROM, and an ORDER BY inside a
-      // window OVER(...) must not become the insertion point.
+    private def compileSelect(stmt: String): Node = {
+      // add an implicit FROM the previous frame if absent. Both the FROM
+      // presence check and the clause-insertion point look only at
+      // TOP-LEVEL text (parens masked): a FROM inside a subquery must not
+      // suppress the implicit FROM, and an ORDER BY inside a window
+      // OVER(...) must not become the insertion point.
       val top = maskParens(stmt)
-      val text =
-        if ("(?i)\\bFROM\\b".r.findFirstIn(top).isDefined) stmt
+      val (text, implicitFrom) =
+        if ("(?i)\\bFROM\\b".r.findFirstIn(top).isDefined) (stmt, Nil)
         else {
-          dfs("__graft_prev") = prev
           // insert FROM before any trailing clause (WHERE/GROUP/…), not at
           // the end — "SELECT k WHERE v>1" must become
           // "SELECT k FROM __graft_prev WHERE v>1"
           val m = "(?i)\\b(WHERE|GROUP\\s+BY|HAVING|ORDER\\s+BY|LIMIT)\\b".r
             .findFirstMatchIn(top)
-          m match {
+          val withFrom = m match {
             case Some(mm) =>
               stmt.substring(0, mm.start) + " FROM __graft_prev " + stmt.substring(mm.start)
             case None => s"$stmt FROM __graft_prev"
           }
+          (withFrom, Seq("__graft_prev" -> prev))
         }
-      engine.sqlSelect(text, dfs.toMap)
+      val views = implicitFrom ++ referenced(text)
+      node(stmt, views.map(_._2))(dfs => engine.sqlSelect(text, views.map(_._1).zip(dfs).toMap))
+    }
+
+    /** The frames a SELECT names, found by the session's SQL parser, the
+     * one `spark.sql` uses (FROM and JOIN items, subqueries, CTE bodies;
+     * case-insensitive like temp views): the statement depends on these
+     * only, so a frame is not auto-persisted for statements that never
+     * read it. An `IDENTIFIER(..)` relation, or text the parser rejects,
+     * depends on every frame; `spark.sql` reports the error when it runs. */
+    private def referenced(text: String): Seq[(String, Node)] = {
+      import org.apache.spark.sql.catalyst.analysis.{PlanWithUnresolvedIdentifier, UnresolvedRelation}
+      import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+      def names(p: LogicalPlan): Seq[String] = (p match {
+        case r: UnresolvedRelation if r.multipartIdentifier.size == 1 => r.multipartIdentifier
+        case _: PlanWithUnresolvedIdentifier => frames.keys.toSeq
+        case _ => Nil
+      }) ++ (p.children ++ p.innerChildren.collect { case c: LogicalPlan => c } ++ p.subqueries)
+        .flatMap(names)
+      try {
+        val named = names(engine.spark.sessionState.sqlParser.parsePlan(text))
+          .map(_.toLowerCase).toSet
+        frames.toSeq.filter { case (n, _) => named(n.toLowerCase) }
+      } catch { case scala.util.control.NonFatal(_) => frames.toSeq }
     }
 
     /** Blank out quoted text AND everything inside parens (same length as
@@ -1608,7 +1657,7 @@ object GraftSql {
      * with an explicit message rather than silently running on the wrong
      * engine. A standalone CONNECT pins the engine for what follows —
      * also a no-op here. */
-    private def execConnect(stmt: String): Option[DataFrame] = {
+    private def compileConnect(stmt: String, label: String): Option[Node] = {
       val m = "(?is)^CONNECT\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s*(\\([^)]*\\))?\\s*(.*)$".r
         .findFirstMatchIn(stmt).getOrElse(throw new IllegalArgumentException(
           s"CONNECT requires an engine name: $stmt"))
@@ -1620,10 +1669,10 @@ object GraftSql {
           s"CONNECT engine '$engineName' is not available: single-engine " +
             s"(Spark) build — every statement runs on Spark; accepted " +
             s"aliases: ${sparkAliases.toSeq.sorted.mkString(", ")}")
-      if (rest.isEmpty) None else execBody(rest)
+      if (rest.isEmpty) None else body(rest, label)
     }
 
-    private def execTake(stmt: String): DataFrame = {
+    private def compileTake(stmt: String): Node = {
       // getOrElse, not .get: a bare `TAKE` must produce a statement error,
       // not NoSuchElementException (found by the fuzz spec)
       val n = "(?i)TAKE\\s+(\\d+)".r.findFirstMatchIn(stmt).getOrElse(
@@ -1633,59 +1682,60 @@ object GraftSql {
       // remove the NULLS clause so the greedy PRESORT column list cannot
       // swallow it as extra sort columns
       val cleaned = "(?i)NULLS?\\s+(FIRST|LAST)".r.replaceAllIn(stmt, "")
-      engine.take(ref(kwArg(cleaned, "FROM")), n, partitionSpec(cleaned), naPos)
+      val spec = partitionSpec(cleaned)
+      unary(stmt, ref(kwArg(cleaned, "FROM")))(engine.take(_, n, spec, naPos))
     }
 
-    private def execSample(stmt: String): DataFrame = {
+    private def compileSample(stmt: String): Node = {
       val replace = stmt.toUpperCase.contains("REPLACE")
       val seed = "(?i)SEED\\s+(\\d+)".r.findFirstMatchIn(stmt).map(_.group(1).toLong)
       val pct = "(?i)([\\d.]+)\\s*PERCENT".r.findFirstMatchIn(stmt).map(_.group(1).toDouble)
       val rows = "(?i)(\\d+)\\s*ROWS".r.findFirstMatchIn(stmt).map(_.group(1).toLong)
       // grammar allows the positional form `SAMPLE df ...` as well as FROM
-      engine.sample(ref(kwArg(stmt, "FROM").orElse(wordAfter(stmt, 1))), n = rows,
-        frac = pct.map(_ / 100.0), replace = replace, seed = seed)
+      unary(stmt, ref(kwArg(stmt, "FROM").orElse(wordAfter(stmt, 1))))(
+        engine.sample(_, n = rows, frac = pct.map(_ / 100.0), replace = replace, seed = seed))
     }
 
-    private def execDropna(stmt: String): DataFrame = {
+    private def compileDropna(stmt: String): Node = {
       val how = if ("(?i)^DROPNA\\s+ALL\\b".r.findFirstIn(stmt.trim).isDefined) "all" else "any"
       val subset = kwArg(stmt, "ON").map(splitCols).getOrElse(Nil)
-      engine.dropna(ref(kwArg(stmt, "FROM")), how, subset = subset)
+      unary(stmt, ref(kwArg(stmt, "FROM")))(engine.dropna(_, how, subset = subset))
     }
 
-    private def execFillna(stmt: String): DataFrame = {
+    private def compileFillna(stmt: String): Node = {
       // name pairs, not parseParams: keys may be backtick-quoted
       val params = kwArg(stmt, "PARAMS")
         .map(s => parseNamePairs(s).toMap).getOrElse(Map.empty)
-      val d = ref(kwArg(stmt, "FROM"))
-      val typed: Map[String, Any] = params.map { case (k, v) =>
-        val f = d.schema(k).dataType
-        k -> (f match {
-          case org.apache.spark.sql.types.DoubleType | org.apache.spark.sql.types.FloatType => v.toDouble
-          case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType => v.toLong
-          case _ => v
-        })
+      unary(stmt, ref(kwArg(stmt, "FROM"))) { d =>
+        val typed: Map[String, Any] = params.map { case (k, v) =>
+          k -> (d.schema(k).dataType match {
+            case org.apache.spark.sql.types.DoubleType | org.apache.spark.sql.types.FloatType => v.toDouble
+            case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType => v.toLong
+            case _ => v
+          })
+        }
+        engine.fillna(d, typed)
       }
-      engine.fillna(d, typed)
     }
 
-    private def execRename(stmt: String): DataFrame = {
+    private def compileRename(stmt: String): Node = {
       // name pairs, not parseParams: either side may be backtick-quoted
       val pairs = kwArg(stmt, "COLUMNS")
         .map(s => parseNamePairs(s).map { case (k, v) =>
           k -> unquoteName(v)
         }.toMap).getOrElse(Map.empty)
-      engine.rename(ref(kwArg(stmt, "FROM")), pairs)
+      unary(stmt, ref(kwArg(stmt, "FROM")))(engine.rename(_, pairs))
     }
 
-    private def execAlter(stmt: String): DataFrame = {
+    private def compileAlter(stmt: String): Node = {
       val casts = kwArg(stmt, "COLUMNS").map(_.trim).getOrElse("")
-      engine.alterColumns(ref(kwArg(stmt, "FROM")), casts)
+      unary(stmt, ref(kwArg(stmt, "FROM")))(engine.alterColumns(_, casts))
     }
 
-    private def execDropCols(stmt: String): DataFrame = {
+    private def compileDropCols(stmt: String): Node = {
       val cols = kwArg(stmt, "COLUMNS").map(splitCols).getOrElse(Nil)
       val ifExists = stmt.toUpperCase.contains("IF EXISTS")
-      engine.dropColumns(ref(kwArg(stmt, "FROM")), cols, ifExists)
+      unary(stmt, ref(kwArg(stmt, "FROM")))(engine.dropColumns(_, cols, ifExists))
     }
 
     /** SCHEMA hint anywhere after the USING clause, clipped at a following
@@ -1700,12 +1750,15 @@ object GraftSql {
       "(?i)\\bCALLBACK\\s+([A-Za-z_][A-Za-z0-9_.]*)".r
         .findFirstMatchIn(maskQuotes(stmt)).map(_.group(1))
 
-    /** Wire a transformer (with optional CALLBACK) into a mapPartitions
-     * plan. Shared by TRANSFORM and OUTTRANSFORM. */
-    private def buildTransform(stmt: String): DataFrame = {
-      val (name, params, m) = usingClause(stmt)
-      val d = ref(kwArg(stmt.substring(0, m.start), "FROM")
+    /** The input of a TRANSFORM / OUTTRANSFORM statement. */
+    private def transformInput(stmt: String): Node =
+      ref(kwArg(stmt.substring(0, usingClause(stmt)._3.start), "FROM")
         .orElse(wordAfter(stmt, 1)))
+
+    /** Wire a transformer (with optional CALLBACK) into a mapPartitions
+     * plan over `d`. Shared by TRANSFORM and OUTTRANSFORM. */
+    private def buildTransform(stmt: String, d: DataFrame): DataFrame = {
+      val (name, params, m) = usingClause(stmt)
       // clip at USING so the greedy PRESORT column list cannot swallow the
       // USING/SCHEMA clauses
       val spec = partitionSpec(stmt.substring(0, m.start))
@@ -1757,31 +1810,28 @@ object GraftSql {
       }
     }
 
-    private def execTransform(stmt: String): DataFrame = buildTransform(stmt)
+    private def compileTransform(stmt: String): Node =
+      unary(stmt, transformInput(stmt))(buildTransform(stmt, _))
 
     /** OUTTRANSFORM: run the transformer for its side effects (callbacks),
      * discard rows, deliver callback messages (_visitors.py:453-477). */
-    private def execOutTransform(stmt: String): Unit = {
-      val out = buildTransform(stmt)
-      out.foreach(_ => ()) // force the action; output is discarded
-      drainCallbacks()
-    }
+    private def compileOutTransform(stmt: String): Unit =
+      w.output(Seq(transformInput(stmt)), "outtransform") { dfs =>
+        buildTransform(stmt, dfs.head).foreach(_ => ()) // force the action; output is discarded
+        drainCallbacks()
+      }
 
     /** PRINT [n ROWS] [FROM] [df, df2] [ROWCOUNT] [TITLE "t"]
      * (_visitors.py:546-559). */
-    private def execPrint(stmt: String): Unit = {
+    private def compilePrint(stmt: String): Unit = {
       val masked = maskQuotes(stmt)
       val n = "(?i)PRINT\\s+(\\d+)\\s+ROWS?".r.findFirstMatchIn(masked)
         .map(_.group(1).toInt).getOrElse(10)
       val withCount = "(?i)\\bROWCOUNT\\b".r.findFirstIn(masked).isDefined
       val title = "(?i)TITLE\\s+\"([^\"]*)\"".r.findFirstMatchIn(stmt).map(_.group(1))
-      val names = masked.split("[\\s,]+").filter(dfs.contains).distinct.toSeq
-      val targets = if (names.isEmpty) Seq(prev) else names.map(dfs(_))
-      title.foreach(t => println(t))
-      targets.foreach { d =>
-        d.show(n, truncate = false)
-        if (withCount) println(s"Total count: ${d.count()}")
-      }
+      val names = masked.split("[\\s,]+").filter(frames.contains).distinct.toSeq
+      val targets = if (names.isEmpty) Seq(prev) else names.map(frames(_))
+      w.show(targets, n, withCount, title.getOrElse(""))
     }
 
     /** USING-clause parse shared by the extension statements. */
@@ -1794,7 +1844,7 @@ object GraftSql {
 
     /** Comma-separated df references between the statement keyword and the
      * given clip position (normally the USING clause). */
-    private def dfRefList(stmt: String, clipAt: Int): Seq[DataFrame] = {
+    private def dfRefList(stmt: String, clipAt: Int): Seq[Node] = {
       val head = stmt.substring(0, clipAt).split("\\s+", 2).lift(1).getOrElse("")
       val names = head.split(",").iterator.map(_.trim.split("\\s+").headOption.getOrElse(""))
         .takeWhile(t => t.nonEmpty &&
@@ -1805,12 +1855,12 @@ object GraftSql {
       else names.map { n =>
         // every explicitly referenced name must resolve — a typo must
         // error, not silently process the previous frame
-        require(dfs.contains(n), s"unknown dataframe '$n' in: ${stmt.trim}")
-        dfs(n)
+        require(frames.contains(n), s"unknown dataframe '$n' in: ${stmt.trim}")
+        frames(n)
       }
     }
 
-    private def execCoTransform(stmt: String): DataFrame = {
+    private def compileCoTransform(stmt: String): Node = {
       val (name, params, m) = usingClause(stmt)
       val t = extensions.cotransformers.getOrElse(name,
         throw new IllegalArgumentException(s"unknown cotransformer '$name'"))
@@ -1821,39 +1871,43 @@ object GraftSql {
         .getOrElse(throw new IllegalArgumentException("COTRANSFORM requires BY keys"))
       val ctSpec = PartitionSpec(by = keys,
         presort = partitionSpec(stmt.substring(0, m.start)).presort)
-      graft.transform.ExtensionValidation.validate(t.validation, ctSpec, sides(0).schema)
-      graft.transform.ExtensionValidation.validate(
-        t.validation.filter(_._1.startsWith("input_")), ctSpec, sides(1).schema)
       val how = "(?i)\\b(INNER|LEFT_OUTER|RIGHT_OUTER|FULL_OUTER|LEFT OUTER|RIGHT OUTER|FULL OUTER)\\b".r
         .findFirstIn(maskQuotes(stmt.substring(0, m.start)))
         .map(_.toLowerCase.replace(' ', '_')).getOrElse("inner")
-      val out = schemaHint(stmt, m.end).map(SchemaExpr.parse)
-        .getOrElse(t.outputSchema(sides(0).schema, sides(1).schema, params))
-      // the statement's PRESORT must actually order the cogrouped
-      // iterators, not merely satisfy presort_has/is validation
-      Transform.coMap(sides(0), sides(1), keys, how, out, ctSpec.presort)(
-        (k, l, r) => t.fn(k, l, r, params))
+      node(stmt, sides) { case Seq(l, r) =>
+        graft.transform.ExtensionValidation.validate(t.validation, ctSpec, l.schema)
+        graft.transform.ExtensionValidation.validate(
+          t.validation.filter(_._1.startsWith("input_")), ctSpec, r.schema)
+        val out = schemaHint(stmt, m.end).map(SchemaExpr.parse)
+          .getOrElse(t.outputSchema(l.schema, r.schema, params))
+        // the statement's PRESORT must actually order the cogrouped
+        // iterators, not merely satisfy presort_has/is validation
+        Transform.coMap(l, r, keys, how, out, ctSpec.presort)(
+          (k, ls, rs) => t.fn(k, ls, rs, params))
+      }
     }
 
-    private def execProcess(stmt: String): DataFrame = {
+    private def compileProcess(stmt: String): Node = {
       val (name, params, m) = usingClause(stmt)
       val p = extensions.processors.getOrElse(name,
         throw new IllegalArgumentException(s"unknown processor '$name'"))
-      p.fn(engine, dfRefList(stmt, m.start), params)
+      node(stmt, dfRefList(stmt, m.start))(p.fn(engine, _, params))
     }
 
-    private def execSub(stmt: String): Option[DataFrame] = {
+    /** A module that returns None passes its first input through, as an
+     * output node does. */
+    private def compileSub(stmt: String): Node = {
       val (name, params, m) = usingClause(stmt)
       val md = extensions.modules.getOrElse(name,
         throw new IllegalArgumentException(s"unknown module '$name'"))
-      md.fn(engine, dfRefList(stmt, m.start), params)
+      node(stmt, dfRefList(stmt, m.start))(dfs => md.fn(engine, dfs, params).getOrElse(dfs.head))
     }
 
-    private def execOutput(stmt: String): Unit = {
+    private def compileOutput(stmt: String): Unit = {
       val (name, params, m) = usingClause(stmt)
       val o = extensions.outputters.getOrElse(name,
         throw new IllegalArgumentException(s"unknown outputter '$name'"))
-      o.fn(dfRefList(stmt, m.start), params)
+      w.output(dfRefList(stmt, m.start), name)(o.fn(_, params))
     }
 
     /** The remaining token that names a known dataframe, after statement
@@ -1862,46 +1916,34 @@ object GraftSql {
     private def trailingDfRef(stmt: String, keywords: Set[String]): Option[String] =
       maskQuotes(stmt).split("[\\s,]+")
         .filterNot(t => keywords.contains(t.toUpperCase))
-        .find(dfs.contains)
+        .find(frames.contains)
 
     /** WEAK CHECKPOINT [LAZY] → persist; [STRONG] CHECKPOINT → parquet
-     * round-trip (lineage break); DETERMINISTIC CHECKPOINT ["ns"] →
-     * content-addressed parquet keyed by the analyzed plan and its input
-     * files ([[graft.Materialize.contentKey]]), reused across runs
-     * (reference checkpoint keywords, _visitors.py:249-282,
-     * _checkpoint.py:38-108). */
-    private def execCheckpoint(stmt: String): DataFrame = {
+     * round-trip (lineage break); DETERMINISTIC CHECKPOINT ["ns"] → parquet
+     * reused across runs, keyed by the Workflow rule (the namespace is part
+     * of the statement text, so of the key) (reference checkpoint keywords,
+     * _visitors.py:249-282, _checkpoint.py:38-108). */
+    private def compileCheckpoint(stmt: String): Node = {
       val masked = maskQuotes(stmt).toUpperCase
       val kws = Set("WEAK", "STRONG", "DETERMINISTIC", "CHECKPOINT", "LAZY",
         "SINGLE", "PREPARTITION", "BY")
-      val d = ref(trailingDfRef(stmt, kws))
-      val root = graft.Materialize.checkpointRoot
-      def tmp = s"$root/sql_${java.util.UUID.randomUUID().toString.take(8)}"
-      if (masked.startsWith("WEAK")) {
-        val lzy = "\\bLAZY\\b".r.findFirstIn(masked).isDefined
-        engine.persist(d, lazyPersist = lzy)
-      } else if (masked.startsWith("DETERMINISTIC")) {
-        val ns = "\"([^\"]*)\"".r.findFirstMatchIn(stmt).map(_.group(1)).getOrElse("")
-        // a plan over an RDD or in-memory rows has no content key: it is
-        // recomputed like a strong checkpoint, never served from disk
-        graft.Materialize.contentKey(ns, d) match {
-          case Some(key) => graft.Materialize.deterministic(engine, d, s"$root/sql_det_$key")
-          case None => graft.Materialize.strong(engine, d, tmp)
-        }
-      } else { // STRONG or bare CHECKPOINT [SINGLE] [PREPARTITION BY ..]
+      val d = unary(stmt, ref(trailingDfRef(stmt, kws)))(identity)
+      if (masked.startsWith("WEAK")) d.persist(eager = "\\bLAZY\\b".r.findFirstIn(masked).isEmpty)
+      else if (masked.startsWith("DETERMINISTIC")) d.deterministicCheckpoint()
+      else { // STRONG or bare CHECKPOINT [SINGLE] [PREPARTITION BY ..]
         val single = "\\bSINGLE\\b".r.findFirstIn(masked).isDefined
         val partBy = kwArg(stmt, "PREPARTITION\\s+BY")
           .map(_.split(",").map(_.trim).toSeq).getOrElse(Nil)
-        graft.Materialize.strong(engine, d, tmp, partBy, single)
+        d.checkpoint(partBy, single)
       }
     }
 
     /** YIELD [LOCAL] [DATAFRAME|FILE|TABLE] [df] AS name
      * (_visitors.py:284-299). FILE materializes to parquet and yields the
      * re-loaded handle; TABLE saves to the session catalog; LOCAL
-     * materializes on the driver's cluster (localCheckpoint) so the yielded
-     * frame no longer depends on upstream lineage. */
-    private def execYield(stmt: String): Unit = {
+     * materializes in this session so the yielded frame no longer depends
+     * on upstream lineage. */
+    private def compileYield(stmt: String): Unit = {
       val name = "(?i)AS\\s+([A-Za-z_][A-Za-z0-9_]*)".r.findFirstMatchIn(stmt)
         .map(_.group(1))
         .getOrElse(throw new IllegalArgumentException(s"YIELD requires AS name: $stmt"))
@@ -1911,26 +1953,10 @@ object GraftSql {
       val kws = Set("YIELD", "LOCAL", "DATAFRAME", "FILE", "TABLE", "AS")
       val d = ref(trailingDfRef(stmt.substring(0, "(?i)\\bAS\\b".r
         .findFirstMatchIn(masked).map(_.start).getOrElse(stmt.length)), kws))
-      if ("\\bFILE\\b".r.findFirstIn(masked).isDefined) {
-        // one subdir per run under a name-keyed base: a shared flat path
-        // would let a later run overwrite files under an earlier run's
-        // live lazy handle (silent wrong data); unbounded unique paths
-        // would fill the disk. Older subdirs are deleted — a stale handle
-        // fails LOUDLY (missing files) instead of reading the wrong run.
-        val base = new org.apache.hadoop.fs.Path(
-          s"${graft.Materialize.checkpointRoot}/yield_$name")
-        val fs = base.getFileSystem(engine.spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(base)) fs.listStatus(base).foreach(st => fs.delete(st.getPath, true))
-        yields(name) = graft.Materialize.strong(engine, d,
-          s"$base/${java.util.UUID.randomUUID().toString.take(8)}")
-      } else if ("\\bTABLE\\b".r.findFirstIn(masked).isDefined) {
-        engine.saveTable(d, name)
-        yields(name) = engine.loadTable(name)
-      } else if ("\\bLOCAL\\b".r.findFirstIn(masked).isDefined) {
-        yields(name) = graft.Materialize.eager(d)
-      } else {
-        yields(name) = d
-      }
+      def has(kw: String) = s"\\b$kw\\b".r.findFirstIn(masked).isDefined
+      if (has("FILE")) d.yieldFileAs(name)
+      else if (has("TABLE")) d.yieldTableAs(name)
+      else d.yield_(name, asLocal = has("LOCAL"))
     }
   }
 }

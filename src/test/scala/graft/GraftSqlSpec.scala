@@ -498,6 +498,109 @@ class GraftSqlSpec extends SparkTestBase {
     assert(new java.io.File(ckpt, "_SUCCESS").exists())
   }
 
+  test("DETERMINISTIC CHECKPOINT after LOAD serves the rows the file holds now") {
+    // also when another statement reads the LOAD or input frame, which
+    // auto-persists it: its key must still see the files
+    val src = Files.createTempDirectory("graftsql_det4").toString + "/in.parquet"
+    val tail =
+      """SELECT k, v FROM x WHERE v > 0
+        |DETERMINISTIC CHECKPOINT
+        |YIELD AS out
+        |""".stripMargin
+    val readAgain = "SELECT k FROM x\nYIELD AS keys\n"
+    val load = s"x = LOAD PARQUET \"$src\"\n"
+    val runs = Seq(
+      () => GraftSql.run(engine, load + tail),
+      () => GraftSql.run(engine, load + tail + readAgain),
+      () => GraftSql.run(engine, tail + readAgain, Map("x" -> spark.read.parquet(src))))
+    for (run <- runs) {
+      engine.save(d1, src, "parquet")
+      assertDfEq(run().yields("out"), Seq(Seq("a", 3), Seq("a", 1), Seq("b", 9), Seq("b", 2)))
+      engine.save(df(Seq(Seq("z", 5)), "k:str,v:int"), src, "parquet")
+      assertDfEq(run().yields("out"), Seq(Seq("z", 5)))
+    }
+  }
+
+  test("a reused DETERMINISTIC CHECKPOINT skips the SUB it reads from") {
+    import graft.sql.GraftSql.{Extensions, ModuleDef}
+    val src = Files.createTempDirectory("graftsql_det6").toString + "/in.parquet"
+    engine.save(d1, src, "parquet")
+    var calls = 0
+    val exts = Extensions(modules = Map("audit" -> ModuleDef((_, _, _) => { calls += 1; None })))
+    val script =
+      s"""LOAD PARQUET "$src"
+         |SUB USING audit
+         |DETERMINISTIC CHECKPOINT
+         |YIELD AS out
+         |""".stripMargin
+    for (_ <- 1 to 2) assert(GraftSql.runWith(engine, script, extensions = exts).yields("out").count() === 4)
+    assert(calls === 1)
+  }
+
+  test("a SELECT naming a frame through IDENTIFIER reads it") {
+    val res = GraftSql.run(engine,
+      """a = SELECT k, v FROM input WHERE v > 2
+        |SELECT k FROM IDENTIFIER('a')
+        |YIELD AS out
+        |""".stripMargin, Map("input" -> d1))
+    assertDfEq(res.yields("out"), Seq(Seq("a"), Seq("b")))
+  }
+
+  test("a frame read by two later statements is persisted exactly once") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val res = GraftSql.run(engine,
+      """a = SELECT k, v FROM input WHERE v > 1
+        |b = SELECT k FROM a
+        |c = SELECT v FROM a
+        |YIELD b AS b
+        |YIELD c AS c
+        |""".stripMargin, Map("input" -> d1))
+    assert(res.yields("b").count() === 3)
+    assert(res.yields("c").count() === 3)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).size === 1)
+  }
+
+  test("LOAD after SAVE to the same path reads the rows saved last") {
+    val dir = Files.createTempDirectory("graftsql5").toString
+    val res = GraftSql.run(engine,
+      s"""SELECT k, v FROM input WHERE v > 2
+         |SAVE AND USE OVERWRITE PARQUET "$dir/p"
+         |LOAD PARQUET "$dir/p"
+         |YIELD AS first
+         |SELECT k, v FROM input WHERE v <= 2
+         |SAVE OVERWRITE PARQUET "$dir/p"
+         |LOAD PARQUET "$dir/p"
+         |YIELD AS second
+         |""".stripMargin, Map("input" -> d1))
+    assertDfEq(res.yields("second"), Seq(Seq("a", 1), Seq("b", 2)))
+  }
+
+  test("SUB with a module that returns None passes its input through") {
+    import graft.sql.GraftSql.{Extensions, ModuleDef}
+    var seen = -1L
+    val exts = Extensions(modules = Map(
+      "audit" -> ModuleDef((_, dfs, _) => { seen = dfs.head.count(); None })))
+    val res = GraftSql.runWith(engine,
+      """SELECT k, v FROM input WHERE v > 2
+        |SUB USING audit
+        |YIELD AS out
+        |""".stripMargin, Map("input" -> d1), exts)
+    assert(seen === 2L)
+    assertDfEq(res.yields("out"), Seq(Seq("a", 3), Seq("b", 9)))
+  }
+
+  test("a validation failure raised while the DAG runs names its statement") {
+    val reqT = TransformerDef(
+      outputSchema = (in, _) => in,
+      fn = (_, rows, _) => rows,
+      validation = Map("partitionby_has" -> "k"))
+    val e = intercept[IllegalArgumentException](GraftSql.run(engine,
+      "x = SELECT k, v FROM input\nTRANSFORM x USING t\nYIELD AS out",
+      Map("input" -> d1), Map("t" -> reqT)))
+    assert(e.getMessage.contains("partition key"))
+    assert(e.getMessage.contains("[in statement: TRANSFORM x USING t]"))
+  }
+
   test("YIELD FILE / TABLE / LOCAL variants") {
     val res = GraftSql.run(engine,
       """SELECT k, v FROM input

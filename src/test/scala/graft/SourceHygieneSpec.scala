@@ -17,7 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
  * Second lint: the library packages materialize intermediate results only
  * through `graft.Materialize` (one eager primitive, one release path, one
  * checkpoint root). Entries* and Stress play the user's part and may call
- * Spark directly.
+ * Spark directly. Third lint: the SQL dialect compiles to Workflow nodes,
+ * so it has no persist, checkpoint, save or yield code of its own.
  */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -64,5 +65,25 @@ class SourceHygieneSpec extends AnyFunSuite {
       }
     }
     assert(hits.isEmpty, s"materialize through graft.Materialize:\n${hits.mkString("\n")}")
+  }
+
+  test("the SQL dialect persists, checkpoints, saves and yields only through Workflow") {
+    import scala.jdk.CollectionConverters._
+    val lines = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get("src/main/scala/graft/sql/GraftSql.scala")).asScala.toSeq
+    // the built-in processor registry wraps library operators and is exempt
+    val registry = lines.indexWhere(_.contains("val builtinExtensions"))
+    val registryEnd = lines.indexWhere(_.contains("private def withBuiltins"))
+    assert(registry >= 0 && registryEnd > registry)
+    val banned = Seq("engine.persist", "engine.broadcast", "engine.save", "Materialize.")
+    val hits = lines.zipWithIndex.filterNot { case (_, i) => i >= registry && i < registryEnd }
+      .flatMap { case (line, i) =>
+        val t = line.trim
+        val code =
+          if (t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) ""
+          else line.replaceAll("\\s//\\s.*$", "")
+        banned.filter(code.contains).map(b => s"GraftSql.scala:${i + 1}: $b")
+      }
+    assert(hits.isEmpty, s"compile statements to Workflow nodes:\n${hits.mkString("\n")}")
   }
 }

@@ -73,6 +73,59 @@ class WorkflowSpec extends SparkTestBase {
     assert(new java.io.File(s"$dir/${node.uuid}/_SUCCESS").exists())
   }
 
+  test("deterministic checkpoint over a load serves the rows the file holds now") {
+    // also when a second reader auto-persists the load: its key must still see the files
+    for (readTwice <- Seq(false, true)) {
+      val dir = Files.createTempDirectory("graft_ckpt5").toString
+      val src = s"$dir/in.parquet"
+      def build(): org.apache.spark.sql.DataFrame = {
+        val w = new Workflow(engine, checkpointDir = s"$dir/ckpt")
+        val x = w.load(src, "parquet")
+        if (readTwice) x.select(col("x")).yield_("all")
+        x.filter(col("x") > 0).deterministicCheckpoint().yield_("out")
+        w.run()("out")
+      }
+      engine.save(df(Seq(Seq(1), Seq(2)), "x:int"), src, "parquet")
+      assertDfEq(build(), Seq(Seq(1), Seq(2)))
+      // same path, same plan, other rows: the load's input fingerprint changes the key
+      engine.save(df(Seq(Seq(7), Seq(8), Seq(9)), "x:int"), src, "parquet")
+      assertDfEq(build(), Seq(Seq(7), Seq(8), Seq(9)))
+    }
+  }
+
+  test("deterministic checkpoint on a load leaf is reused") {
+    val dir = Files.createTempDirectory("graft_ckpt8").toString
+    engine.save(df(Seq(Seq(1), Seq(2)), "x:int"), s"$dir/in.parquet", "parquet")
+    def build() = {
+      val w = new Workflow(engine, checkpointDir = s"$dir/ckpt")
+      w.load(s"$dir/in.parquet", "parquet").deterministicCheckpoint().yield_("out")
+      w.run()("out")
+    }
+    assertDfEq(build(), Seq(Seq(1), Seq(2)))
+    assertDfEq(build(), Seq(Seq(1), Seq(2)))
+    assert(new java.io.File(s"$dir/ckpt").list().length === 1)
+  }
+
+  test("a run's strong checkpoints share one run dir deleted on exit; deterministic ones stay") {
+    import org.apache.hadoop.fs.Path
+    val dir = Files.createTempDirectory("graft_ckpt6").toString
+    val w = new Workflow(engine, checkpointDir = dir)
+    val base = w.create(Seq(Seq(1), Seq(2)), "x:int")
+    base.transform("a")(identity).checkpoint().yield_("s1")
+    base.transform("b")(identity).checkpoint().yield_("s2")
+    val det = base.transform("c")(identity).deterministicCheckpoint().yield_("d")
+    val res = w.run()
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val runDirs = fs.listStatus(new Path(dir)).map(_.getPath).filter(_.getName.startsWith("run_"))
+    assert(runDirs.length === 1)
+    assert(fs.listStatus(runDirs.head).length === 2)
+    assert(fs.cancelDeleteOnExit(runDirs.head))
+    fs.deleteOnExit(runDirs.head)
+    assert(!fs.cancelDeleteOnExit(fs.makeQualified(new Path(dir, det.uuid))))
+    // yielded frames keep reading their checkpoint files
+    assert(res("s1").count() === 2 && res("s2").count() === 2 && res("d").count() === 2)
+  }
+
   test("strong checkpoint breaks lineage but preserves rows") {
     val w = new Workflow(engine, checkpointDir =
       Files.createTempDirectory("graft_ckpt2").toString)
@@ -156,7 +209,7 @@ class WorkflowSpec extends SparkTestBase {
     val a = w.create(Seq(Seq(1), Seq(2)), "x:int")
     val b = w.create(Seq(Seq(2), Seq(1)), "x:int") // same multiset, any order
     w.assertEq(a, b)
-    w.show(a, 1)
+    w.show(Seq(a), 1)
     w.run() // must not throw
     val w2 = new Workflow(engine)
     val c = w2.create(Seq(Seq(1)), "x:int")
