@@ -444,90 +444,79 @@ object Dedup {
       textCol: String,
       shingleK: Int = 3,
       threshold: Double = 0.5,
-      maxShingleDf: Int = Int.MaxValue,
-      strategy: String = "auto"): DataFrame = {
-    require(Set("auto", "cooccur", "prefix").contains(strategy),
-      s"unknown ngram join strategy '$strategy' (auto|cooccur|prefix)")
+      maxShingleDf: Int = Int.MaxValue): DataFrame = {
     // shared materialized shingle stage — reused across the dedup family
     val sigs = shingleStage(df, idCol, textCol, shingleK)
-    if (maxShingleDf != Int.MaxValue) {
-      // the df cut's semantics are defined by co-occurrence counting over
-      // the cut universe — the prefix path cannot honor them
-      require(strategy != "prefix",
-        "maxShingleDf (the co-occurrence skew guard) is incompatible with " +
-          "strategy=\"prefix\"; use the default strategy or drop the cut")
-      return ngramJaccardCooccur(sigs, threshold, maxShingleDf)
-    }
-    strategy match {
-      case "cooccur" => ngramJaccardCooccur(sigs, threshold, Int.MaxValue)
-      case "prefix"  => ngramJaccardPrefixFiltered(sigs, threshold)
-      case "auto" =>
-        // Decide from the measured df histogram: the co-occurrence path
-        // generates sum(df²) join rows; the prefix path trades that for
-        // per-candidate set verification. With BOUNDED dfs (duplicate
-        // clusters of bounded size — the common curated-corpus case)
-        // sum(df²) grows linearly with the corpus and the narrow-row
-        // aggregate wins (measured at sf0.1: 3.0 s vs 4.9 s — 409k
-        // verified candidates vs a 2.8M-row count aggregate). With an
-        // UNBOUNDED df head (web boilerplate: df in the millions),
-        // sum(df²) explodes quadratically and only the prefix path
-        // survives. The decision statistic is the join amplification
-        // sum(df²)/sum(df); pin `strategy` explicitly to skip the probe.
-        // Sums run in double: a Long sum(df²) overflows at exactly the
-        // unbounded-df scale this probe exists to detect (df ~1e7 ⇒
-        // df² ~1e14; a few thousand such shingles exceed 2⁶³ — ANSI mode
-        // would throw, non-ANSI would wrap negative and mis-route).
-        //
-        // r16: the probe runs on a deterministic 1-in-8 document sample
-        // first — a full-corpus df aggregate PLUS an eager checkpoint of
-        // the df table was a full pass + materialization barrier spent on
-        // a routing decision (guide §1/§2: decide with small rows). For a
-        // doc-sampling rate p, a heavy shingle's sampled df concentrates
-        // at p·df, so est ≈ p·amp on the explosive head the probe exists
-        // to catch; de-bias by 1/p. Routing keeps a safety band: only a
-        // clear-margin estimate (≤ AmpThreshold/2, ≥ 2×AmpThreshold)
-        // routes directly — the chosen arm then computes its df table
-        // lazily inside its own plan (one aggregate either way, no
-        // materialization barrier). An ambiguous estimate falls back to
-        // the exact full-corpus probe with the materialized df frame both
-        // arms can reuse, exactly the pre-r16 behavior. Either arm is
-        // EXACT (differential-pinned equal in FunctionsSpec), so a
-        // borderline mis-route costs only time, never results.
-        val sampleInv = sigs
-          .filter(pmod(xxhash64(col("id")), lit(8)) === 0)
-          .select(col("id"), explode(col("sh")).as("s"))
-        val sr = sampleInv.groupBy("s").agg(count(lit(1)).as("df"))
-          .filter(col("df") >= 2)
-          .select(sum(col("df").cast("double")).as("occ"),
-            sum(col("df").cast("double") * col("df")).as("occ2")).first()
-        val sampledMass = if (sr.isNullAt(0)) 0.0 else sr.getDouble(0)
-        val est =
-          if (sampledMass == 0.0) 0.0
-          else 8.0 * sr.getDouble(1) / sampledMass
-        // r17 (advice): on a small corpus the 1-in-8 sample's estimate has
-        // high variance and a clear-margin-but-wrong route would silently
-        // skip the exact probe (cost: time only — both arms are exact, and
-        // differential-pinned equal — but avoidably). Only let the cheap
-        // probe short-circuit when it saw enough posting mass to be
-        // trusted; below the bar, route via the exact full probe.
-        val trusted = sampledMass >= 4096.0
-        if (trusted && est <= AmpThreshold / 2)
-          ngramJaccardCooccur(sigs, threshold, Int.MaxValue)
-        else if (trusted && est >= 2 * AmpThreshold)
-          ngramJaccardPrefixFiltered(sigs, threshold)
-        else {
-          val inverted = sigs.select(col("id"), explode(col("sh")).as("s"))
-          val dfs = graft.Materialize.eager(
-            inverted.groupBy("s").agg(count(lit(1)).as("df"))
-              .filter(col("df") >= 2))
-          val r = dfs.select(sum(col("df").cast("double")).as("occ"),
-            sum(col("df").cast("double") * col("df")).as("occ2")).first()
-          val amplification =
-            if (r.isNullAt(0) || r.getDouble(0) == 0.0) 0.0
-            else r.getDouble(1) / r.getDouble(0)
-          if (amplification <= AmpThreshold) cooccurFrom(sigs, inverted, dfs, threshold)
-          else prefixFilteredFrom(sigs, inverted, dfs, threshold)
-        }
+    // the df cut's semantics are defined by co-occurrence counting over the
+    // cut universe — the prefix path cannot honor them
+    if (maxShingleDf != Int.MaxValue) ngramJaccardCooccur(sigs, threshold, maxShingleDf)
+    else {
+      // Decide from the measured df histogram: the co-occurrence path
+      // generates sum(df²) join rows; the prefix path trades that for
+      // per-candidate set verification. With BOUNDED dfs (duplicate
+      // clusters of bounded size — the common curated-corpus case)
+      // sum(df²) grows linearly with the corpus and the narrow-row
+      // aggregate wins (measured at sf0.1: 3.0 s vs 4.9 s — 409k
+      // verified candidates vs a 2.8M-row count aggregate). With an
+      // UNBOUNDED df head (web boilerplate: df in the millions),
+      // sum(df²) explodes quadratically and only the prefix path
+      // survives. The decision statistic is the join amplification
+      // sum(df²)/sum(df).
+      // Sums run in double: a Long sum(df²) overflows at exactly the
+      // unbounded-df scale this probe exists to detect (df ~1e7 ⇒
+      // df² ~1e14; a few thousand such shingles exceed 2⁶³ — ANSI mode
+      // would throw, non-ANSI would wrap negative and mis-route).
+      //
+      // r16: the probe runs on a deterministic 1-in-8 document sample
+      // first — a full-corpus df aggregate PLUS an eager checkpoint of
+      // the df table was a full pass + materialization barrier spent on
+      // a routing decision (guide §1/§2: decide with small rows). For a
+      // doc-sampling rate p, a heavy shingle's sampled df concentrates
+      // at p·df, so est ≈ p·amp on the explosive head the probe exists
+      // to catch; de-bias by 1/p. Routing keeps a safety band: only a
+      // clear-margin estimate (≤ AmpThreshold/2, ≥ 2×AmpThreshold)
+      // routes directly — the chosen arm then computes its df table
+      // lazily inside its own plan (one aggregate either way, no
+      // materialization barrier). An ambiguous estimate falls back to
+      // the exact full-corpus probe with the materialized df frame both
+      // arms can reuse, exactly the pre-r16 behavior. Either arm is
+      // EXACT (differential-pinned equal in FunctionsSpec), so a
+      // borderline mis-route costs only time, never results.
+      val sampleInv = sigs
+        .filter(pmod(xxhash64(col("id")), lit(8)) === 0)
+        .select(col("id"), explode(col("sh")).as("s"))
+      val sr = sampleInv.groupBy("s").agg(count(lit(1)).as("df"))
+        .filter(col("df") >= 2)
+        .select(sum(col("df").cast("double")).as("occ"),
+          sum(col("df").cast("double") * col("df")).as("occ2")).first()
+      val sampledMass = if (sr.isNullAt(0)) 0.0 else sr.getDouble(0)
+      val est =
+        if (sampledMass == 0.0) 0.0
+        else 8.0 * sr.getDouble(1) / sampledMass
+      // r17 (advice): on a small corpus the 1-in-8 sample's estimate has
+      // high variance and a clear-margin-but-wrong route would silently
+      // skip the exact probe (cost: time only — both arms are exact, and
+      // differential-pinned equal — but avoidably). Only let the cheap
+      // probe short-circuit when it saw enough posting mass to be
+      // trusted; below the bar, route via the exact full probe.
+      val trusted = sampledMass >= 4096.0
+      if (trusted && est <= AmpThreshold / 2)
+        ngramJaccardCooccur(sigs, threshold, Int.MaxValue)
+      else if (trusted && est >= 2 * AmpThreshold)
+        ngramJaccardPrefixFiltered(sigs, threshold)
+      else {
+        val inverted = sigs.select(col("id"), explode(col("sh")).as("s"))
+        val dfs = graft.Materialize.eager(
+          inverted.groupBy("s").agg(count(lit(1)).as("df"))
+            .filter(col("df") >= 2))
+        val r = dfs.select(sum(col("df").cast("double")).as("occ"),
+          sum(col("df").cast("double") * col("df")).as("occ2")).first()
+        val amplification =
+          if (r.isNullAt(0) || r.getDouble(0) == 0.0) 0.0
+          else r.getDouble(1) / r.getDouble(0)
+        if (amplification <= AmpThreshold) cooccurFrom(sigs, inverted, dfs, threshold)
+        else prefixFilteredFrom(sigs, inverted, dfs, threshold)
+      }
     }
   }
 
@@ -1249,11 +1238,13 @@ object Dedup {
       .select(col(idCol).as("__id"),
         spanHashArray(col(textCol), spanTokens).as("__sp"))
     // the slim (id, hash) stream feeds BOTH the frequency election and the
-    // dup-mark join; persist it so the tokenize+window-hash pass over the
-    // corpus runs once, not twice (blocks are freed by the ContextCleaner
-    // when the query's RDDs are GC'd — no explicit lifecycle to leak)
-    val exploded = base.select(col("__id"), explode(col("__sp")).as("__h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // dup-mark join; materialize it so the tokenize+window-hash pass over
+    // the corpus runs once, not twice. An eager frame is an RDD-level
+    // persist, so the ContextCleaner frees its blocks once the result is
+    // unreachable; a Dataset `.persist` is held by the CacheManager until
+    // `unpersist`, which nothing here could call
+    val exploded = graft.Materialize.eager(
+      base.select(col("__id"), explode(col("__sp")).as("__h")))
     val freq = exploded.groupBy("__h").agg(count(lit(1)).as("__c"))
       .filter(col("__c") >= minCount).select("__h")
     val dup = exploded.join(freq, "__h")
@@ -1305,13 +1296,13 @@ object Dedup {
     val base = spreadForCompute(df)
       .select(col(idCol).as("__id"), col(textCol).as("__text"),
         toks.as("__t"), spanHashArray(col(textCol), spanTokens).as("__sp"))
-    // occurrences: (value hash, doc, 1-based start position) — persisted:
-    // it feeds the frequency election, the dup-occurrence join AND the
-    // winner election (ContextCleaner frees the blocks on GC)
-    val occ = base.select(col("__id"),
+    // occurrences: (value hash, doc, 1-based start position) —
+    // materialized: it feeds the frequency election, the dup-occurrence
+    // join AND the winner election (an eager frame's blocks are freed by
+    // the ContextCleaner once the result is unreachable)
+    val occ = graft.Materialize.eager(base.select(col("__id"),
       posexplode(col("__sp")).as(Seq("__p0", "__h")))
-      .select(col("__h"), col("__id"), (col("__p0") + 1).as("__pos"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("__h"), col("__id"), (col("__p0") + 1).as("__pos")))
     val freq = occ.groupBy("__h").agg(count(lit(1)).as("__c"))
       .filter(col("__c") >= minCount).select("__h")
     val dupOcc = occ.join(freq, "__h")

@@ -7,6 +7,7 @@ import graft.transform.{PartitionCursor, Transform}
 import graft.workflow.Workflow
 import org.apache.spark.sql.{DataFrame, Row}
 import scala.collection.mutable
+import scala.util.matching.Regex
 
 /**
  * The dataflow SQL dialect of the reference (FugueSQL, grammar semantics in
@@ -30,6 +31,26 @@ import scala.collection.mutable
  * runs, because the frame it creates is part of the key. Checkpoints
  * follow Workflow's paths: no `sql_*` directory is written, so an old
  * `sql_det_*` checkpoint is not reused (one recompute).
+ *
+ * Quoting: `'…'`, `"…"` and `` `…` `` are opaque. A doubled delimiter
+ * stays inside, and in `'…'` and `"…"` a backslash escapes the next char,
+ * as in Spark SQL. `--` outside them starts a comment that runs to the end
+ * of the line, and parens count only outside both, so a line that starts
+ * inside a quoted string or an open paren continues its statement. A
+ * quoted param value (`USING ext(k:v)`, LOAD/SAVE params, FILLNA PARAMS,
+ * RENAME COLUMNS) or quoted name in a column list loses its quotes,
+ * whatever the quote kind.
+ *
+ * Dataframe references: a statement's dataframe positions are the words
+ * after its keyword up to the first clause word (USING, BY, ON, COLUMNS,
+ * PARAMS, PREPARTITION, PRESORT, AS, SCHEMA, CALLBACK, TITLE), and the
+ * words after FROM up to the next one. There grammar words, numbers and
+ * string literals are skipped; any other identifier, plain or
+ * backtick-quoted, must name a frame (an input, an assigned statement, an
+ * inline sub-statement or an earlier YIELD's name), or the statement
+ * raises "unknown dataframe". A statement that names none reads the
+ * previous statement's frame. SELECT reads the frames Spark's parser
+ * finds in it.
  *
  * Supported statements (each optionally prefixed with `name =`):
  * {{{
@@ -1085,28 +1106,29 @@ object GraftSql {
   // ALL\nSELECT ...`) — without (?s) the full-match extractor silently
   // fails on any multi-line RHS and the statement misparses as a keyword
   private val Assign = "(?s)^\\s*([A-Za-z_][A-Za-z0-9_]*)\\s*:?=\\s*(.*)$".r
+  private val SetOpEnd =
+    "(?i)\\b(UNION(\\s+ALL|\\s+DISTINCT)?|INTERSECT(\\s+ALL)?|EXCEPT(\\s+ALL)?|MINUS)\\s*$".r
 
   /** Split a script into statements: a statement starts at a line whose
    * first token is a dataflow keyword or an assignment; continuation lines
-   * attach to the current statement. */
+   * attach to the current statement. Comments are removed. */
   def splitStatements(script: String): Seq[String] = {
+    val s = lex(script)
     val out = mutable.ArrayBuffer.empty[StringBuilder]
-    def parenDepth(text: String): Int = {
-      val masked = maskQuotes(text)
-      masked.count(_ == '(') - masked.count(_ == ')')
-    }
-    script.split("\n").foreach { raw =>
-      val line = stripComment(raw)
+    var lastLine = "" // code of the last non-empty line
+    var at = 0
+    s.text.split("\n", -1).foreach { line =>
       val t = line.trim
       if (t.nonEmpty) {
-        // a line inside an unbalanced paren (a subquery spanning lines)
-        // always continues the current statement, even if it starts with a
-        // keyword; an assignment only starts a statement when its RHS is a
-        // dialect keyword — `x = 5` inside a WHERE clause is NOT a statement
-        val openParens = out.nonEmpty && parenDepth(out.last.toString) > 0
+        // a line that starts inside a quoted string or an unbalanced paren
+        // (a subquery spanning lines) always continues the current
+        // statement, even if it starts with a keyword; an assignment only
+        // starts a statement when its RHS is a dialect keyword — `x = 5`
+        // inside a WHERE clause is NOT a statement
+        val nested = out.nonEmpty && (s.quoted(at) || s.depth(at) > 0)
         // a dangling `name =` line absorbs the following statement line
         // (the multi-line assignment form `x =\n  SELECT ...`)
-        val pendingAssign = out.nonEmpty && !openParens && (out.last.toString match {
+        val pendingAssign = out.nonEmpty && !nested && (out.last.toString match {
           case Assign(_, rest) => rest.trim.isEmpty
           case _ => false
         })
@@ -1114,11 +1136,10 @@ object GraftSql {
         // (UNION [ALL]/INTERSECT/EXCEPT at the end of the current
         // statement) CONTINUES that statement — splitting there would
         // break a multi-line compound query into two invalid halves
-        val setOpCont = out.nonEmpty && !openParens &&
-          "(?i)\\b(UNION(\\s+ALL|\\s+DISTINCT)?|INTERSECT(\\s+ALL)?|EXCEPT(\\s+ALL)?|MINUS)\\s*$".r
-            .findFirstIn(maskQuotes(out.last.toString).trim).isDefined &&
+        val setOpCont = out.nonEmpty && !nested &&
+          SetOpEnd.findFirstIn(lastLine.trim).isDefined &&
           "^(?i)(SELECT|WITH|\\()".r.findFirstIn(t).isDefined
-        val starts = !openParens && !pendingAssign && !setOpCont && ((t match {
+        val starts = !nested && !pendingAssign && !setOpCont && ((t match {
           case Assign(_, rest) =>
             rest.trim.isEmpty || KeywordStart.findFirstIn(rest.trim).isDefined
           case _ => false
@@ -1128,42 +1149,85 @@ object GraftSql {
         // `q =SELECT …` (parses today, but leaves a token-boundary trap)
         else if (pendingAssign) { out.last += ' '; out.last ++= t }
         else { out.last += '\n'; out.last ++= t }
+        lastLine = s.code.substring(at, at + line.length)
       }
+      at += line.length + 1
     }
     out.map(_.toString).toSeq
   }
 
-  /** Strip a `--` comment, ignoring `--` inside quoted strings. */
-  private def stripComment(line: String): String = {
-    var inS = false; var inD = false
-    var i = 0
-    while (i < line.length) {
-      val c = line(i)
-      if (c == '\'' && !inD) inS = !inS
-      else if (c == '"' && !inS) inD = !inD
-      else if (c == '-' && !inS && !inD && i + 1 < line.length && line(i + 1) == '-')
-        return line.substring(0, i)
-      i += 1
+  /** Text read under the dialect's lexical rule by [[lex]]. `text` is the
+   * input with comments blanked; `code` is `text` with the content of every
+   * quoted string masked, so a grammar regex matches on `code` and reads
+   * its value from `text` at the same offsets. `depth(i)` is the paren
+   * depth before char i; `quoted(i)` is true inside a quoted string. */
+  private final class Lexed(val text: String, val code: String,
+      val depth: Array[Int], val quoted: Array[Boolean]) {
+    /** `code` with every paren group blanked. */
+    lazy val top: String =
+      code.indices.map(i => if (depth(i) > 0 || code(i) == '(') ' ' else code(i)).mkString
+    /** Offsets of `c` outside quotes and parens. */
+    def topIndices(c: Char): Seq[Int] = code.indices.filter(i => code(i) == c && depth(i) == 0)
+    /** Offset just past the paren group that opens at `i`; -1 if unclosed. */
+    def groupEnd(i: Int): Int =
+      (i + 1 until code.length).find(j => code(j) == ')' && depth(j) == depth(i) + 1).fold(-1)(_ + 1)
+    /** `text` cut at every `sep` outside quotes and parens, trimmed, empty
+     * parts dropped. */
+    def split(sep: Char): Seq[String] = {
+      val cuts = -1 +: topIndices(sep) :+ text.length
+      cuts.zip(cuts.tail).map { case (a, b) => text.substring(a + 1, b).trim }.filter(_.nonEmpty)
     }
-    line
+    /** The first match of `r` on `code` that starts outside parens. */
+    def find(r: Regex): Option[Regex.Match] = r.findAllMatchIn(code).find(m => depth(m.start) == 0)
+    def has(kw: String): Boolean = find(s"(?i)\\b$kw\\b".r).isDefined
+    /** The text of group `g` of a match on `code`. */
+    def at(m: Regex.Match, g: Int): String = text.substring(m.start(g), m.end(g))
+    def take(n: Int): Lexed = new Lexed(text.take(n), code.take(n), depth.take(n + 1), quoted.take(n))
   }
 
-  /** Copy of the statement with quoted string contents blanked — safe for
-   * keyword/flag detection (a path containing "append" must not flip the
-   * save mode). */
-  private def maskQuotes(stmt: String): String = {
-    val sb = new StringBuilder(stmt)
-    var inS = false; var inD = false
+  /** The dialect's one lexical rule, and the one pass that applies it:
+   * `'…'`, `"…"` and `` `…` `` are opaque (a doubled delimiter stays
+   * inside; in `'…'` and `"…"` a backslash escapes the next char, as in
+   * Spark SQL), `--` outside them comments out the rest of the line, and
+   * parens count only outside both (a stray `)` does not go below 0). */
+  private def lex(s: String): Lexed = {
+    val text = s.toCharArray
+    val code = s.toCharArray
+    val depth = new Array[Int](s.length + 1)
+    val quoted = new Array[Boolean](s.length)
+    var q = '\u0000' // delimiter of the open quote
+    var d = 0
     var i = 0
-    while (i < sb.length) {
-      val c = sb(i)
-      if (c == '\'' && !inD) inS = !inS
-      else if (c == '"' && !inS) inD = !inD
-      else if (inS || inD) sb(i) = '_'
+    while (i < s.length) {
+      depth(i) = d
+      val c = s(i)
+      if (q != '\u0000') {
+        quoted(i) = true
+        if (c == q && !s.startsWith(q.toString, i + 1)) q = '\u0000'
+        else {
+          code(i) = '_'
+          // a doubled delimiter or an escape: the next char is content too
+          if ((c == q || (c == '\\' && q != '`')) && i + 1 < s.length) {
+            i += 1; depth(i) = d; quoted(i) = true; code(i) = '_'
+          }
+        }
+      } else if (c == '\'' || c == '"' || c == '`') q = c
+      else if (c == '-' && s.startsWith("-", i + 1)) {
+        while (i + 1 < s.length && s(i + 1) != '\n') { text(i) = ' '; code(i) = ' '; i += 1; depth(i) = d }
+        text(i) = ' '; code(i) = ' '
+      } else if (c == '(') d += 1
+      else if (c == ')') d = math.max(0, d - 1)
       i += 1
     }
-    sb.toString
+    depth(s.length) = d
+    new Lexed(new String(text), new String(code), depth, quoted)
   }
+
+  /** A quoted value or name without its quotes; anything else as is. */
+  private def unquote(t: String): String =
+    if (t.length >= 2 && "'\"`".contains(t.head) && t.last == t.head)
+      t.substring(1, t.length - 1).replace(t.head.toString * 2, t.head.toString)
+    else t
 
   /** Compiles a script into one [[Workflow]] and runs it. Each statement
    * builds its nodes inside `w.statement`, keyed by its ordinal and
@@ -1228,16 +1292,12 @@ object GraftSql {
     private def prev: Node =
       last.getOrElse(throw new IllegalArgumentException("no previous dataframe"))
 
-    private def ref(name: Option[String]): Node =
-      name.map(n => frames.getOrElse(n,
-        throw new IllegalArgumentException(s"unknown dataframe '$n'"))).getOrElse(prev)
-
     /** The statement's node over `deps`: op is its keyword. */
-    private def node(stmt: String, deps: Seq[Node])(f: Seq[DataFrame] => DataFrame): Node =
-      w.process(deps, stmt.toUpperCase.takeWhile(!_.isWhitespace))(f)
+    private def node(s: Lexed, deps: Seq[Node])(f: Seq[DataFrame] => DataFrame): Node =
+      w.process(deps, s.text.toUpperCase.takeWhile(!_.isWhitespace))(f)
 
-    private def unary(stmt: String, d: Node)(f: DataFrame => DataFrame): Node =
-      node(stmt, Seq(d))(dfs => f(dfs.head))
+    private def unary(s: Lexed, d: Node)(f: DataFrame => DataFrame): Node =
+      node(s, Seq(d))(dfs => f(dfs.head))
 
     /** Statements whose df-list positions accept inline parenthesized
      * sub-statements (`OUTPUT a, (CREATE [[0]] SCHEMA a:int) USING ...` —
@@ -1252,227 +1312,180 @@ object GraftSql {
     private def resolveInline(stmt: String, label: String): String = {
       val kw = stmt.toUpperCase.takeWhile(!_.isWhitespace)
       if (!InlineHosts.contains(kw)) return stmt
-      val masked = maskQuotes(stmt)
+      val s = lex(stmt)
       val sb = new StringBuilder
-      var i = 0
-      while (i < stmt.length) {
-        if (masked(i) == '(') {
-          // find the matching close paren on the masked text
-          var depth = 1
-          var j = i + 1
-          while (j < stmt.length && depth > 0) {
-            if (masked(j) == '(') depth += 1
-            else if (masked(j) == ')') depth -= 1
-            j += 1
-          }
-          if (depth > 0)
-            throw new IllegalArgumentException(
-              "unbalanced parenthesis in statement: " +
-                stmt.trim.linesIterator.nextOption().getOrElse("<empty>"))
-          val inner = stmt.substring(i + 1, j - 1).trim
-          if (InlineInner.findFirstIn(inner).isDefined) {
-            val name = s"__inline_${frames.size}"
-            frames(name) = w.statement(Seq(s"$ordinal.$name", inner), label)(
-              body(inner, label)).getOrElse(
-              throw new IllegalArgumentException(s"inline statement yields nothing: $inner"))
-            sb ++= name
-          } else sb ++= stmt.substring(i, j) // e.g. USING ext(params)
-          i = j
-        } else { sb += stmt(i); i += 1 }
+      var done = 0
+      for (i <- s.topIndices('(')) {
+        val j = s.groupEnd(i)
+        if (j < 0)
+          throw new IllegalArgumentException(
+            "unbalanced parenthesis in statement: " +
+              stmt.trim.linesIterator.nextOption().getOrElse("<empty>"))
+        val inner = stmt.substring(i + 1, j - 1).trim
+        sb ++= stmt.substring(done, i)
+        if (InlineInner.findFirstIn(inner).isDefined) {
+          val name = s"__inline_${frames.size}"
+          frames(name) = w.statement(Seq(s"$ordinal.$name", inner), label)(
+            body(inner, label)).getOrElse(
+            throw new IllegalArgumentException(s"inline statement yields nothing: $inner"))
+          sb ++= name
+        } else sb ++= stmt.substring(i, j) // e.g. USING ext(params)
+        done = j
       }
+      sb ++= stmt.substring(done)
       sb.toString
     }
 
     private def body(stmtRaw: String, label: String): Option[Node] = {
-      val stmt = resolveInline(stmtRaw, label)
-      val kw = stmt.toUpperCase.takeWhile(!_.isWhitespace)
-      kw match {
-        case "LOAD" => Some(compileLoad(stmt))
-        case "SAVE" => compileSave(stmt) // Some only for SAVE AND USE
-        case "SELECT" | "WITH" => Some(compileSelect(stmt))
-        case "CREATE" => Some(compileCreate(stmt))
-        case "ZIP" => Some(compileZip(stmt))
-        case "TAKE" => Some(compileTake(stmt))
-        case "SAMPLE" => Some(compileSample(stmt))
-        case "DROPNA" => Some(compileDropna(stmt))
-        case "FILLNA" => Some(compileFillna(stmt))
-        case "RENAME" => Some(compileRename(stmt))
-        case "ALTER" => Some(compileAlter(stmt))
-        case "DROP" => Some(compileDropCols(stmt))
-        case "DISTINCT" => Some(unary(stmt, ref(wordAfter(stmt, 1)))(engine.distinct))
-        case "TRANSFORM" => Some(compileTransform(stmt))
-        case "OUTTRANSFORM" => compileOutTransform(stmt); None
-        case "COTRANSFORM" => Some(compileCoTransform(stmt))
-        case "PROCESS" => Some(compileProcess(stmt))
-        case "SUB" => Some(compileSub(stmt))
-        case "OUTPUT" => compileOutput(stmt); None
-        case "PRINT" => compilePrint(stmt); None
-        case "PERSIST" => Some(unary(stmt, ref(wordAfter(stmt, 1)))(identity).persist())
-        case "BROADCAST" => Some(unary(stmt, ref(wordAfter(stmt, 1)))(identity).broadcast())
-        case "WEAK" | "STRONG" | "DETERMINISTIC" | "CHECKPOINT" =>
-          Some(compileCheckpoint(stmt))
-        case "YIELD" => compileYield(stmt); None
-        case "CONNECT" => compileConnect(stmt, label)
+      val s = lex(resolveInline(stmtRaw, label))
+      s.text.toUpperCase.takeWhile(!_.isWhitespace) match {
+        case "LOAD" => Some(compileLoad(s))
+        case "SAVE" => compileSave(s) // Some only for SAVE AND USE
+        case "SELECT" | "WITH" => Some(compileSelect(s))
+        case "CREATE" => Some(compileCreate(s))
+        case "ZIP" => Some(compileZip(s))
+        case "TAKE" => Some(compileTake(s))
+        case "SAMPLE" => Some(compileSample(s))
+        case "DROPNA" => Some(compileDropna(s))
+        case "FILLNA" => Some(compileFillna(s))
+        case "RENAME" => Some(compileRename(s))
+        case "ALTER" => Some(compileAlter(s))
+        case "DROP" => Some(compileDropCols(s))
+        case "DISTINCT" => Some(unary(s, frameRef(s))(engine.distinct))
+        case "TRANSFORM" => Some(compileTransform(s))
+        case "OUTTRANSFORM" => compileOutTransform(s); None
+        case "COTRANSFORM" => Some(compileCoTransform(s))
+        case "PROCESS" => Some(compileProcess(s))
+        case "SUB" => Some(compileSub(s))
+        case "OUTPUT" => compileOutput(s); None
+        case "PRINT" => compilePrint(s); None
+        case "PERSIST" => Some(unary(s, frameRef(s))(identity).persist())
+        case "BROADCAST" => Some(unary(s, frameRef(s))(identity).broadcast())
+        case kw @ ("WEAK" | "STRONG" | "DETERMINISTIC" | "CHECKPOINT") =>
+          Some(compileCheckpoint(kw, s))
+        case "YIELD" => compileYield(s); None
+        case "CONNECT" => compileConnect(s, label)
         case other => throw new IllegalArgumentException(s"unknown statement '$other'")
       }
     }
 
     // helpers ----------------------------------------------------------
-    /** Grammar tokens that may legitimately occupy a df-name position —
-     * never treated as dataframe references. */
-    private val NonDfTokens = Set("OVERWRITE", "APPEND", "TO", "SINGLE",
-      "PARQUET", "CSV", "JSON", "ORC", "AND", "USE", "PREPARTITION",
-      "PRESORT", "BY", "FROM", "PARAMS", "ROWS", "ROW", "PERCENT",
-      "REPLACE", "SEED", "LAZY", "USING", "SCHEMA", "CALLBACK", "NULLS",
-      "NULL", "FIRST", "LAST", "ON", "ALL", "ANY", "IF", "EXISTS",
-      "COLUMNS", "AS", "DATA", "WEAK", "STRONG", "DETERMINISTIC",
-      "CHECKPOINT", "LOCAL", "DATAFRAME", "FILE", "TABLE", "INNER", "LEFT",
-      "RIGHT", "FULL", "OUTER", "CROSS", "TITLE", "ROWCOUNT")
+    /** Grammar words: never a dataframe name. Those in `Clauses` open a
+     * clause, which ends a dataframe position; only FROM's argument is a
+     * dataframe. */
+    private val Clauses = Set("FROM", "PREPARTITION", "PRESORT", "BY", "USING",
+      "ON", "PARAMS", "COLUMNS", "AS", "SCHEMA", "CALLBACK", "TITLE")
+    private val NonDfTokens = Clauses ++ Set("OVERWRITE", "APPEND", "TO", "SINGLE",
+      "PARQUET", "CSV", "JSON", "ORC", "AND", "USE", "ROWS", "ROW", "PERCENT",
+      "REPLACE", "SEED", "LAZY", "NULLS", "NULL", "FIRST", "LAST", "ALL", "ANY",
+      "IF", "EXISTS", "DATA", "WEAK", "STRONG", "DETERMINISTIC", "CHECKPOINT",
+      "LOCAL", "DATAFRAME", "FILE", "TABLE", "INNER", "LEFT", "RIGHT", "FULL",
+      "OUTER", "CROSS", "LEFT_OUTER", "RIGHT_OUTER", "FULL_OUTER", "ROWCOUNT")
 
-    private def wordAfter(stmt: String, idx: Int): Option[String] = {
-      val toks = stmt.split("\\s+")
-      if (toks.length <= idx || toks(idx).contains("\"")) None
-      else {
-        val t = toks(idx)
-        val ident = t.nonEmpty && t.forall(c => c.isLetterOrDigit || c == '_') &&
-          !t.forall(_.isDigit)
-        if (!ident || NonDfTokens.contains(t.toUpperCase)) None
+    /** The frames a statement reads. Its dataframe positions are the words
+     * after its keyword up to the first clause word, and the words after
+     * FROM up to the next one. There grammar words, numbers and string
+     * literals are skipped, and every other identifier, plain or
+     * backtick-quoted, must name a frame: a typo must not silently process
+     * the previous frame. None named: the previous frame. */
+    private def frameRefs(s: Lexed): Seq[Node] = {
+      var open = true
+      val named = "[^\\s,]+".r.findAllMatchIn(s.top).drop(1).flatMap { m =>
+        val word = m.matched.toUpperCase
+        val name = m.matched.head == '`' ||
+          (word.forall(c => c.isLetterOrDigit || c == '_') && !word.forall(_.isDigit))
+        if (Clauses(word)) { open = word == "FROM"; None }
+        else if (!open || !name || NonDfTokens(word)) None
         else {
-          // an explicit name must RESOLVE — a typo silently falling back
-          // to the previous frame would process the wrong data
-          require(frames.contains(t), s"unknown dataframe '$t' in: ${stmt.trim}")
-          Some(t)
+          val n = unquote(s.at(m, 0))
+          Some(frames.getOrElse(n, throw new IllegalArgumentException(s"unknown dataframe '$n'")))
         }
-      }
+      }.toSeq
+      if (named.isEmpty) Seq(prev) else named
     }
 
-    private def quoted(stmt: String): String = {
-      val m = "\"([^\"]+)\"".r.findFirstMatchIn(stmt)
-      m.map(_.group(1)).getOrElse(
-        throw new IllegalArgumentException(s"expected quoted path in: $stmt"))
+    private def frameRef(s: Lexed): Node = frameRefs(s) match {
+      case Seq(n) => n
+      case ns => throw new IllegalArgumentException(s"expected one dataframe, got ${ns.size}")
     }
 
-    private def kwArg(stmt: String, kw: String): Option[String] = {
-      // tokens exclude commas — `a, b` must capture both items, not `a,`
-      // — but a backtick-quoted identifier may carry spaces AND commas
-      // (`COLUMNS `x y`, d` must capture the full `x y`, not stop at the
-      // space; caught by the q117 odd-column gate in r10)
-      val tok = "(?:`[^`]*`|[^\\s,`])+"
-      val r = s"(?i)\\b$kw\\s+($tok(?:\\s*,\\s*$tok)*)".r
-      r.findFirstMatchIn(stmt).map(_.group(1))
-    }
+    /** The string literal (`'…'` or `"…"`) that opens at `i`, unquoted,
+     * and the offset past it. */
+    private def literalAt(s: Lexed, i: Int): Option[(String, Int)] =
+      Option.when(i < s.code.length && "'\"".contains(s.code(i)))(s.code.indexOf(s.code(i), i + 1))
+        .filter(_ > 0).map(j => (unquote(s.text.substring(i, j + 1)), j + 1))
 
-    /** Split on a top-level separator, honoring backtick quoting (names
-     * may carry the separator) and double quotes (values may). */
-    private def splitTop(s: String, sep: Char): Seq[String] = {
-      val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-      val cur = new StringBuilder
-      var inBt = false
-      var inDq = false
-      s.foreach {
-        case '`' if !inDq => inBt = !inBt; cur += '`'
-        case '"' if !inBt => inDq = !inDq; cur += '"'
-        case c if c == sep && !inBt && !inDq =>
-          parts += cur.result(); cur.clear()
-        case c => cur += c
-      }
-      parts += cur.result()
-      parts.map(_.trim).filter(_.nonEmpty).toSeq
-    }
+    /** The statement's path: its first string literal outside parens. */
+    private def path(s: Lexed): (String, Int) =
+      s.code.indices.find(i => "'\"".contains(s.code(i)) && !s.quoted(i) && s.depth(i) == 0)
+        .flatMap(literalAt(s, _)).filter(_._1.nonEmpty)
+        .getOrElse(throw new IllegalArgumentException(s"expected quoted path in: ${s.text}"))
 
-    /** Strip backtick quoting from an identifier: engine ops take RAW
-     * column names (they re-quote via qcol themselves — passing the
-     * backticks through would double them). `` unescapes to a backtick. */
-    private def unquoteName(t: String): String =
-      if (t.length >= 2 && t.head == '`' && t.last == '`')
-        t.substring(1, t.length - 1).replace("``", "`")
-      else t
+    private def kwArg(s: Lexed, kw: String): Option[String] =
+      // tokens exclude commas — `a, b` must capture both items, not `a,` —
+      // and a quoted name is one token whatever it holds (masked in code)
+      s.find(s"(?i)\\b$kw\\s+([^\\s,]+(?:\\s*,\\s*[^\\s,]+)*)".r).map(s.at(_, 1))
 
     /** Split a kwArg column list on top-level commas and unquote each
      * name (a column literally NAMED `a,b` stays one item). */
-    private def splitCols(s: String): Seq[String] =
-      splitTop(s, ',').map(unquoteName)
+    private def splitCols(s: String): Seq[String] = lex(s).split(',').map(unquote)
 
-    /** `a:b,c:d` name pairs where either side may be backtick-quoted
-     * (spaces, commas, even colons inside the quotes) — RENAME COLUMNS
-     * and FILLNA PARAMS keys need this; plain parseParams splits on the
-     * first ':' anywhere and would cut a quoted name in half. */
-    private def parseNamePairs(s: String): Seq[(String, String)] =
-      splitTop(s, ',').map { item =>
-        val kv = splitTop(item, ':')
-        require(kv.length >= 2,
-          s"malformed pair '$item' (expected name:value) in ($s)")
-        // value side rejoins on ':' — only the FIRST top-level colon splits
-        (unquoteName(kv.head),
-          kv.tail.mkString(":").stripPrefix("\"").stripSuffix("\""))
-      }
+    /** `k:v, ..` pairs: USING and LOAD/SAVE params, FILLNA PARAMS, RENAME
+     * COLUMNS. Items split at top-level commas, each at its first
+     * top-level colon; a quoted key or value loses its quotes. An item
+     * without a colon is an error, not silently dropped. */
+    private def parseParams(s: String): Seq[(String, String)] = lex(s).split(',').map { item =>
+      val colon = lex(item).topIndices(':').headOption.getOrElse(throw new IllegalArgumentException(
+        s"malformed param '$item' (expected name:value) in ($s)"))
+      unquote(item.take(colon).trim) -> unquote(item.drop(colon + 1).trim)
+    }
 
-    private def parseParams(s: String): Map[String, String] = {
-      // split on commas OUTSIDE double quotes so quoted values can carry
-      // commas (`dedup_exact(keys:"url,text")`); an entry without a colon
-      // is a malformed param and must error, not be silently dropped
-      // (the old filter turned `keys:url,text` into keys=url, losing text)
-      val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-      val cur = new StringBuilder
-      var inQ = false
-      s.foreach {
-        case '"' => inQ = !inQ; cur += '"'
-        case ',' if !inQ => parts += cur.toString; cur.clear()
-        case c => cur += c
-      }
-      parts += cur.toString
-      parts.map(_.trim).filter(_.nonEmpty).map { kv =>
-        require(kv.contains(":"), s"malformed param '$kv' (expected name:value) in ($s)")
-        val Array(k, v) = kv.split(":", 2)
-        k.trim -> v.trim.stripPrefix("\"").stripSuffix("\"")
-      }.toMap
+    /** The params of the `(k:v,..)` group that opens at `open`. */
+    private def groupParams(s: Lexed, open: Int): Map[String, String] = {
+      val end = s.groupEnd(open)
+      require(end > 0, s"unbalanced parenthesis in: ${s.text}")
+      parseParams(s.text.substring(open + 1, end - 1)).toMap
     }
 
     // statements -------------------------------------------------------
     /** `(k:v,..)` group following the quoted path — LOAD/SAVE options
      * (reference `LOAD "path" (params)`, _visitors.py:560-592). Flags like
      * SINGLE may sit between the path and the params group. */
-    private def pathParams(stmt: String): Map[String, String] =
-      "(?s)\"[^\"]*\"[^\"(]*\\(([^)]*)\\)".r.findFirstMatchIn(stmt)
-        .map(m => parseParams(m.group(1))).getOrElse(Map.empty)
+    private def pathParams(s: Lexed, pathEnd: Int): Map[String, String] =
+      s.topIndices('(').find(_ >= pathEnd).map(groupParams(s, _)).getOrElse(Map.empty)
 
-    private def compileLoad(stmt: String): Node = {
-      val fmt = "(?i)LOAD\\s+(PARQUET|CSV|JSON)?".r.findFirstMatchIn(stmt)
-        .flatMap(m => Option(m.group(1))).map(_.toLowerCase).getOrElse("")
-      val cols = kwArg(stmt, "COLUMNS").map(splitCols).getOrElse(Nil)
-      w.load(quoted(stmt), fmt, cols, options = pathParams(stmt))
+    private def compileLoad(s: Lexed): Node = {
+      val fmt = s.find("(?i)^LOAD\\s+(PARQUET|CSV|JSON)\\b".r)
+        .map(_.group(1).toLowerCase).getOrElse("")
+      val cols = kwArg(s, "COLUMNS").map(splitCols).getOrElse(Nil)
+      val (p, end) = path(s)
+      w.load(p, fmt, cols, options = pathParams(s, end))
     }
 
     /** SAVE / SAVE AND USE / SAVE PREPARTITION BY — returns the re-loaded
      * frame for AND USE (reference save_and_use, processors.py:300). */
-    private def compileSave(stmt: String): Option[Node] = {
-      val masked = maskQuotes(stmt).toUpperCase
-      val andUse = "\\bAND\\s+USE\\b".r.findFirstIn(masked).isDefined
+    private def compileSave(s: Lexed): Option[Node] = {
       // OVERWRITE | APPEND | TO (TO = fail if exists, _visitors.py:237-241)
       val mode =
-        if ("\\bAPPEND\\b".r.findFirstIn(masked).isDefined) "append"
-        else if ("\\bOVERWRITE\\b".r.findFirstIn(masked).isDefined) "overwrite"
-        else if ("\\bTO\\b".r.findFirstIn(masked).isDefined) "error"
+        if (s.has("APPEND")) "append"
+        else if (s.has("OVERWRITE")) "overwrite"
+        else if (s.has("TO")) "error"
         else "overwrite"
-      val single = "\\bSINGLE\\b".r.findFirstIn(masked).isDefined
-      val fmt = "(?i)\\b(PARQUET|CSV|JSON)\\b".r.findFirstMatchIn(maskQuotes(stmt))
-        .map(_.group(1).toLowerCase).getOrElse("")
-      val partBy = kwArg(stmt, "PREPARTITION\\s+BY")
-        .map(splitCols).getOrElse(Nil)
-      val dfIdx = if (andUse) 3 else 1 // skip AND USE tokens
-      val d = ref(wordAfter(stmt, dfIdx).orElse(wordAfter(stmt, 1)))
-      val path = quoted(stmt)
-      val params = pathParams(stmt)
-      d.save(path, fmt, mode, partBy, single, params)
+      val fmt = s.find("(?i)\\b(PARQUET|CSV|JSON)\\b".r).map(_.group(1).toLowerCase).getOrElse("")
+      val partBy = kwArg(s, "PREPARTITION\\s+BY").map(splitCols).getOrElse(Nil)
+      val (p, end) = path(s)
+      val params = pathParams(s, end)
+      frameRef(s).save(p, fmt, mode, partBy, s.has("SINGLE"), params)
       // reload with the SAME options (header/delimiter/...), or the read
       // side's defaults could disagree with what was just written; built
       // after the save, so it runs after it
-      if (andUse) Some(w.load(path, fmt, options = params)) else None
+      if (s.has("AND\\s+USE")) Some(w.load(p, fmt, options = params)) else None
     }
 
     /** `[[1,"a"],[2,"b"]]`-style literal rows (reference CREATE DATA,
      * _visitors.py:513-518). Values: long/double/string/bool/NULL. */
     private def parseDataLiteral(s: String): Seq[Seq[Any]] = {
+      val code = lex(s).code
       var i = 0
       def skipWs(): Unit = while (i < s.length && s(i).isWhitespace) i += 1
       def expect(c: Char): Unit = {
@@ -1482,12 +1495,12 @@ object GraftSql {
       }
       def value(): Any = {
         skipWs()
+        require(i < s.length, s"expected a value at $i in: $s")
         s(i) match {
-          case '"' | '\'' =>
-            val q = s(i); i += 1
-            val start = i
-            while (i < s.length && s(i) != q) i += 1
-            val v = s.substring(start, i); i += 1; v
+          case q @ ('"' | '\'') =>
+            val end = code.indexOf(q, i + 1) + 1 // the content is masked
+            require(end > 0, s"unterminated string at $i in: $s")
+            val v = unquote(s.substring(i, end)); i = end; v
           case '[' => list()
           case _ =>
             val start = i
@@ -1523,63 +1536,56 @@ object GraftSql {
 
     /** CREATE [DATA] [[..]] SCHEMA s — literal frame; CREATE USING creator
      * — driver-side creator extension (_visitors.py:499-518). */
-    private def compileCreate(stmt: String): Node = {
-      val usingM = "(?i)^CREATE\\s+USING\\s+".r.findFirstMatchIn(stmt)
-      if (usingM.isDefined) {
-        val (name, params, _) = usingClause(stmt)
+    private def compileCreate(s: Lexed): Node =
+      if (s.find("(?i)^CREATE\\s+USING\\b".r).isDefined) {
+        val (name, params, _) = usingClause(s)
         val c = extensions.creators.getOrElse(name,
           throw new IllegalArgumentException(s"unknown creator '$name'"))
-        node(stmt, Nil)(_ => c.fn(engine, params))
+        node(s, Nil)(_ => c.fn(engine, params))
       } else {
-        val body = "(?i)^CREATE(?:\\s+DATA)?\\s+".r.replaceFirstIn(stmt, "")
-        val schemaIdx = "(?i)\\bSCHEMA\\b".r.findFirstMatchIn(maskQuotes(body))
-          .getOrElse(throw new IllegalArgumentException(s"CREATE requires SCHEMA: $stmt"))
-        val rows = parseDataLiteral(body.substring(0, schemaIdx.start).trim)
-        w.create(rows, body.substring(schemaIdx.end).trim)
+        val start = s.find("(?i)^CREATE(?:\\s+DATA)?\\s+".r).fold(0)(_.end)
+        val schema = s.find("(?i)\\bSCHEMA\\b".r)
+          .getOrElse(throw new IllegalArgumentException(s"CREATE requires SCHEMA: ${s.text}"))
+        val rows = parseDataLiteral(s.text.substring(start, schema.start).trim)
+        w.create(rows, s.text.substring(schema.end).trim)
       }
-    }
 
     /** ZIP df1, df2 [how] BY keys [PRESORT ...] → zipped frame
      * (key cols + __zip_i struct arrays; _visitors.py:520-527). */
-    private def compileZip(stmt: String): Node = {
-      val clipM = "(?i)\\b(INNER|LEFT|RIGHT|FULL|BY|PRESORT)\\b".r
-        .findFirstMatchIn(maskQuotes(stmt))
-      val clipAt = clipM.map(_.start).getOrElse(stmt.length)
-      val sides = dfRefList(stmt, clipAt)
+    private def compileZip(s: Lexed): Node = {
+      val sides = frameRefs(s)
       require(sides.size >= 2, s"ZIP needs at least 2 dataframes, got ${sides.size}")
-      val how = "(?i)\\b(INNER|LEFT\\s+OUTER|RIGHT\\s+OUTER|FULL\\s+OUTER)\\b".r
-        .findFirstIn(maskQuotes(stmt))
-        .map(_.toLowerCase.replaceAll("\\s+", "_")).getOrElse("inner")
-      val keys = kwArg(stmt, "BY").map(splitCols)
+      val how = s.find("(?i)\\b(INNER|LEFT\\s+OUTER|RIGHT\\s+OUTER|FULL\\s+OUTER)\\b".r)
+        .map(_.matched.toLowerCase.replaceAll("\\s+", "_")).getOrElse("inner")
+      val keys = kwArg(s, "BY").map(splitCols)
         .getOrElse(throw new IllegalArgumentException("ZIP requires BY keys"))
-      val presort = partitionSpec(stmt).presort
-      node(stmt, sides)(Transform.zipFrames(_, keys, how, presort))
+      val presort = partitionSpec(s).presort
+      node(s, sides)(Transform.zipFrames(_, keys, how, presort))
     }
 
-    private def compileSelect(stmt: String): Node = {
+    private def compileSelect(s: Lexed): Node = {
       // add an implicit FROM the previous frame if absent. Both the FROM
       // presence check and the clause-insertion point look only at
       // TOP-LEVEL text (parens masked): a FROM inside a subquery must not
       // suppress the implicit FROM, and an ORDER BY inside a window
       // OVER(...) must not become the insertion point.
-      val top = maskParens(stmt)
       val (text, implicitFrom) =
-        if ("(?i)\\bFROM\\b".r.findFirstIn(top).isDefined) (stmt, Nil)
+        if ("(?i)\\bFROM\\b".r.findFirstIn(s.top).isDefined) (s.text, Nil)
         else {
           // insert FROM before any trailing clause (WHERE/GROUP/…), not at
           // the end — "SELECT k WHERE v>1" must become
           // "SELECT k FROM __graft_prev WHERE v>1"
           val m = "(?i)\\b(WHERE|GROUP\\s+BY|HAVING|ORDER\\s+BY|LIMIT)\\b".r
-            .findFirstMatchIn(top)
+            .findFirstMatchIn(s.top)
           val withFrom = m match {
             case Some(mm) =>
-              stmt.substring(0, mm.start) + " FROM __graft_prev " + stmt.substring(mm.start)
-            case None => s"$stmt FROM __graft_prev"
+              s.text.substring(0, mm.start) + " FROM __graft_prev " + s.text.substring(mm.start)
+            case None => s"${s.text} FROM __graft_prev"
           }
           (withFrom, Seq("__graft_prev" -> prev))
         }
       val views = implicitFrom ++ referenced(text)
-      node(stmt, views.map(_._2))(dfs => engine.sqlSelect(text, views.map(_._1).zip(dfs).toMap))
+      node(s, views.map(_._2))(dfs => engine.sqlSelect(text, views.map(_._1).zip(dfs).toMap))
     }
 
     /** The frames a SELECT names, found by the session's SQL parser, the
@@ -1604,49 +1610,30 @@ object GraftSql {
       } catch { case scala.util.control.NonFatal(_) => frames.toSeq }
     }
 
-    /** Blank out quoted text AND everything inside parens (same length as
-     * the input, so match offsets map back to the original). */
-    private def maskParens(s: String): String = {
-      val m = maskQuotes(s).toCharArray
-      var depth = 0
-      var i = 0
-      while (i < m.length) {
-        val c = m(i)
-        if (c == '(') { depth += 1; m(i) = ' ' }
-        else if (c == ')') { depth = math.max(0, depth - 1); m(i) = ' ' }
-        else if (depth > 0) m(i) = ' '
-        i += 1
-      }
-      new String(m)
-    }
-
     /** Full reference PREPARTITION clause
      * (`fugue/sql/_visitors.py:167-175`): `PREPARTITION [HASH|RAND|EVEN|
      * COARSE] [num] [BY cols] [PRESORT ...]` — algo and num are optional
      * prefixes; num may be an arithmetic expression over ROWCOUNT /
      * CONCURRENCY (e.g. `ROWCOUNT/4 + 3`), evaluated by
      * [[PartitionSpec.evalNum]]. */
-    private def partitionSpec(stmt: String): PartitionSpec = {
-      val masked = maskQuotes(stmt)
-      val hasPrep = "(?i)\\bPREPARTITION\\b".r.findFirstIn(masked).isDefined
-      val algo = "(?i)\\bPREPARTITION\\s+(HASH|RAND|EVEN|COARSE)\\b".r
-        .findFirstMatchIn(masked).map(_.group(1).toLowerCase).getOrElse("default")
+    private def partitionSpec(s: Lexed): PartitionSpec = {
+      val algo = s.find("(?i)\\bPREPARTITION\\s+(HASH|RAND|EVEN|COARSE)\\b".r)
+        .map(_.group(1).toLowerCase).getOrElse("default")
       // a num expression starts with a digit, '(' or a ROWCOUNT/CONCURRENCY
       // token — never with BY/PRESORT, so those keywords terminate it
-      val num = ("(?i)\\bPREPARTITION\\b(?:\\s+(?:HASH|RAND|EVEN|COARSE)\\b)?" +
+      val num = s.find(("(?i)\\bPREPARTITION\\b(?:\\s+(?:HASH|RAND|EVEN|COARSE)\\b)?" +
         "\\s+((?:\\d+|ROWCOUNT|CONCURRENCY|\\()" +
-        "(?:\\s*(?:\\d+|ROWCOUNT|CONCURRENCY|[+*/()\\-]))*)").r
-        .findFirstMatchIn(masked).map(_.group(1).trim).getOrElse("0")
+        "(?:\\s*(?:\\d+|ROWCOUNT|CONCURRENCY|[+*/()\\-]))*)").r)
+        .map(s.at(_, 1).trim).getOrElse("0")
       // BY belongs to the clause even with algo/num between (the bare
       // `BY`-adjacent form stays supported); outside a PREPARTITION these
       // statements carry no BY keyword
       val by =
-        if (hasPrep) kwArg(stmt, "BY").map(splitCols)
-          .getOrElse(Nil)
+        if (s.has("PREPARTITION")) kwArg(s, "BY").map(splitCols).getOrElse(Nil)
         else Nil
-      val presort = "(?i)PRESORT\\s+((?:(?:`(?:[^`]|``)*`|[A-Za-z0-9_]+)(?:\\s+(?:ASC|DESC))?\\s*,?\\s*)+)".r
-        .findFirstMatchIn(stmt)
-        .map(m => PartitionSpec.parsePresort(m.group(1))).getOrElse(Nil)
+      // a NULLS FIRST|LAST clause (TAKE) ends the list
+      val presort = s.find("(?i)\\bPRESORT\\s+((?:(?!NULLS?\\b)[\\w`]+(?:\\s+(?:ASC|DESC))?\\s*,?\\s*)+)".r)
+        .map(m => PartitionSpec.parsePresort(s.at(m, 1))).getOrElse(Nil)
       PartitionSpec(algo = algo, num = num, by = by, presort = presort)
     }
 
@@ -1657,12 +1644,14 @@ object GraftSql {
      * with an explicit message rather than silently running on the wrong
      * engine. A standalone CONNECT pins the engine for what follows —
      * also a no-op here. */
-    private def compileConnect(stmt: String, label: String): Option[Node] = {
-      val m = "(?is)^CONNECT\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s*(\\([^)]*\\))?\\s*(.*)$".r
-        .findFirstMatchIn(stmt).getOrElse(throw new IllegalArgumentException(
-          s"CONNECT requires an engine name: $stmt"))
+    private def compileConnect(s: Lexed, label: String): Option[Node] = {
+      val m = s.find("(?i)^CONNECT\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s*".r)
+        .getOrElse(throw new IllegalArgumentException(
+          s"CONNECT requires an engine name: ${s.text}"))
       val engineName = m.group(1).toLowerCase
-      val rest = m.group(3).trim
+      val end = if (s.code.startsWith("(", m.end)) s.groupEnd(m.end) else m.end
+      require(end > 0, s"unbalanced parenthesis in: ${s.text}")
+      val rest = s.text.substring(end).trim
       val sparkAliases = Set("spark", "sparksql", "spark_sql", "native", "graft")
       if (!sparkAliases.contains(engineName))
         throw new IllegalArgumentException(
@@ -1672,41 +1661,36 @@ object GraftSql {
       if (rest.isEmpty) None else body(rest, label)
     }
 
-    private def compileTake(stmt: String): Node = {
+    private def compileTake(s: Lexed): Node = {
       // getOrElse, not .get: a bare `TAKE` must produce a statement error,
       // not NoSuchElementException (found by the fuzz spec)
-      val n = "(?i)TAKE\\s+(\\d+)".r.findFirstMatchIn(stmt).getOrElse(
+      val n = s.find("(?i)TAKE\\s+(\\d+)".r).getOrElse(
         throw new IllegalArgumentException(
-          s"TAKE requires a row count: $stmt")).group(1).toInt
-      val naPos = if ("(?i)NULLS?\\s+FIRST".r.findFirstIn(stmt).isDefined) "first" else "last"
-      // remove the NULLS clause so the greedy PRESORT column list cannot
-      // swallow it as extra sort columns
-      val cleaned = "(?i)NULLS?\\s+(FIRST|LAST)".r.replaceAllIn(stmt, "")
-      val spec = partitionSpec(cleaned)
-      unary(stmt, ref(kwArg(cleaned, "FROM")))(engine.take(_, n, spec, naPos))
+          s"TAKE requires a row count: ${s.text}")).group(1).toInt
+      val naPos = if (s.has("NULLS?\\s+FIRST")) "first" else "last"
+      val spec = partitionSpec(s)
+      unary(s, frameRef(s))(engine.take(_, n, spec, naPos))
     }
 
-    private def compileSample(stmt: String): Node = {
-      val replace = stmt.toUpperCase.contains("REPLACE")
-      val seed = "(?i)SEED\\s+(\\d+)".r.findFirstMatchIn(stmt).map(_.group(1).toLong)
-      val pct = "(?i)([\\d.]+)\\s*PERCENT".r.findFirstMatchIn(stmt).map(_.group(1).toDouble)
-      val rows = "(?i)(\\d+)\\s*ROWS".r.findFirstMatchIn(stmt).map(_.group(1).toLong)
+    private def compileSample(s: Lexed): Node = {
+      val replace = s.has("REPLACE")
+      val seed = s.find("(?i)SEED\\s+(\\d+)".r).map(_.group(1).toLong)
+      val pct = s.find("(?i)([\\d.]+)\\s*PERCENT".r).map(_.group(1).toDouble)
+      val rows = s.find("(?i)(\\d+)\\s*ROWS".r).map(_.group(1).toLong)
       // grammar allows the positional form `SAMPLE df ...` as well as FROM
-      unary(stmt, ref(kwArg(stmt, "FROM").orElse(wordAfter(stmt, 1))))(
+      unary(s, frameRef(s))(
         engine.sample(_, n = rows, frac = pct.map(_ / 100.0), replace = replace, seed = seed))
     }
 
-    private def compileDropna(stmt: String): Node = {
-      val how = if ("(?i)^DROPNA\\s+ALL\\b".r.findFirstIn(stmt.trim).isDefined) "all" else "any"
-      val subset = kwArg(stmt, "ON").map(splitCols).getOrElse(Nil)
-      unary(stmt, ref(kwArg(stmt, "FROM")))(engine.dropna(_, how, subset = subset))
+    private def compileDropna(s: Lexed): Node = {
+      val how = if (s.find("(?i)^DROPNA\\s+ALL\\b".r).isDefined) "all" else "any"
+      val subset = kwArg(s, "ON").map(splitCols).getOrElse(Nil)
+      unary(s, frameRef(s))(engine.dropna(_, how, subset = subset))
     }
 
-    private def compileFillna(stmt: String): Node = {
-      // name pairs, not parseParams: keys may be backtick-quoted
-      val params = kwArg(stmt, "PARAMS")
-        .map(s => parseNamePairs(s).toMap).getOrElse(Map.empty)
-      unary(stmt, ref(kwArg(stmt, "FROM"))) { d =>
+    private def compileFillna(s: Lexed): Node = {
+      val params = kwArg(s, "PARAMS").map(parseParams(_).toMap).getOrElse(Map.empty)
+      unary(s, frameRef(s)) { d =>
         val typed: Map[String, Any] = params.map { case (k, v) =>
           k -> (d.schema(k).dataType match {
             case org.apache.spark.sql.types.DoubleType | org.apache.spark.sql.types.FloatType => v.toDouble
@@ -1718,50 +1702,36 @@ object GraftSql {
       }
     }
 
-    private def compileRename(stmt: String): Node = {
-      // name pairs, not parseParams: either side may be backtick-quoted
-      val pairs = kwArg(stmt, "COLUMNS")
-        .map(s => parseNamePairs(s).map { case (k, v) =>
-          k -> unquoteName(v)
-        }.toMap).getOrElse(Map.empty)
-      unary(stmt, ref(kwArg(stmt, "FROM")))(engine.rename(_, pairs))
+    private def compileRename(s: Lexed): Node = {
+      val pairs = kwArg(s, "COLUMNS").map(parseParams(_).toMap).getOrElse(Map.empty)
+      unary(s, frameRef(s))(engine.rename(_, pairs))
     }
 
-    private def compileAlter(stmt: String): Node = {
-      val casts = kwArg(stmt, "COLUMNS").map(_.trim).getOrElse("")
-      unary(stmt, ref(kwArg(stmt, "FROM")))(engine.alterColumns(_, casts))
+    private def compileAlter(s: Lexed): Node = {
+      val casts = kwArg(s, "COLUMNS").map(_.trim).getOrElse("")
+      unary(s, frameRef(s))(engine.alterColumns(_, casts))
     }
 
-    private def compileDropCols(stmt: String): Node = {
-      val cols = kwArg(stmt, "COLUMNS").map(splitCols).getOrElse(Nil)
-      val ifExists = stmt.toUpperCase.contains("IF EXISTS")
-      unary(stmt, ref(kwArg(stmt, "FROM")))(engine.dropColumns(_, cols, ifExists))
+    private def compileDropCols(s: Lexed): Node = {
+      val cols = kwArg(s, "COLUMNS").map(splitCols).getOrElse(Nil)
+      val ifExists = s.has("IF\\s+EXISTS")
+      unary(s, frameRef(s))(engine.dropColumns(_, cols, ifExists))
     }
 
-    /** SCHEMA hint anywhere after the USING clause, clipped at a following
-     * CALLBACK clause or end-of-statement — uniform for TRANSFORM,
-     * OUTTRANSFORM and COTRANSFORM, multi-line safe. */
-    private def schemaHint(stmt: String, usingEnd: Int): Option[String] =
-      "(?si)\\bSCHEMA\\s+(.+?)\\s*(?=\\bCALLBACK\\b|$)".r
-        .findFirstMatchIn(stmt.substring(usingEnd))
-        .map(_.group(1).trim.replaceAll("\\s*\\n\\s*", ""))
-
-    private def callbackClause(stmt: String): Option[String] =
-      "(?i)\\bCALLBACK\\s+([A-Za-z_][A-Za-z0-9_.]*)".r
-        .findFirstMatchIn(maskQuotes(stmt)).map(_.group(1))
-
-    /** The input of a TRANSFORM / OUTTRANSFORM statement. */
-    private def transformInput(stmt: String): Node =
-      ref(kwArg(stmt.substring(0, usingClause(stmt)._3.start), "FROM")
-        .orElse(wordAfter(stmt, 1)))
+    /** SCHEMA hint after the USING clause, clipped at a following CALLBACK
+     * clause or end-of-statement — uniform for TRANSFORM, OUTTRANSFORM and
+     * COTRANSFORM, multi-line safe. */
+    private def schemaHint(s: Lexed): Option[String] =
+      s.find("(?si)\\bSCHEMA\\s+(.+?)\\s*(?=\\bCALLBACK\\b|$)".r)
+        .map(s.at(_, 1).trim.replaceAll("\\s*\\n\\s*", ""))
 
     /** Wire a transformer (with optional CALLBACK) into a mapPartitions
      * plan over `d`. Shared by TRANSFORM and OUTTRANSFORM. */
-    private def buildTransform(stmt: String, d: DataFrame): DataFrame = {
-      val (name, params, m) = usingClause(stmt)
+    private def buildTransform(s: Lexed, d: DataFrame): DataFrame = {
+      val (name, params, usingAt) = usingClause(s)
       // clip at USING so the greedy PRESORT column list cannot swallow the
       // USING/SCHEMA clauses
-      val spec = partitionSpec(stmt.substring(0, m.start))
+      val spec = partitionSpec(s.take(usingAt))
       // zipped input (from ZIP): route through the cotransformer registry
       if (Transform.isZipped(d)) {
         val ct = extensions.cotransformers.getOrElse(name,
@@ -1783,7 +1753,7 @@ object GraftSql {
         graft.transform.ExtensionValidation.validate(
           ct.validation.filter(_._1.startsWith("input_")),
           zipSpec, sideSchema(zipCols(1)))
-        val out = schemaHint(stmt, m.end).map(SchemaExpr.parse)
+        val out = schemaHint(s).map(SchemaExpr.parse)
           .getOrElse(ct.outputSchema(sideSchema(zipCols(0)), sideSchema(zipCols(1)), params))
         // the statement's PRESORT must actually order the zipped arrays the
         // cotransformer iterates, not merely satisfy presort_has/is rules
@@ -1793,10 +1763,10 @@ object GraftSql {
       val t = transformers.getOrElse(name,
         throw new IllegalArgumentException(s"unknown transformer '$name'"))
       graft.transform.ExtensionValidation.validate(t.validation, spec, d.schema)
-      val outSchema = schemaHint(stmt, m.end)
+      val outSchema = schemaHint(s)
         .map(h => SchemaExpr.applyHint(d.schema, h))
         .getOrElse(t.outputSchema(d.schema, params))
-      callbackClause(stmt) match {
+      s.find("(?i)\\bCALLBACK\\s+([A-Za-z_][A-Za-z0-9_.]*)".r).map(_.group(1)) match {
         case Some(cbName) =>
           val handler = extensions.callbacks.getOrElse(cbName,
             throw new IllegalArgumentException(s"unknown callback handler '$cbName'"))
@@ -1810,75 +1780,51 @@ object GraftSql {
       }
     }
 
-    private def compileTransform(stmt: String): Node =
-      unary(stmt, transformInput(stmt))(buildTransform(stmt, _))
+    private def compileTransform(s: Lexed): Node =
+      unary(s, frameRef(s))(buildTransform(s, _))
 
     /** OUTTRANSFORM: run the transformer for its side effects (callbacks),
      * discard rows, deliver callback messages (_visitors.py:453-477). */
-    private def compileOutTransform(stmt: String): Unit =
-      w.output(Seq(transformInput(stmt)), "outtransform") { dfs =>
-        buildTransform(stmt, dfs.head).foreach(_ => ()) // force the action; output is discarded
+    private def compileOutTransform(s: Lexed): Unit =
+      w.output(Seq(frameRef(s)), "outtransform") { dfs =>
+        buildTransform(s, dfs.head).foreach(_ => ()) // force the action; output is discarded
         drainCallbacks()
       }
 
     /** PRINT [n ROWS] [FROM] [df, df2] [ROWCOUNT] [TITLE "t"]
      * (_visitors.py:546-559). */
-    private def compilePrint(stmt: String): Unit = {
-      val masked = maskQuotes(stmt)
-      val n = "(?i)PRINT\\s+(\\d+)\\s+ROWS?".r.findFirstMatchIn(masked)
-        .map(_.group(1).toInt).getOrElse(10)
-      val withCount = "(?i)\\bROWCOUNT\\b".r.findFirstIn(masked).isDefined
-      val title = "(?i)TITLE\\s+\"([^\"]*)\"".r.findFirstMatchIn(stmt).map(_.group(1))
-      val names = masked.split("[\\s,]+").filter(frames.contains).distinct.toSeq
-      val targets = if (names.isEmpty) Seq(prev) else names.map(frames(_))
-      w.show(targets, n, withCount, title.getOrElse(""))
+    private def compilePrint(s: Lexed): Unit = {
+      val n = s.find("(?i)PRINT\\s+(\\d+)\\s+ROWS?".r).map(_.group(1).toInt).getOrElse(10)
+      val title = s.find("(?i)\\bTITLE\\s+".r).flatMap(m => literalAt(s, m.end)).map(_._1)
+      w.show(frameRefs(s).distinct, n, s.has("ROWCOUNT"), title.getOrElse(""))
     }
 
-    /** USING-clause parse shared by the extension statements. */
-    private def usingClause(stmt: String): (String, Map[String, String], scala.util.matching.Regex.Match) = {
-      val m = "(?i)USING\\s+([A-Za-z_][A-Za-z0-9_]*)(?:\\s*\\(([^)]*)\\))?".r
-        .findFirstMatchIn(stmt)
-        .getOrElse(throw new IllegalArgumentException(s"statement requires USING: $stmt"))
-      (m.group(1), Option(m.group(2)).map(parseParams).getOrElse(Map.empty), m)
+    /** `USING name[(k:v,..)]`: the name, its params and where the clause
+     * starts. */
+    private def usingClause(s: Lexed): (String, Map[String, String], Int) = {
+      val m = s.find("(?i)\\bUSING\\s+([A-Za-z_][A-Za-z0-9_]*)\\s*".r)
+        .getOrElse(throw new IllegalArgumentException(s"statement requires USING: ${s.text}"))
+      val params = if (s.code.startsWith("(", m.end)) groupParams(s, m.end) else Map.empty[String, String]
+      (m.group(1), params, m.start)
     }
 
-    /** Comma-separated df references between the statement keyword and the
-     * given clip position (normally the USING clause). */
-    private def dfRefList(stmt: String, clipAt: Int): Seq[Node] = {
-      val head = stmt.substring(0, clipAt).split("\\s+", 2).lift(1).getOrElse("")
-      val names = head.split(",").iterator.map(_.trim.split("\\s+").headOption.getOrElse(""))
-        .takeWhile(t => t.nonEmpty &&
-          t.forall(c => c.isLetterOrDigit || c == '_') && !t.forall(_.isDigit) &&
-          !NonDfTokens.contains(t.toUpperCase))
-        .toSeq
-      if (names.isEmpty) Seq(prev)
-      else names.map { n =>
-        // every explicitly referenced name must resolve — a typo must
-        // error, not silently process the previous frame
-        require(frames.contains(n), s"unknown dataframe '$n' in: ${stmt.trim}")
-        frames(n)
-      }
-    }
-
-    private def compileCoTransform(stmt: String): Node = {
-      val (name, params, m) = usingClause(stmt)
+    private def compileCoTransform(s: Lexed): Node = {
+      val (name, params, usingAt) = usingClause(s)
       val t = extensions.cotransformers.getOrElse(name,
         throw new IllegalArgumentException(s"unknown cotransformer '$name'"))
-      val sides = dfRefList(stmt, m.start)
+      val sides = frameRefs(s)
       require(sides.size == 2, s"COTRANSFORM needs exactly 2 dataframes, got ${sides.size}")
-      val keys = kwArg(stmt.substring(0, m.start), "BY")
-        .map(_.split(",").map(_.trim).toSeq)
+      val head = s.take(usingAt)
+      val keys = kwArg(head, "BY").map(splitCols)
         .getOrElse(throw new IllegalArgumentException("COTRANSFORM requires BY keys"))
-      val ctSpec = PartitionSpec(by = keys,
-        presort = partitionSpec(stmt.substring(0, m.start)).presort)
-      val how = "(?i)\\b(INNER|LEFT_OUTER|RIGHT_OUTER|FULL_OUTER|LEFT OUTER|RIGHT OUTER|FULL OUTER)\\b".r
-        .findFirstIn(maskQuotes(stmt.substring(0, m.start)))
-        .map(_.toLowerCase.replace(' ', '_')).getOrElse("inner")
-      node(stmt, sides) { case Seq(l, r) =>
+      val ctSpec = PartitionSpec(by = keys, presort = partitionSpec(head).presort)
+      val how = head.find("(?i)\\b(INNER|LEFT_OUTER|RIGHT_OUTER|FULL_OUTER|LEFT OUTER|RIGHT OUTER|FULL OUTER)\\b".r)
+        .map(_.matched.toLowerCase.replace(' ', '_')).getOrElse("inner")
+      node(s, sides) { case Seq(l, r) =>
         graft.transform.ExtensionValidation.validate(t.validation, ctSpec, l.schema)
         graft.transform.ExtensionValidation.validate(
           t.validation.filter(_._1.startsWith("input_")), ctSpec, r.schema)
-        val out = schemaHint(stmt, m.end).map(SchemaExpr.parse)
+        val out = schemaHint(s).map(SchemaExpr.parse)
           .getOrElse(t.outputSchema(l.schema, r.schema, params))
         // the statement's PRESORT must actually order the cogrouped
         // iterators, not merely satisfy presort_has/is validation
@@ -1887,76 +1833,59 @@ object GraftSql {
       }
     }
 
-    private def compileProcess(stmt: String): Node = {
-      val (name, params, m) = usingClause(stmt)
+    private def compileProcess(s: Lexed): Node = {
+      val (name, params, _) = usingClause(s)
       val p = extensions.processors.getOrElse(name,
         throw new IllegalArgumentException(s"unknown processor '$name'"))
-      node(stmt, dfRefList(stmt, m.start))(p.fn(engine, _, params))
+      node(s, frameRefs(s))(p.fn(engine, _, params))
     }
 
     /** A module that returns None passes its first input through, as an
      * output node does. */
-    private def compileSub(stmt: String): Node = {
-      val (name, params, m) = usingClause(stmt)
+    private def compileSub(s: Lexed): Node = {
+      val (name, params, _) = usingClause(s)
       val md = extensions.modules.getOrElse(name,
         throw new IllegalArgumentException(s"unknown module '$name'"))
-      node(stmt, dfRefList(stmt, m.start))(dfs => md.fn(engine, dfs, params).getOrElse(dfs.head))
+      node(s, frameRefs(s))(dfs => md.fn(engine, dfs, params).getOrElse(dfs.head))
     }
 
-    private def compileOutput(stmt: String): Unit = {
-      val (name, params, m) = usingClause(stmt)
+    private def compileOutput(s: Lexed): Unit = {
+      val (name, params, _) = usingClause(s)
       val o = extensions.outputters.getOrElse(name,
         throw new IllegalArgumentException(s"unknown outputter '$name'"))
-      w.output(dfRefList(stmt, m.start), name)(o.fn(_, params))
+      w.output(frameRefs(s), name)(o.fn(_, params))
     }
-
-    /** The remaining token that names a known dataframe, after statement
-     * keywords are stripped (for keyword-prefixed statements where the df
-     * position varies). */
-    private def trailingDfRef(stmt: String, keywords: Set[String]): Option[String] =
-      maskQuotes(stmt).split("[\\s,]+")
-        .filterNot(t => keywords.contains(t.toUpperCase))
-        .find(frames.contains)
 
     /** WEAK CHECKPOINT [LAZY] → persist; [STRONG] CHECKPOINT → parquet
      * round-trip (lineage break); DETERMINISTIC CHECKPOINT ["ns"] → parquet
      * reused across runs, keyed by the Workflow rule (the namespace is part
      * of the statement text, so of the key) (reference checkpoint keywords,
      * _visitors.py:249-282, _checkpoint.py:38-108). */
-    private def compileCheckpoint(stmt: String): Node = {
-      val masked = maskQuotes(stmt).toUpperCase
-      val kws = Set("WEAK", "STRONG", "DETERMINISTIC", "CHECKPOINT", "LAZY",
-        "SINGLE", "PREPARTITION", "BY")
-      val d = unary(stmt, ref(trailingDfRef(stmt, kws)))(identity)
-      if (masked.startsWith("WEAK")) d.persist(eager = "\\bLAZY\\b".r.findFirstIn(masked).isEmpty)
-      else if (masked.startsWith("DETERMINISTIC")) d.deterministicCheckpoint()
-      else { // STRONG or bare CHECKPOINT [SINGLE] [PREPARTITION BY ..]
-        val single = "\\bSINGLE\\b".r.findFirstIn(masked).isDefined
-        val partBy = kwArg(stmt, "PREPARTITION\\s+BY")
-          .map(_.split(",").map(_.trim).toSeq).getOrElse(Nil)
-        d.checkpoint(partBy, single)
-      }
+    private def compileCheckpoint(kw: String, s: Lexed): Node = {
+      val d = unary(s, frameRef(s))(identity)
+      if (kw == "WEAK") d.persist(eager = !s.has("LAZY"))
+      else if (kw == "DETERMINISTIC") d.deterministicCheckpoint()
+      else // STRONG or bare CHECKPOINT [SINGLE] [PREPARTITION BY ..]
+        d.checkpoint(kwArg(s, "PREPARTITION\\s+BY").map(splitCols).getOrElse(Nil), s.has("SINGLE"))
     }
 
     /** YIELD [LOCAL] [DATAFRAME|FILE|TABLE] [df] AS name
      * (_visitors.py:284-299). FILE materializes to parquet and yields the
      * re-loaded handle; TABLE saves to the session catalog; LOCAL
      * materializes in this session so the yielded frame no longer depends
-     * on upstream lineage. */
-    private def compileYield(stmt: String): Unit = {
-      val name = "(?i)AS\\s+([A-Za-z_][A-Za-z0-9_]*)".r.findFirstMatchIn(stmt)
-        .map(_.group(1))
-        .getOrElse(throw new IllegalArgumentException(s"YIELD requires AS name: $stmt"))
-      val masked = maskQuotes(stmt).toUpperCase
-      // search only BEFORE the AS clause (the yield name must not shadow a
-      // df of the same name — `YIELD a AS a` must resolve df `a`)
-      val kws = Set("YIELD", "LOCAL", "DATAFRAME", "FILE", "TABLE", "AS")
-      val d = ref(trailingDfRef(stmt.substring(0, "(?i)\\bAS\\b".r
-        .findFirstMatchIn(masked).map(_.start).getOrElse(stmt.length)), kws))
-      def has(kw: String) = s"\\b$kw\\b".r.findFirstIn(masked).isDefined
-      if (has("FILE")) d.yieldFileAs(name)
-      else if (has("TABLE")) d.yieldTableAs(name)
-      else d.yield_(name, asLocal = has("LOCAL"))
+     * on upstream lineage. Later statements may read the frame by its
+     * yield name. */
+    private def compileYield(s: Lexed): Unit = {
+      val as = s.find("(?i)\\bAS\\s+([A-Za-z_][A-Za-z0-9_]*)".r)
+        .getOrElse(throw new IllegalArgumentException(s"YIELD requires AS name: ${s.text}"))
+      val name = as.group(1)
+      // the yield name is not a dataframe position: `YIELD a AS a` reads df `a`
+      val head = s.take(as.start)
+      val d = frameRef(head)
+      frames(name) = d
+      if (head.has("FILE")) d.yieldFileAs(name)
+      else if (head.has("TABLE")) d.yieldTableAs(name)
+      else d.yield_(name, asLocal = head.has("LOCAL"))
     }
   }
 }

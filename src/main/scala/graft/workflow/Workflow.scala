@@ -41,8 +41,7 @@ import Workflow._
  */
 final class Workflow(
     val engine: GraftEngine,
-    checkpointDir: String = Materialize.checkpointRoot,
-    autoPersist: Boolean = true) {
+    checkpointDir: String = Materialize.checkpointRoot) {
 
   private val nodes = mutable.ArrayBuffer.empty[Node]
   private val yields = mutable.LinkedHashMap.empty[String, Node]
@@ -318,7 +317,7 @@ final class Workflow(
         }
         case NoMat =>
           val o = compute(n)
-          if (autoPersist && outDeg(n.uuid) > 1) engine.persist(o) else o
+          if (outDeg(n.uuid) > 1) engine.persist(o) else o
       }
       // a reused deterministic checkpoint must not silently drop the
       // user's broadcast hint either

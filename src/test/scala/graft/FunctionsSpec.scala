@@ -52,15 +52,13 @@ class FunctionsSpec extends SparkTestBase {
         .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(pf === co, s"threshold $t")
     }
-    // all three public strategies agree end-to-end
+    // the public entry point's routed answer equals both arms end-to-end
     val auto = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5)
       .select("id_a", "id_b").collect().toSet
-    for (s <- Seq("cooccur", "prefix"))
-      assert(Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5, strategy = s)
-        .select("id_a", "id_b").collect().toSet === auto, s"strategy $s")
-    intercept[IllegalArgumentException] {
-      Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5, strategy = "nope")
-    }
+    assert(Dedup.ngramJaccardCooccur(sigs, 0.5, Int.MaxValue)
+      .select("id_a", "id_b").collect().toSet === auto, "cooccur arm")
+    assert(Dedup.ngramJaccardPrefixFiltered(sigs, 0.5)
+      .select("id_a", "id_b").collect().toSet === auto, "prefix arm")
   }
 
   test("prefix path at an FP-hostile exact threshold boundary (0.55)") {
@@ -1846,6 +1844,19 @@ class FunctionsSpec extends SparkTestBase {
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(out2(1L) === "a b c d e")
     assert(out2(2L) === "z z2")
+  }
+
+  test("span stats and span removal add no CacheManager entry") {
+    // a Dataset persist stays in the CacheManager until unpersist, so a
+    // library function that persists and returns leaks one entry per input
+    // numCachedEntries is private[sql] in Scala, public in bytecode
+    val cache = spark.sharedState.cacheManager
+    def entries = cache.getClass.getMethod("numCachedEntries").invoke(cache).asInstanceOf[Int]
+    val before = entries
+    val d = df(Seq(Seq(1L, "a b c d"), Seq(2L, "a b c")), "doc_id:long,text:str")
+    Dedup.duplicateSpanStats(d, "doc_id", "text", spanTokens = 3).collect()
+    Dedup.removeDuplicateSpans(d, "doc_id", "text", spanTokens = 3).collect()
+    assert(entries === before)
   }
 
   test("sketches: Misra-Gries frequent items honors its deterministic bounds") {

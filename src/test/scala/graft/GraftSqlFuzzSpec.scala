@@ -334,6 +334,91 @@ class GraftSqlFuzzSpec extends SparkTestBase {
     }
   }
 
+  // The dialect's quoting rule: '…', "…" and `…` are opaque (a doubled
+  // delimiter stays inside), so a name or value may hold what would
+  // otherwise be a comment, a separator or a paren.
+  private val oddNameGen: Gen[String] =
+    Gen.oneOf("a--b", "x,y", "p)q", "it's", "b``t", "(c", "d -- e", "f:g")
+  private val quotedValueGen: Gen[String] = Gen.oneOf("'--'", "','", "'a (b) c'",
+    "'it''s'", "\"--\"", "\",\"", "\"a (b) c\"", "\"say \"\"hi\"\"\"", "'x\\'y'")
+  private val quoteNoiseGen: Gen[Seq[String]] = Gen.choose(0, 2).flatMap(n => Gen.listOfN(n,
+    Gen.oneOf("-- it's a `trap", "  -- \"open (", "--)(", "-- `", "")))
+
+  test("fuzz P1q: quoted names, values and strings never split or leak a statement") {
+    // (statement text, logical statement count)
+    val stmtGen: Gen[(String, Int)] = for {
+      n <- identGen
+      m <- identGen
+      odd <- oddNameGen
+      v1 <- quotedValueGen
+      v2 <- quotedValueGen
+      kind <- Gen.choose(0, 5)
+    } yield kind match {
+      case 0 => (s"""$n = CREATE [["$odd"]] SCHEMA p:str""", 1)
+      case 1 => (s"$n = SELECT a AS `$odd`, b FROM $m", 1)
+      case 2 => (s"$n = PROCESS $m USING cap(k:$v1, j:$v2)", 1)
+      case 3 => (s"RENAME COLUMNS a:`$odd` FROM $m", 1)
+      // a keyword-led line inside a quoted string continues the statement
+      case 4 => (s"$n = SELECT 'x ${odd.replace("'", "''")}\nSELECT y' AS s FROM $m", 1)
+      // a line inside an open paren continues it too, quoted parens aside
+      case _ => (s"$n = SELECT `$odd` FROM (\nSELECT a AS `$odd` FROM $m WHERE b = '(')", 1)
+    }
+    val scriptGen: Gen[(String, Seq[String], Int)] = for {
+      stmts <- Gen.choose(1, 5).flatMap(k => Gen.listOfN(k, stmtGen))
+      noise <- Gen.listOfN(stmts.size + 1, quoteNoiseGen)
+    } yield {
+      val body = stmts.zip(noise.tail).flatMap { case ((t, _), ns) => t.split("\n").toSeq ++ ns }
+      ((noise.head ++ body).mkString("\n"), stmts.map(_._1), stmts.map(_._2).sum)
+    }
+    val norm = (s: String) => s.replaceAll("\\s+", " ").trim
+    for (((script, stmts, want), i) <- samples(scriptGen, 150, seed = 9000L).zipWithIndex) {
+      val got = GraftSql.splitStatements(script)
+      assert(got.size === want,
+        s"sample $i split ${got.size} statements, expected $want:\n$script\n--- got:\n${got.mkString("\n###\n")}")
+      // the noise lines are whole comments: what remains is the statements
+      assert(norm(got.mkString(" ")) === norm(stmts.mkString(" ")), s"sample $i content drift")
+    }
+  }
+
+  test("fuzz P3q: mutated scripts with quoted names and values fail cleanly or run") {
+    val base = Seq(
+      "src = CREATE [[1, \"a\"], [2, \"b\"]] SCHEMA v:long,k:str",
+      "sel = SELECT k AS `a--b`, v AS `x,y`, v AS `p)q`, v AS `it's` FROM src",
+      "ren = RENAME COLUMNS k:`a--b` FROM src",
+      "fil = FILLNA PARAMS k:'z,z' FROM src",
+      "PROCESS src USING dedup_exact(keys:'k', id:v)",
+      "PROCESS src USING dedup_exact(keys:\"k,v\", id:\"v\")",
+      "YIELD sel AS out")
+    assert(GraftSql.run(engine, base.mkString("\n")).yields("out").columns.toSeq ===
+      Seq("a--b", "x,y", "p)q", "it's"))
+    val mutGen: Gen[String] = for {
+      lines <- Gen.someOf(base)
+      shuffled <- Gen.oneOf(true, false)
+      extra <- Gen.oneOf("", "SELECT `", "PROCESS src USING dedup_exact(keys:'k",
+        "RENAME COLUMNS k:`x", "CREATE [[\"(\"]] SCHEMA p:str", "TAKE 1 ROWS FROM `src`",
+        "DROP COLUMNS `x,y` FROM sel", "PRINT `sel`", "CREATE [[1, SCHEMA a:long")
+      cut <- Gen.choose(0, 40)
+    } yield {
+      val body = (if (shuffled) lines.reverse else lines) :+ extra
+      val s = body.mkString("\n")
+      if (cut > 0 && cut < s.length) s.dropRight(cut) else s
+    }
+    var ran = 0; var failedClean = 0
+    for ((script, i) <- samples(mutGen, 150, seed = 9500L).zipWithIndex) {
+      try { GraftSql.run(engine, script); ran += 1 }
+      catch {
+        case _: IllegalArgumentException => failedClean += 1
+        case _: org.apache.spark.sql.AnalysisException => failedClean += 1
+        case e: Throwable =>
+          fail(s"sample $i escaped with ${e.getClass.getName}: ${e.getMessage}\n$script")
+      }
+    }
+    info(s"P3q: $ran ran, $failedClean failed cleanly")
+    val junkGen = Gen.listOfN(80, Gen.oneOf(
+      Gen.alphaNumChar, Gen.oneOf(' ', '\n', '"', '\'', '`', '\\', '(', ')', '-', ',', ':'))).map(_.mkString)
+    for (junk <- samples(junkGen, 100, seed = 9700L)) GraftSql.splitStatements(junk) // must not throw
+  }
+
   test("P4: quality-rule DSL junk parses or raises IllegalArgumentException, never escapes") {
     val kinds = Gen.oneOf("not_null", "unique", "completeness", "min", "max",
       "mean", "stddev", "in_set", "distinct", "approx_distinct", "row_count",

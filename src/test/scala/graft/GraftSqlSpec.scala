@@ -9,6 +9,23 @@ class GraftSqlSpec extends SparkTestBase {
 
   private def d1 = df(Seq(Seq("a", 3), Seq("a", 1), Seq("b", 9), Seq("b", 2)), "k:str,v:int")
 
+  private val checkpointRoot = new java.io.File(graft.Materialize.checkpointRoot)
+  private def under(dir: java.io.File): Set[java.io.File] =
+    Option(dir.listFiles).fold(Set.empty[java.io.File])(_.toSet)
+  private val rootAtStart = under(checkpointRoot)
+
+  /** Each test deletes what it added under the checkpoint root and its
+   * `graftsql*` temp inputs, found by listing both before and after it:
+   * deterministic checkpoints are kept by design, and a fresh temp input
+   * keys a fresh one on every run. */
+  override def withFixture(test: NoArgTest): org.scalatest.Outcome = {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def ours = under(checkpointRoot) ++ under(tmp).filter(_.getName.startsWith("graftsql"))
+    val before = ours
+    try super.withFixture(test)
+    finally (ours -- before).foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+  }
+
   test("statement splitting tolerates multi-line SELECT and comments") {
     val stmts = GraftSql.splitStatements(
       """-- a comment
@@ -1707,5 +1724,51 @@ class GraftSqlSpec extends SparkTestBase {
     GraftSql.run(engine,
       "SELECT k, v FROM leak_probe WHERE v > 0", Map("leak_probe" -> d1))
     assert(!engine.spark.catalog.tableExists("leak_probe"))
+  }
+
+  test("a backtick-quoted name may hold --: a SELECT alias and a RENAME target") {
+    val sel = GraftSql.run(engine, "SELECT k AS `a--b` FROM input\nYIELD AS out",
+      Map("input" -> d1))
+    assert(sel.yields("out").columns.toSeq === Seq("a--b"))
+    val ren = GraftSql.run(engine, "RENAME COLUMNS k:`a--b` FROM input\nYIELD AS out",
+      Map("input" -> d1))
+    assert(ren.yields("out").columns.toSeq === Seq("a--b", "v"))
+  }
+
+  test("USING params: a quoted value may hold parens; '…' values equal \"…\" values") {
+    import graft.sql.GraftSql.{Extensions, ProcessorDef}
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Map[String, String]]
+    val exts = Extensions(processors = Map(
+      "cap" -> ProcessorDef { (_, dfs, p) => seen += p; dfs.head }))
+    GraftSql.runWith(engine, Seq(
+      """PROCESS input USING cap(title:"a (b) c", n:3)""",
+      """PROCESS input USING cap(title:'a (b) c', n:3)""",
+      """PROCESS input USING cap(sep:',', dash:'--', q:"it's", d:'say "hi"')""",
+      "PROCESS input USING cap(sep:\",\", dash:\"--\", q:'it''s', d:\"say \"\"hi\"\"\")"
+    ).mkString("\n"), Map("input" -> d1), exts)
+    assert(seen.toSeq === Seq(
+      Map("title" -> "a (b) c", "n" -> "3"),
+      Map("title" -> "a (b) c", "n" -> "3"),
+      Map("sep" -> ",", "dash" -> "--", "q" -> "it's", "d" -> "say \"hi\""),
+      Map("sep" -> ",", "dash" -> "--", "q" -> "it's", "d" -> "say \"hi\"")))
+  }
+
+  test("a misspelled dataframe name raises in every YIELD and CHECKPOINT form and in PRINT") {
+    for (bad <- Seq("YIELD tpyo AS out", "YIELD DATAFRAME tpyo AS out",
+        "YIELD LOCAL tpyo AS out", "YIELD LOCAL DATAFRAME tpyo AS out",
+        "YIELD FILE tpyo AS out", "YIELD TABLE tpyo AS out",
+        "CHECKPOINT tpyo", "WEAK CHECKPOINT tpyo", "WEAK CHECKPOINT LAZY tpyo",
+        "STRONG CHECKPOINT tpyo", "STRONG CHECKPOINT SINGLE tpyo",
+        "DETERMINISTIC CHECKPOINT tpyo", "DETERMINISTIC CHECKPOINT \"ns\" tpyo",
+        "PRINT tpyo", "PRINT 2 ROWS FROM tpyo", "PRINT input, tpyo ROWCOUNT")) {
+      val ex = intercept[IllegalArgumentException](GraftSql.run(engine,
+        s"SELECT k, v FROM input\n$bad", Map("input" -> d1)))
+      assert(ex.getMessage.contains("unknown dataframe 'tpyo'"), bad)
+    }
+  }
+
+  // registered last: runs after every other test of the suite
+  test("the suite leaves the checkpoint root as it found it") {
+    assert(under(checkpointRoot) === rootAtStart)
   }
 }
