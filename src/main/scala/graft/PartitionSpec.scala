@@ -34,9 +34,9 @@ final case class PartitionSpec(
 
   /** Presort as Spark sort columns, always with explicit null placement:
    * nulls LAST in BOTH directions (pandas `na_position="last"` convention
-   * of the reference; execution_engine.py:655-665). The cogroup/zip
-   * presort comparators (Transform.rowSorter/sortArr) implement the same
-   * convention — keep them in sync. */
+   * of the reference; execution_engine.py:655-665). `Transform.coMap`
+   * sorts its cogroup with these columns; `Transform.sortArr` is the one
+   * copy of the order for ZIP's materialized arrays. */
   def presortCols: Seq[Column] =
     presort.map { case (c, asc) => if (asc) col(c).asc_nulls_last else col(c).desc_nulls_last }
 

@@ -28,11 +28,7 @@ object Plans {
     * untimed operators, e.g. s06's salted pairs), and a name that is not
     * declared fails the run instead of being skipped. */
   def queryNames(subset: Option[String]): Seq[String] = subset match {
-    case Some(list) =>
-      val names = list.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
-      val unknown = names.filterNot(SparkEntry.queries.contains)
-      require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
-      names
+    case Some(list) => SparkEntry.queryNames(list)
     case None =>
       SparkEntry.benchQueries ++ TpchSuite.sql.keys.toSeq.sorted.map(n => s"${n}_tpch")
   }

@@ -64,6 +64,16 @@ object SparkEntry {
     families.map(_._3).reduce(_ ++ _) ++
       TpchSuite.sql.map { case (n, q) => s"${n}_tpch" -> q }
 
+  /** The names of a comma-separated list, in order. Fails on a name that
+   * is not a query, listing every such name: a typo must not take a query
+   * out of a run unnoticed. */
+  def queryNames(list: String): Seq[String] = {
+    val names = list.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+    names
+  }
+
   def benchQueries: Seq[String] = Seq(
     "q01_agg", "q02_filter", "q06_join_inner", "q20_take_per_key",
     "q22_sql", "q23_transform", "q24_comap",

@@ -4,12 +4,15 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** The optional third argument: a comma-separated query-name filter.
+   * An unknown name fails here, before Spark starts, listing the unknown
+   * names. */
+  def queryFilter(args: Seq[String]): Option[Set[String]] =
+    args.lift(2).map(SparkEntry.queryNames(_).toSet)
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query-name filter (local iteration
-    // only — the driver always runs the full dump with 2 args)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
+    val only = queryFilter(args.toSeq)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -107,3 +107,20 @@ trait GraftEngine {
       singleFile: Boolean = false,
       options: Map[String, String] = Map.empty): Unit
 }
+
+object GraftEngine {
+  /** The one reader of a join-type word, for join, zip and cogroup alike:
+   * case-, space- and underscore-insensitive ("left outer", "LEFT_OUTER",
+   * "leftouter" and "left" are one type), returned as Spark's name. */
+  def joinType(how: String): String =
+    how.trim.toLowerCase.replaceAll("[\\s_]", "") match {
+      case "inner" => "inner"
+      case "leftouter" | "left" => "left_outer"
+      case "rightouter" | "right" => "right_outer"
+      case "fullouter" | "full" | "outer" => "full_outer"
+      case "cross" => "cross"
+      case "semi" | "leftsemi" => "left_semi"
+      case "anti" | "leftanti" => "left_anti"
+      case _ => throw new IllegalArgumentException(s"unknown join type '$how'")
+    }
+}

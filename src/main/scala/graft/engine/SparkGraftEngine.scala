@@ -128,23 +128,9 @@ class SparkGraftEngine(val spark: SparkSession) extends GraftEngine {
 
   // ---- relational ops --------------------------------------------------
 
-  // space- and underscore-insensitive, matching Transform's normalizer so
-  // "left outer" is accepted by join, zip and cotransform alike
-  private def normalizeHow(how: String): String =
-    how.trim.toLowerCase.replaceAll("[ _]", "") match {
-      case "inner" => "inner"
-      case "leftouter" | "left" => "left_outer"
-      case "rightouter" | "right" => "right_outer"
-      case "fullouter" | "full" | "outer" => "full_outer"
-      case "cross" => "cross"
-      case "semi" | "leftsemi" => "left_semi"
-      case "anti" | "leftanti" => "left_anti"
-      case other => throw new IllegalArgumentException(s"unknown join type '$other'")
-    }
-
   def join(df1: DataFrame, df2: DataFrame, how: String,
       on: Seq[String] = Nil): DataFrame = {
-    val h = normalizeHow(how)
+    val h = GraftEngine.joinType(how)
     val keys = df1.columns.filter(df2.columns.contains).toSeq
     if (on.nonEmpty)
       require(on.toSet == keys.toSet,

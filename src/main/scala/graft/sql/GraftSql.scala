@@ -6,6 +6,7 @@ import graft.schema.SchemaExpr
 import graft.transform.{PartitionCursor, Transform}
 import graft.workflow.Workflow
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.{ArrayType, StructType}
 import scala.collection.mutable
 import scala.util.matching.Regex
 
@@ -58,7 +59,8 @@ import scala.util.matching.Regex
  *   SAVE [AND USE] [df] [PREPARTITION BY k,..] OVERWRITE|APPEND "path" [SINGLE] [(k:v,..)]
  *   SELECT ... [FROM df ...]          -- passthrough; implicit FROM previous
  *   CREATE [DATA] [[..],[..]] SCHEMA s | CREATE USING creator[(k:v,..)]
- *   ZIP df1, df2 [INNER|LEFT OUTER|RIGHT OUTER|FULL OUTER] BY k,.. [PRESORT c,..]
+ *   ZIP df1, df2 [INNER|LEFT|RIGHT|FULL [OUTER]] BY k,.. [PRESORT c,..]
+ *   COTRANSFORM df1, df2 [INNER|LEFT|RIGHT|FULL [OUTER]] BY k,.. [PRESORT c,..] USING ext[(k:v,..)] [SCHEMA s]
  *   TAKE n ROW[S] [FROM df] [PREPARTITION BY k,..] [PRESORT c [ASC|DESC],..] [NULLS FIRST|LAST]
  *   SAMPLE [df] [REPLACE] x PERCENT | n ROWS [SEED n]
  *   DROPNA [ANY|ALL] [ON a,b] [FROM df]
@@ -1380,7 +1382,15 @@ object GraftSql {
       "REPLACE", "SEED", "LAZY", "NULLS", "NULL", "FIRST", "LAST", "ALL", "ANY",
       "IF", "EXISTS", "DATA", "WEAK", "STRONG", "DETERMINISTIC", "CHECKPOINT",
       "LOCAL", "DATAFRAME", "FILE", "TABLE", "INNER", "LEFT", "RIGHT", "FULL",
-      "OUTER", "CROSS", "LEFT_OUTER", "RIGHT_OUTER", "FULL_OUTER", "ROWCOUNT")
+      "OUTER", "CROSS", "LEFT_OUTER", "RIGHT_OUTER", "FULL_OUTER", "SEMI", "ANTI",
+      "LEFT_SEMI", "LEFT_ANTI", "ROWCOUNT")
+
+    /** The join word of a ZIP or COTRANSFORM (`LEFT OUTER`, `left_outer`,
+     * `FULL`, `CROSS`, ...; inner if none). The zip operator reads it with
+     * `engine.join`'s normalizer and rejects what it cannot honour. */
+    private def joinWord(s: Lexed): String =
+      s.find("(?i)\\b(INNER|CROSS|SEMI|ANTI|OUTER|(?:LEFT|RIGHT|FULL)(?:[\\s_]+(?:OUTER|SEMI|ANTI))?)\\b".r)
+        .fold("inner")(_.matched)
 
     /** The frames a statement reads. Its dataframe positions are the words
      * after its keyword up to the first clause word, and the words after
@@ -1555,12 +1565,10 @@ object GraftSql {
     private def compileZip(s: Lexed): Node = {
       val sides = frameRefs(s)
       require(sides.size >= 2, s"ZIP needs at least 2 dataframes, got ${sides.size}")
-      val how = s.find("(?i)\\b(INNER|LEFT\\s+OUTER|RIGHT\\s+OUTER|FULL\\s+OUTER)\\b".r)
-        .map(_.matched.toLowerCase.replaceAll("\\s+", "_")).getOrElse("inner")
       val keys = kwArg(s, "BY").map(splitCols)
         .getOrElse(throw new IllegalArgumentException("ZIP requires BY keys"))
       val presort = partitionSpec(s).presort
-      node(s, sides)(Transform.zipFrames(_, keys, how, presort))
+      node(s, sides)(Transform.zipFrames(_, keys, joinWord(s), presort))
     }
 
     private def compileSelect(s: Lexed): Node = {
@@ -1734,31 +1742,18 @@ object GraftSql {
       val spec = partitionSpec(s.take(usingAt))
       // zipped input (from ZIP): route through the cotransformer registry
       if (Transform.isZipped(d)) {
-        val ct = extensions.cotransformers.getOrElse(name,
-          throw new IllegalArgumentException(
-            s"TRANSFORM on a zipped frame requires a cotransformer; '$name' is not one"))
         val zipCols = d.columns.filter(_.startsWith("__zip_")).sorted
-        val keys = d.columns.filterNot(_.startsWith("__zip_")).toSeq
         // the zip structs capture the full original rows, so the struct
         // element type IS the original side schema
-        def sideSchema(c: String) = d.schema(c).dataType
-          .asInstanceOf[org.apache.spark.sql.types.ArrayType]
-          .elementType.asInstanceOf[org.apache.spark.sql.types.StructType]
+        def sideSchema(c: String) =
+          d.schema(c).dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
         // the zip keys are the partition keys; the statement's own PRESORT
-        // (parsed into `spec`) must thread through or presort_has/is rules
-        // would always fail; input rules check BOTH sides
-        val zipSpec = PartitionSpec(by = keys, presort = spec.presort)
-        graft.transform.ExtensionValidation.validate(ct.validation,
-          zipSpec, sideSchema(zipCols(0)))
-        graft.transform.ExtensionValidation.validate(
-          ct.validation.filter(_._1.startsWith("input_")),
-          zipSpec, sideSchema(zipCols(1)))
-        val out = schemaHint(s).map(SchemaExpr.parse)
-          .getOrElse(ct.outputSchema(sideSchema(zipCols(0)), sideSchema(zipCols(1)), params))
-        // the statement's PRESORT must actually order the zipped arrays the
-        // cotransformer iterates, not merely satisfy presort_has/is rules
-        val dSorted = Transform.presortZipped(d, spec.presort)
-        return Transform.coMapZipped(dSorted, out)((k, l, r) => ct.fn(k, l, r, params))
+        // must order the zipped arrays the cotransformer iterates
+        val keys = d.columns.filterNot(_.startsWith("__zip_")).toSeq
+        val (out, fn) = coTransformer(s, name, params,
+          PartitionSpec(by = keys, presort = spec.presort),
+          sideSchema(zipCols(0)), sideSchema(zipCols(1)))
+        return Transform.coMapZipped(Transform.presortZipped(d, spec.presort), out)(fn)
       }
       val t = transformers.getOrElse(name,
         throw new IllegalArgumentException(s"unknown transformer '$name'"))
@@ -1808,28 +1803,35 @@ object GraftSql {
       (m.group(1), params, m.start)
     }
 
+    /** The cotransformer `name` bound to two sides: looked up, its rules
+     * checked on both (the right side gets the input rules only) under
+     * `spec`, and its output schema (the statement's SCHEMA, else the
+     * cotransformer's own). Shared by COTRANSFORM and TRANSFORM on a
+     * zipped frame. */
+    private def coTransformer(s: Lexed, name: String, params: Map[String, String],
+        spec: PartitionSpec, l: StructType, r: StructType)
+        : (StructType, (Seq[Any], Iterator[Row], Iterator[Row]) => Iterator[Row]) = {
+      val t = extensions.cotransformers.getOrElse(name,
+        throw new IllegalArgumentException(s"'$name' is not a registered cotransformer"))
+      graft.transform.ExtensionValidation.validate(t.validation, spec, l)
+      graft.transform.ExtensionValidation.validate(
+        t.validation.filter(_._1.startsWith("input_")), spec, r)
+      val out = schemaHint(s).map(SchemaExpr.parse).getOrElse(t.outputSchema(l, r, params))
+      (out, (k, ls, rs) => t.fn(k, ls, rs, params))
+    }
+
     private def compileCoTransform(s: Lexed): Node = {
       val (name, params, usingAt) = usingClause(s)
-      val t = extensions.cotransformers.getOrElse(name,
-        throw new IllegalArgumentException(s"unknown cotransformer '$name'"))
       val sides = frameRefs(s)
       require(sides.size == 2, s"COTRANSFORM needs exactly 2 dataframes, got ${sides.size}")
       val head = s.take(usingAt)
       val keys = kwArg(head, "BY").map(splitCols)
         .getOrElse(throw new IllegalArgumentException("COTRANSFORM requires BY keys"))
-      val ctSpec = PartitionSpec(by = keys, presort = partitionSpec(head).presort)
-      val how = head.find("(?i)\\b(INNER|LEFT_OUTER|RIGHT_OUTER|FULL_OUTER|LEFT OUTER|RIGHT OUTER|FULL OUTER)\\b".r)
-        .map(_.matched.toLowerCase.replace(' ', '_')).getOrElse("inner")
+      val spec = PartitionSpec(by = keys, presort = partitionSpec(head).presort)
       node(s, sides) { case Seq(l, r) =>
-        graft.transform.ExtensionValidation.validate(t.validation, ctSpec, l.schema)
-        graft.transform.ExtensionValidation.validate(
-          t.validation.filter(_._1.startsWith("input_")), ctSpec, r.schema)
-        val out = schemaHint(s).map(SchemaExpr.parse)
-          .getOrElse(t.outputSchema(l.schema, r.schema, params))
-        // the statement's PRESORT must actually order the cogrouped
-        // iterators, not merely satisfy presort_has/is validation
-        Transform.coMap(l, r, keys, how, out, ctSpec.presort)(
-          (k, ls, rs) => t.fn(k, ls, rs, params))
+        val (out, fn) = coTransformer(s, name, params, spec, l.schema, r.schema)
+        // the statement's PRESORT orders the cogrouped iterators
+        Transform.coMap(l, r, keys, joinWord(head), out, spec.presort)(fn)
       }
     }
 

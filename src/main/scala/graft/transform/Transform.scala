@@ -1,6 +1,7 @@
 package graft.transform
 
 import graft.PartitionSpec
+import graft.engine.GraftEngine
 import graft.operators.Repartitioner
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -140,79 +141,28 @@ object Transform {
   // shuffle once per side, groups stream.
   // -------------------------------------------------------------------
 
+  /** The join type of a zip or cogroup: any spelling `engine.join` accepts
+   * ([[GraftEngine.joinType]]), limited to the four that keep each key's
+   * rows of both sides; cross, semi and anti fail here, on the driver. */
+  private def zipType(how: String): String = GraftEngine.joinType(how) match {
+    case h @ ("inner" | "left_outer" | "right_outer" | "full_outer") => h
+    case _ => throw new IllegalArgumentException(
+      s"zip and cogroup take inner, left/right/full outer; not join type '$how'")
+  }
+
   /**
    * Cogroup two dataframes on `keys` and apply `f(keyValues, leftRows,
    * rightRows)` per key. `how` controls which key sets are visited:
    * inner (both non-empty), left_outer (left non-empty), right_outer,
    * full_outer (any). Missing sides arrive as empty iterators (the
    * reference substitutes empty frames — execution_engine.py:1318-1353).
+   *
+   * `presort` orders each side's iterator by the (field, asc) pairs that
+   * side has (fields match case-insensitively), with the nulls-last
+   * convention of [[PartitionSpec.presortCols]]. The order is part of the
+   * shuffle's own sort (`cogroupSorted`), so both sides stream, with or
+   * without a presort.
    */
-  /** Per-group iterator sorter for `presort` on cogrouped sides. Matches
-   * the repo's presort convention everywhere else
-   * ([[graft.PartitionSpec]]: asc_nulls_last / desc_nulls_last — the
-   * reference's pandas na_position="last"): nulls sort LAST in both
-   * directions; strings compare as UTF-8 bytes (Spark's binary order,
-   * pre-converted ONCE per row, not per comparison); binary columns
-   * compare unsigned-lexicographically. Field names resolve
-   * case-insensitively like `col()`. Unorderable presort field types fail
-   * fast at plan time instead of a ClassCastException mid-task. A
-   * non-empty presort buffers the group (the reference materializes
-   * zipped groups too); the no-presort path stays streaming. */
-  private def rowSorter(
-      schema: StructType,
-      presort: Seq[(String, Boolean)]): Iterator[Row] => Iterator[Row] = {
-    val lower = schema.fieldNames.zipWithIndex
-      .map { case (n, i) => n.toLowerCase -> i }.toMap
-    val idx = presort.flatMap { case (f, asc) =>
-      lower.get(f.toLowerCase).map(i => (i, asc))
-    }
-    if (idx.isEmpty) identity
-    else {
-      import org.apache.spark.sql.types._
-      idx.foreach { case (i, _) =>
-        schema.fields(i).dataType match {
-          case _: NumericType | StringType | BooleanType | DateType |
-               TimestampType | TimestampNTZType | BinaryType => ()
-          case other => throw new IllegalArgumentException(
-            s"presort on cogrouped input requires an orderable atomic " +
-              s"column; '${schema.fields(i).name}' is ${other.catalogString}")
-        }
-      }
-      def sortKey(r: Row): Array[Any] = idx.map { case (fi, _) =>
-        r.get(fi) match {
-          case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
-          case v => v
-        }
-      }.toArray
-      def cmpKeys(a: Array[Any], b: Array[Any]): Int = {
-        var i = 0
-        var c = 0
-        while (c == 0 && i < idx.length) {
-          val asc = idx(i)._2
-          c = (a(i), b(i)) match {
-            case (null, null) => 0
-            case (null, _) => 1 // nulls last in BOTH directions
-            case (_, null) => -1
-            case (x: Array[Byte], y: Array[Byte]) =>
-              val base = java.util.Arrays.compareUnsigned(x, y)
-              if (asc) base else -base
-            case (x, y) =>
-              val base = x.asInstanceOf[Comparable[Any]].compareTo(y)
-              if (asc) base else -base
-          }
-          i += 1
-        }
-        c
-      }
-      it => {
-        val arr = it.toArray.map(r => (sortKey(r), r))
-        java.util.Arrays.sort(arr,
-          (p: (Array[Any], Row), q: (Array[Any], Row)) => cmpKeys(p._1, q._1))
-        arr.iterator.map(_._2)
-      }
-    }
-  }
-
   def coMap(
       left: DataFrame,
       right: DataFrame,
@@ -221,13 +171,10 @@ object Transform {
       outputSchema: StructType,
       presort: Seq[(String, Boolean)] = Nil)(
       f: (Seq[Any], Iterator[Row], Iterator[Row]) => Iterator[Row]): DataFrame = {
-    val spark = left.sparkSession
+    val h = zipType(how)
     val keySchema = StructType(keys.map(k => left.schema(left.schema.fieldIndex(k))))
     val keyEnc: Encoder[Row] = Encoders.row(keySchema)
     val outEnc: Encoder[Row] = Encoders.row(outputSchema)
-    val h = normalizeHow(how)
-    val sortL = rowSorter(left.schema, presort)
-    val sortR = rowSorter(right.schema, presort)
     // column-based grouping (RelationalGroupedDataset.as), NOT
     // groupByKey(closure): the closure form deserializes every row to an
     // external Row just to re-extract the key (an AppendColumns node —
@@ -235,38 +182,23 @@ object Transform {
     // columns natively and keeps the exchange/sort fully codegen'd. Key
     // Rows arrive in `f` with the same shape either way; null keys group
     // together under both (SQL grouping semantics = Row equality here).
-    val rowEncL: Encoder[Row] = Encoders.row(left.schema)
-    val rowEncR: Encoder[Row] = Encoders.row(right.schema)
-    val lg = left.groupBy(keys.map(col): _*).as(keyEnc, rowEncL)
-    val rg = right.groupBy(keys.map(col): _*).as(keyEnc, rowEncR)
-    lg.cogroup(rg) { (k, ls, rs) =>
-      val lBuf = sortL(ls).buffered
-      val rBuf = sortR(rs).buffered
-      val lHas = lBuf.hasNext
-      val rHas = rBuf.hasNext
-      val visit = h match {
-        case "inner" => lHas && rHas
-        case "leftouter" => lHas
-        case "rightouter" => rHas
-        case "fullouter" | "outer" => true
-        case other => throw new IllegalArgumentException(s"unknown zip type '$other'")
-      }
-      if (visit) f(k.toSeq, lBuf, rBuf) else Iterator.empty
+    def grouped(d: DataFrame) =
+      d.groupBy(keys.map(col): _*).as(keyEnc, Encoders.row(d.schema))
+    def sortCols(d: DataFrame): Seq[Column] = PartitionSpec(presort = presort.flatMap {
+      case (f, asc) => d.columns.find(_.equalsIgnoreCase(f)).map(_ -> asc)
+    }).presortCols
+    grouped(left).cogroupSorted(grouped(right))(sortCols(left): _*)(sortCols(right): _*) {
+      (k, ls, rs) =>
+        val visit = h match {
+          case "inner" => ls.hasNext && rs.hasNext
+          case "left_outer" => ls.hasNext
+          case "right_outer" => rs.hasNext
+          case _ => true
+        }
+        if (visit) f(k.toSeq, ls, rs) else Iterator.empty
     }(outEnc)
   }
 
-  /**
-   * K-way cogroup (the reference's k-way `zip`,
-   * execution_engine.py:962-1057): tag each frame, union the key+tag+payload
-   * projections, group by key, split each group by tag. One shuffle total —
-   * the reference's blob-serialization workaround is unnecessary on the JVM.
-   * Each key group is buffered (a group = rows of one key across k frames);
-   * for streaming 2-way semantics over huge groups use [[coMap]].
-   *
-   * `f` receives the key values and one row-buffer per input frame (empty
-   * for frames without rows at that key — full_outer semantics; filter in
-   * `f` for other zip types).
-   */
   /**
    * Materialized ZIP (the reference's `zip` statement/op,
    * execution_engine.py:962-1057): group each frame's non-key columns into
@@ -280,26 +212,13 @@ object Transform {
    * the reference's zip semantics (use [[coMap]] for streaming groups).
    * `presort` orders each array by the given (col, asc) pairs.
    */
-  /** Normalize a zip/cogroup how string: case-, space- and underscore-
-   * insensitive, so "left outer" == "LEFT_OUTER" == "leftouter" is accepted
-   * uniformly by [[coMap]] and [[zipFrames]] (they previously normalized
-   * differently and rejected each other's spellings). */
-  private def normalizeHow(how: String): String =
-    how.trim.toLowerCase.replaceAll("[ _]", "")
-
   def zipFrames(
       frames: Seq[DataFrame],
       keys: Seq[String],
       how: String = "inner",
       presort: Seq[(String, Boolean)] = Nil): DataFrame = {
     require(frames.size >= 2, "zip needs at least 2 frames")
-    val joinHow = normalizeHow(how) match {
-      case "inner" => "inner"
-      case "leftouter" => "left_outer"
-      case "rightouter" => "right_outer"
-      case "fullouter" | "outer" => "full_outer"
-      case other => throw new IllegalArgumentException(s"unknown zip how '$other'")
-    }
+    val joinHow = zipType(how)
     // structs capture the FULL original row (keys included, original column
     // order) so a cotransformer sees IDENTICAL row shapes through the
     // zipped path and the direct coMap path. (The previous payload-only
@@ -323,7 +242,7 @@ object Transform {
    * absent from the struct are ignored (matched case-insensitively, like
    * `col()` resolution). Nulls order LAST in both directions — the repo's
    * presort convention ([[graft.PartitionSpec]], pandas
-   * na_position="last"), consistent with the cogroup [[rowSorter]]. Shared
+   * na_position="last"), the order [[coMap]]'s cogroup sort uses. Shared
    * by [[zipFrames]] (ZIP-level PRESORT) and [[presortZipped]]
    * (TRANSFORM-level PRESORT on zipped input). */
   private def sortArr(
@@ -391,6 +310,18 @@ object Transform {
     }
   }
 
+  /**
+   * K-way cogroup (the reference's k-way `zip`,
+   * execution_engine.py:962-1057): tag each frame, union the key+tag+payload
+   * projections, group by key, split each group by tag. One shuffle total —
+   * the reference's blob-serialization workaround is unnecessary on the JVM.
+   * Each key group is buffered (a group = rows of one key across k frames);
+   * for streaming 2-way semantics over huge groups use [[coMap]].
+   *
+   * `f` receives the key values and one row-buffer per input frame (empty
+   * for frames without rows at that key — full_outer semantics; filter in
+   * `f` for other zip types).
+   */
   def coMapN(
       frames: Seq[DataFrame],
       keys: Seq[String],

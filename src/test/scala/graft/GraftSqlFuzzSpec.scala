@@ -442,4 +442,73 @@ class GraftSqlFuzzSpec extends SparkTestBase {
     }
     info(s"P4: $ok rules parsed, $rejected specs rejected cleanly")
   }
+
+  test("COTRANSFORM PRESORT and ZIP + TRANSFORM PRESORT both order each side " +
+      "as a driver-side sort with nulls last") {
+    import graft.sql.GraftSql.{CoTransformerDef, Extensions}
+    import org.apache.spark.sql.Row
+    def orNull[A](g: Gen[A]): Gen[Any] = Gen.frequency(1 -> Gen.const(null), 4 -> g.map(x => x: Any))
+    val rowGen: Gen[Seq[Any]] = for {
+      k <- Gen.choose(0, 2)
+      i <- orNull(Gen.choose(-3, 3))
+      d <- orNull(Gen.frequency(1 -> Gen.const(Double.NaN), 5 -> Gen.choose(-3, 3).map(_ / 2.0)))
+      s <- orNull(Gen.listOfN(2, Gen.oneOf('a', 'b', 'B', '_')).map(_.mkString))
+    } yield Seq(k, i, d, s)
+    val fields = Seq("iV", "dV", "sV")
+    val caseGen: Gen[String => String] = Gen.oneOf(
+      Seq[String => String](_.toUpperCase, _.toLowerCase, s => s))
+    val presortGen: Gen[Seq[(Int, Boolean, String => String)]] = for {
+      n <- Gen.choose(1, 2)
+      cols <- Gen.pick(n, fields.indices)
+      dirs <- Gen.listOfN(n, Gen.oneOf(true, false))
+      cases <- Gen.listOfN(n, caseGen)
+    } yield cols.toSeq.zip(dirs).zip(cases).map { case ((c, asc), cs) => (c, asc, cs) }
+    val inputGen = for {
+      l <- Gen.listOfN(12, rowGen)
+      r <- Gen.listOfN(12, rowGen)
+      ps <- presortGen
+    } yield (l, r, ps)
+    // one output row per row a side's iterator yields, with its position
+    val out = graft.schema.SchemaExpr.parse("k:int,side:int,pos:int,iV:int,dV:double,sV:str")
+    val exts = Extensions(cotransformers = Map("rows" -> CoTransformerDef(
+      outputSchema = (_, _, _) => out,
+      fn = (key, ls, rs, _) => Iterator(ls, rs).zipWithIndex.flatMap { case (it, side) =>
+        it.zipWithIndex.map { case (row, pos) =>
+          Row(key.head, side, pos, row.get(1), row.get(2), row.get(3))
+        }
+      })))
+    def cmp(a: Any, b: Any, asc: Boolean): Int = (a, b) match {
+      case (null, null) => 0
+      case (null, _) => 1 // nulls last in both directions
+      case (_, null) => -1
+      case (x: Int, y: Int) => if (asc) x.compare(y) else y.compare(x)
+      case (x: Double, y: Double) =>
+        if (asc) java.lang.Double.compare(x, y) else java.lang.Double.compare(y, x)
+      case (x: String, y: String) => if (asc) x.compareTo(y) else y.compareTo(x)
+    }
+    for ((l, r, ps) <- samples(inputGen, 10, 4242L)) {
+      val clause = ps.map { case (c, asc, cs) => s"${cs(fields(c))} ${if (asc) "ASC" else "DESC"}" }
+        .mkString(", ")
+      def keyOf(row: Seq[Any]): Seq[String] = ps.map { case (c, _, _) => String.valueOf(row(c + 1)) }
+      val sides = Seq(l, r)
+      val keys = l.map(_.head).toSet.intersect(r.map(_.head).toSet)
+      val want = for (k <- keys.toSeq; side <- 0 to 1) yield (k, side) -> sides(side)
+        .filter(_.head == k)
+        .sortWith { (a, b) =>
+          ps.iterator.map { case (c, asc, _) => cmp(a(c + 1), b(c + 1), asc) }.find(_ != 0).exists(_ < 0)
+        }.map(keyOf)
+      val schema = "k:int,iV:int,dV:double,sV:str"
+      val inputs = Map("l" -> df(l, schema), "r" -> df(r, schema))
+      for (script <- Seq(s"COTRANSFORM l, r BY k PRESORT $clause USING rows",
+          s"z = ZIP l, r BY k\nTRANSFORM z PRESORT $clause USING rows")) {
+        val got = GraftSql.runWith(engine, script + "\nYIELD AS out", inputs, exts)
+          .yields("out").collect().toSeq
+          .groupBy(row => (row.get(0), row.getInt(1)))
+          .map { case (ks, rows) =>
+            ks -> rows.sortBy(_.getInt(2)).map(row => keyOf(Seq(null) ++ (3 to 5).map(row.get)))
+          }
+        assert(got === want.toMap, s"$script\nl=$l\nr=$r")
+      }
+    }
+  }
 }

@@ -9,22 +9,7 @@ class GraftSqlSpec extends SparkTestBase {
 
   private def d1 = df(Seq(Seq("a", 3), Seq("a", 1), Seq("b", 9), Seq("b", 2)), "k:str,v:int")
 
-  private val checkpointRoot = new java.io.File(graft.Materialize.checkpointRoot)
-  private def under(dir: java.io.File): Set[java.io.File] =
-    Option(dir.listFiles).fold(Set.empty[java.io.File])(_.toSet)
-  private val rootAtStart = under(checkpointRoot)
-
-  /** Each test deletes what it added under the checkpoint root and its
-   * `graftsql*` temp inputs, found by listing both before and after it:
-   * deterministic checkpoints are kept by design, and a fresh temp input
-   * keys a fresh one on every run. */
-  override def withFixture(test: NoArgTest): org.scalatest.Outcome = {
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    def ours = under(checkpointRoot) ++ under(tmp).filter(_.getName.startsWith("graftsql"))
-    val before = ours
-    try super.withFixture(test)
-    finally (ours -- before).foreach(org.apache.commons.io.FileUtils.deleteQuietly)
-  }
+  private val rootAtStart = SparkTestBase.scratch
 
   test("statement splitting tolerates multi-line SELECT and comments") {
     val stmts = GraftSql.splitStatements(
@@ -313,6 +298,30 @@ class GraftSqlSpec extends SparkTestBase {
         |YIELD AS out
         |""".stripMargin, Map("l" -> l, "r" -> r), exts)
     assertDfEq(resAsc.yields("out"), Seq(Seq(1, 10, 1)))
+  }
+
+  test("ZIP and COTRANSFORM read every join word engine.join reads") {
+    import graft.sql.GraftSql.{CoTransformerDef, Extensions}
+    val l = df(Seq(Seq(1, "x"), Seq(1, "y"), Seq(2, "z")), "k:int,a:str")
+    val r = df(Seq(Seq(1, 10.0), Seq(3, 30.0)), "k:int,b:double")
+    val exts = Extensions(cotransformers = Map("counts" -> CoTransformerDef(
+      outputSchema = (_, _, _) => graft.schema.SchemaExpr.parse("k:int,nl:long,nr:long"),
+      fn = (key, ls, rs, _) =>
+        Iterator.single(Row(key.head, ls.size.toLong, rs.size.toLong)))))
+    def run(script: String) = GraftSql.runWith(engine, script + "\nYIELD AS out",
+      Map("l" -> l, "r" -> r), exts).yields("out")
+    val full = Seq(Seq(1, 2L, 1L), Seq(2, 1L, 0L), Seq(3, 0L, 1L))
+    val left = Seq(Seq(1, 2L, 1L), Seq(2, 1L, 0L))
+    assertDfEq(run("ZIP l, r LEFT_OUTER BY k\nTRANSFORM USING counts"), left)
+    assertDfEq(run("ZIP l, r LEFT BY k\nTRANSFORM USING counts"), left)
+    assertDfEq(run("ZIP l, r FULL_OUTER BY k\nTRANSFORM USING counts"), full)
+    assertDfEq(run("COTRANSFORM l, r LEFT  OUTER BY k USING counts"), left)
+    assertDfEq(run("COTRANSFORM l, r BY k right_outer USING counts"),
+      Seq(Seq(1, 2L, 1L), Seq(3, 0L, 1L)))
+    for (script <- Seq("ZIP l, r CROSS BY k", "COTRANSFORM l, r CROSS BY k USING counts")) {
+      val e = intercept[IllegalArgumentException](run(script))
+      assert(e.getMessage.contains("'CROSS'"), script)
+    }
   }
 
   test("COTRANSFORM PRESORT orders the cogrouped iterators") {
@@ -1769,6 +1778,6 @@ class GraftSqlSpec extends SparkTestBase {
 
   // registered last: runs after every other test of the suite
   test("the suite leaves the checkpoint root as it found it") {
-    assert(under(checkpointRoot) === rootAtStart)
+    assert(SparkTestBase.scratch === rootAtStart)
   }
 }

@@ -18,6 +18,16 @@ class HarnessSpec extends SparkTestBase {
     assert(Plans.queryNames(None).contains("h01_tpch"))
   }
 
+  test("Verify fails on an unknown query name instead of skipping it") {
+    val e = intercept[IllegalArgumentException] {
+      Verify.queryFilter(Seq("sf", "out", "q24_comap,q24_comapp,q40_sql_zip,nope"))
+    }
+    assert(e.getMessage.contains("unknown query name(s): q24_comapp, nope"))
+    assert(Verify.queryFilter(Seq("sf", "out", "q24_comap, q40_sql_zip")) ===
+      Some(Set("q24_comap", "q40_sql_zip")))
+    assert(Verify.queryFilter(Seq("sf", "out")) === None)
+  }
+
   test("Bench result line: valid JSON, 21 keys in order, error for a failed query") {
     val line = Bench.resultLine(
       results = Seq("q01_agg" -> Some(1.2344), "d04_dedup_ngram" -> None),

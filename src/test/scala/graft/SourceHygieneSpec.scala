@@ -19,7 +19,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * checkpoint root); outside `engine/` they name no StorageLevel and call no
  * `.cache()`. Entries* and Stress play the user's part and may call
  * Spark directly. Third lint: the SQL dialect compiles to Workflow nodes,
- * so it has no persist, checkpoint, save or yield code of its own.
+ * so it has no persist, checkpoint, save or yield code of its own. Fourth
+ * lint: one main file spells out the join types (`GraftEngine.joinType`),
+ * so join, zip and cogroup cannot drift apart again.
  */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -91,5 +93,14 @@ class SourceHygieneSpec extends AnyFunSuite {
         banned.filter(code.contains).map(b => s"GraftSql.scala:${i + 1}: $b")
       }
     assert(hits.isEmpty, s"compile statements to Workflow nodes:\n${hits.mkString("\n")}")
+  }
+
+  test("one main file reads the join-type words") {
+    val spellings = Seq("\"leftouter\"", "\"fullouter\"", "\"rightouter\"")
+    val files = scalaSources(java.nio.file.Paths.get("src/main")).filter { p =>
+      val text = java.nio.file.Files.readString(p)
+      spellings.exists(text.contains)
+    }
+    assert(files.map(_.toString) === Seq("src/main/scala/graft/engine/GraftEngine.scala"))
   }
 }

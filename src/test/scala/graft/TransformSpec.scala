@@ -225,4 +225,44 @@ class TransformSpec extends SparkTestBase {
         s"zipFrames '$how'")
     }
   }
+
+  test("coMap reads the join word with engine.join's normalizer") {
+    val l = df(Seq(Seq(1, "x"), Seq(2, "z")), "k:int,a:str")
+    val r = df(Seq(Seq(2, 20.0), Seq(3, 30.0)), "k:int,b:double")
+    def run(how: String) = collectSorted(Transform.coMap(l, r, Seq("k"), how,
+      SchemaExpr.parse("k:int,nl:long,nr:long")) { (k, ls, rs) =>
+      Iterator.single(Row(k.head, ls.size.toLong, rs.size.toLong))
+    })
+    assert(run("left") === run("left_outer"))
+    assert(run("left") === Seq(Seq(1, 1L, 0L), Seq(2, 1L, 1L)))
+    assert(run("Full") === run("full_outer"))
+  }
+
+  test("coMap and zipFrames reject cross, semi and anti on the driver") {
+    val l = df(Nil, "k:int,a:str")
+    val r = df(Nil, "k:int,b:double")
+    for (how <- Seq("cross", "semi", "LEFT_ANTI")) {
+      // thrown by the call itself: no plan is built, no job runs
+      val e = intercept[IllegalArgumentException](
+        Transform.coMap(l, r, Seq("k"), how, SchemaExpr.parse("k:int"))((_, _, _) => Iterator.empty))
+      assert(e.getMessage.contains(s"'$how'"))
+      intercept[IllegalArgumentException](Transform.zipFrames(Seq(l, r), Seq("k"), how))
+    }
+  }
+
+  test("a presorted coMap sorts inside the cogroup's own sort") {
+    val l = df(Seq(Seq(1, 3, "a")), "k:int,V:int,s:str")
+    val r = df(Seq(Seq(1, 0.5)), "k:int,b:double")
+    val out = Transform.coMap(l, r, Seq("k"), "inner", SchemaExpr.parse("k:int"),
+      presort = Seq("v" -> false, "b" -> true)) { (k, ls, rs) =>
+      ls.size; rs.size; Iterator.single(Row(k.head))
+    }
+    val plan = out.queryExecution.executedPlan.toString
+    val sorts = "Sort \\[([^\\]]*)\\]".r.findAllMatchIn(plan).map(_.group(1)).toSeq
+    assert(plan.contains("CoGroup"), plan)
+    // each side sorts by the key, then by the presort fields it has
+    assert(sorts.exists(_.matches("k#\\d+ ASC NULLS FIRST, V#\\d+ DESC NULLS LAST")), plan)
+    assert(sorts.exists(_.matches("k#\\d+ ASC NULLS FIRST, b#\\d+ ASC NULLS LAST")), plan)
+    assert(out.count() === 1)
+  }
 }
