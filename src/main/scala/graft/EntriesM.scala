@@ -51,8 +51,7 @@ private[graft] object EntriesM {
           "i -> CASE WHEN (doc_id + i) % 17 = 5 THEN NULL " +
           "ELSE concat('t', CAST((doc_id + i) % 13 AS STRING)) END) " +
           "END AS tags")
-      val out = java.nio.file.Files.createTempDirectory("graft_m64").toString
-      try {
+      withTempDir("graft_m64") { out =>
         val frames = Seq("none", "zlib", "snappy", "zstd", "lz4").map {
           codec =>
             docs.repartition(2).write.option("compression", codec)
@@ -70,12 +69,7 @@ private[graft] object EntriesM {
                 expr("CASE WHEN tags IS NULL THEN NULL ELSE " +
                   "array_join(tags, ',', '_') END").as("tags_csv"))
         }
-        // materialize before the temp dir is deleted (the frames read it)
         frames.reduce(_.unionByName(_)).localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(out)).iterator()
-          .asScala.toSeq.reverse.foreach(p => p.toFile.delete())
       }
     }),
 
@@ -97,8 +91,7 @@ private[graft] object EntriesM {
           "i -> CASE WHEN (doc_id + i) % 13 = 5 THEN NULL " +
           "ELSE doc_id * 10 + i END)) END AS m")
         .repartition(2).sortWithinPartitions("doc_id")
-      val out = java.nio.file.Files.createTempDirectory("graft_m62").toString
-      try {
+      withTempDir("graft_m62") { out =>
         val frames = Seq("v1" -> "snappy", "v2" -> "zstd").map {
           case (ver, codec) =>
             val path = s"$out/${ver}_$codec"
@@ -121,12 +114,7 @@ private[graft] object EntriesM {
                   "CAST(element_at(m, k) AS STRING), '_'))), ',') END")
                   .as("m_csv"))
         }
-        // materialize before the temp dir is deleted (the frames read it)
         frames.reduce(_.unionByName(_)).localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(out)).iterator()
-          .asScala.toSeq.reverse.foreach(p => p.toFile.delete())
       }
     }),
 
@@ -151,8 +139,7 @@ private[graft] object EntriesM {
           "CAST(concat('b', doc_id) AS BINARY) END AS bin",
         "CASE WHEN doc_id % 13 <> 6 THEN " +
           "CAST(doc_id AS DECIMAL(12,2)) - 500.25 END AS dec")
-      val out = java.nio.file.Files.createTempDirectory("graft_m61").toString
-      try {
+      withTempDir("graft_m61") { out =>
         val frames = Seq("none", "zlib", "snappy", "zstd", "lz4").map {
           codec =>
             docs.repartition(2).write.option("compression", codec)
@@ -168,12 +155,7 @@ private[graft] object EntriesM {
                 col("date_days"), hex(col("bin")).as("bin_hex"),
                 col("dec_str"))
         }
-        // materialize before the temp dir is deleted (the frames read it)
         frames.reduce(_.unionByName(_)).localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(out)).iterator()
-          .asScala.toSeq.reverse.foreach(p => p.toFile.delete())
       }
     }),
 
@@ -220,8 +202,7 @@ private[graft] object EntriesM {
           "ELSE concat('t', CAST((doc_id + i) % 13 AS STRING)) END) " +
           "END AS tags")
         .repartition(2).sortWithinPartitions("doc_id")
-      val out = java.nio.file.Files.createTempDirectory("graft_m57").toString
-      try {
+      withTempDir("graft_m57") { out =>
         val frames = Seq("v1" -> "snappy", "v2" -> "zstd").map {
           case (ver, codec) =>
             val path = s"$out/${ver}_$codec"
@@ -244,12 +225,7 @@ private[graft] object EntriesM {
                 expr("CASE WHEN tags IS NULL THEN NULL ELSE " +
                   "array_join(tags, ',', '_') END").as("tags_csv"))
         }
-        // materialize before the temp dir is deleted (the frames read it)
         frames.reduce(_.unionByName(_)).localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(out)).iterator()
-          .asScala.toSeq.reverse.foreach(p => p.toFile.delete())
       }
     }),
 
@@ -272,8 +248,7 @@ private[graft] object EntriesM {
           .as("ratio"),
         when(col("doc_id") % 13 =!= 5, col("doc_id") % 3 === 0).as("ok"),
         when(col("doc_id") % 5 =!= 2, col("lang")).as("lang_n"))
-      val out = java.nio.file.Files.createTempDirectory("graft_m55").toString
-      try {
+      withTempDir("graft_m55") { out =>
         val frames = Seq("none", "zlib", "snappy", "zstd", "lz4").map {
           codec =>
             docs.repartition(2).write.option("compression", codec)
@@ -289,12 +264,7 @@ private[graft] object EntriesM {
                 col("flt_val").cast("double").as("ratio"),
                 col("bool_val").as("ok"), col("str_val").as("lang_n"))
         }
-        // materialize before the temp dir is deleted (the frames read it)
         frames.reduce(_.unionByName(_)).localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(out)).iterator()
-          .asScala.toSeq.reverse.foreach(p => p.toFile.delete())
       }
     }),
 

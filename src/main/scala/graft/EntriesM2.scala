@@ -142,8 +142,7 @@ private[graft] object EntriesM2 {
     // close in count(documents). Zero stripe data read
     "m43_orc_tail" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select("doc_id", "text", "lang")
-      val out = java.nio.file.Files.createTempDirectory("graft_m43").toString
-      try {
+      withTempDir("graft_m43") { out =>
         val rows = Seq("none", "zlib", "snappy", "zstd", "lz4").map { codec =>
           docs.repartition(2).write.option("compression", codec)
             .mode("overwrite").orc(s"$out/$codec")
@@ -167,10 +166,6 @@ private[graft] object EntriesM2 {
         eng(s).toDF(rows,
           "compression:str,total_rows:long,n_files:long,n_types:int," +
             "n_root_fields:int,stripes_agree:int,codec_ok:int")
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(out)).iterator()
-          .asScala.toSeq.reverse.foreach(p => p.toFile.delete())
       }
     }),
 
@@ -187,8 +182,7 @@ private[graft] object EntriesM2 {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"),
           when(col("doc_id") % 7 =!= 0, col("lang")).as("lang_n"))
-      val out = java.nio.file.Files.createTempDirectory("graft_m53").toString
-      try {
+      withTempDir("graft_m53") { out =>
         val frames = Seq("none", "zlib", "snappy", "zstd", "lz4").map {
           codec =>
             docs.repartition(2).write.option("compression", codec)
@@ -201,12 +195,7 @@ private[graft] object EntriesM2 {
               .select(lit(codec).as("codec"),
                 col("long_val").as("doc_id"), col("str_val").as("lang_n"))
         }
-        // materialize before the temp dir is deleted (the frames read it)
         frames.reduce(_.unionByName(_)).localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(out)).iterator()
-          .asScala.toSeq.reverse.foreach(p => p.toFile.delete())
       }
     }),
 
@@ -241,8 +230,7 @@ private[graft] object EntriesM2 {
     // codecs; still zero index/data stream bytes read
     "m51_orc_stripes" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select("doc_id", "text", "lang")
-      val out = java.nio.file.Files.createTempDirectory("graft_m51").toString
-      try {
+      withTempDir("graft_m51") { out =>
         val rows = Seq("none", "zlib", "snappy", "zstd", "lz4").map { codec =>
           docs.repartition(2).write.option("compression", codec)
             .mode("overwrite").orc(s"$out/$codec")
@@ -269,10 +257,6 @@ private[graft] object EntriesM2 {
         eng(s).toDF(rows,
           "compression:str,total_rows:long,n_files:long,index_agree:int," +
             "data_agree:int,enc_ok:int,kinds_ok:int,codec_ok:int")
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(out)).iterator()
-          .asScala.toSeq.reverse.foreach(p => p.toFile.delete())
       }
     }),
 
@@ -402,11 +386,8 @@ private[graft] object EntriesM2 {
     // ParquetFooterSpec
     "m37_parquet_footer" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select("doc_id", "text", "lang")
-      val out = java.nio.file.Files.createTempDirectory("graft_m37").toString
-      // the verdict is one row — materialize it eagerly so the temp dir
-      // can be deleted before returning (repeated gate/bench runs used
-      // to leak one dataset per invocation)
-      try {
+      // the verdict is one row, collected before the temp dir is deleted
+      withTempDir("graft_m37") { out =>
         docs.repartition(2).write.mode("overwrite").parquet(s"$out/p")
         val bin = graft.functions.Multimodal
           .loadBinaryFiles(s, s"$out/p", "*.parquet")
@@ -427,10 +408,6 @@ private[graft] object EntriesM2 {
         eng(s).toDF(Seq(Seq(r.getLong(0), r.getLong(1), r.getInt(2),
           r.getInt(3), r.getInt(4))),
           "total_rows:long,n_files:long,n_leaf_cols:int,rows_agree:int,writer_known:int")
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(out)).iterator()
-          .asScala.toSeq.reverse.foreach(p => p.toFile.delete())
       }
     }),
 
@@ -446,8 +423,7 @@ private[graft] object EntriesM2 {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"),
           when(col("doc_id") % 7 =!= 0, col("lang")).as("lang_n"))
-      val out = java.nio.file.Files.createTempDirectory("graft_m39").toString
-      try {
+      withTempDir("graft_m39") { out =>
         docs.repartition(2).write.mode("overwrite").parquet(s"$out/p")
         val bin = graft.functions.Multimodal
           .loadBinaryFiles(s, s"$out/p", "*.parquet")
@@ -473,10 +449,6 @@ private[graft] object EntriesM2 {
           "path:str,ptype:str,n_values:long,nulls:long,min_long:long," +
             "max_long:long,min_str:str,max_str:str,codec_ok:int," +
             "enc_ok:int,bytes_ok:int")
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(out)).iterator()
-          .asScala.toSeq.reverse.foreach(p => p.toFile.delete())
       }
     }),
 
@@ -500,8 +472,7 @@ private[graft] object EntriesM2 {
         .select(col("doc_id"),
           when(col("doc_id") % 7 =!= 0, col("lang")).as("lang_n"))
         .repartition(2).sortWithinPartitions("doc_id")
-      val out = java.nio.file.Files.createTempDirectory("graft_m48").toString
-      try {
+      withTempDir("graft_m48") { out =>
         docs.write
           .option("parquet.page.row.count.limit", "40")
           .option("parquet.bloom.filter.enabled#doc_id", "true")
@@ -535,10 +506,6 @@ private[graft] object EntriesM2 {
           "path:str,ptype:str,nulls:long,min_long:long,max_long:long," +
             "min_str:str,max_str:str,pages_ok:int,oi_ok:int,bo_ok:int," +
             "stats_ok:int,bloom_ok:int")
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(out)).iterator()
-          .asScala.toSeq.reverse.foreach(p => p.toFile.delete())
       }
     }),
 
@@ -560,8 +527,7 @@ private[graft] object EntriesM2 {
         .select(col("doc_id"),
           when(col("doc_id") % 7 =!= 0, col("lang")).as("lang_n"))
         .repartition(2).sortWithinPartitions("doc_id")
-      val out = java.nio.file.Files.createTempDirectory("graft_m50").toString
-      try {
+      withTempDir("graft_m50") { out =>
         val frames = Seq("v1" -> "snappy", "v1" -> "uncompressed",
           "v1" -> "lz4_raw", "v2" -> "zstd", "v2" -> "gzip").map {
           case (ver, codec) =>
@@ -579,12 +545,7 @@ private[graft] object EntriesM2 {
               .select(lit(s"${ver}_$codec").as("variant"),
                 col("long_val").as("doc_id"), col("str_val").as("lang_n"))
         }
-        // materialize before the temp dir is deleted (the frames read it)
         frames.reduce(_.unionByName(_)).localCheckpoint(true)
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(out)).iterator()
-          .asScala.toSeq.reverse.foreach(p => p.toFile.delete())
       }
     }),
 
@@ -664,8 +625,7 @@ private[graft] object EntriesM2 {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"),
         when(col("doc_id") % 7 =!= 0, encode(col("text"), "UTF-8"))
           .as("img"))
-      val out = java.nio.file.Files.createTempDirectory("graft_m12").toString
-      try {
+      withTempDir("graft_m12") { out =>
         val m1 = Layout.exportTarShards(docs, s"$out/a", "doc_id",
           Seq("text" -> "txt", "img" -> "bin"), nShards = 8)
         val m2 = Layout.exportTarShards(docs, s"$out/b", "doc_id",
@@ -681,10 +641,6 @@ private[graft] object EntriesM2 {
           if (verifyOk) 1L else 0L, if (roundtripOk) 1L else 0L,
           if (m1 == m2) 1L else 0L)),
           "n_samples:long,n_entries:long,verify_ok:long,roundtrip_ok:long,det_ok:long")
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(out)).iterator()
-          .asScala.toSeq.reverse.foreach(p => p.toFile.delete())
       }
     }),
 
@@ -786,21 +742,22 @@ private[graft] object EntriesM2 {
       // executors, listed and read back through Spark's binaryFile
       // source, ids recovered from filenames, decoded by the real
       // ImageIO parse — the m01 dims oracle applies end-to-end
-      val base = java.nio.file.Files.createTempDirectory("graft_m08_").toString
-      val pngs = Multimodal.syntheticImages(
-        t(s, dir, "documents").select("doc_id"), "doc_id")
-      pngs.foreachPartition { it: Iterator[Row] =>
-        it.foreach { r =>
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(base, f"img_${r.getLong(0)}%06d.png"),
-            r.getAs[Array[Byte]](1))
+      withTempDir("graft_m08_") { base =>
+        val pngs = Multimodal.syntheticImages(
+          t(s, dir, "documents").select("doc_id"), "doc_id")
+        pngs.foreachPartition { it: Iterator[Row] =>
+          it.foreach { r =>
+            java.nio.file.Files.write(
+              java.nio.file.Paths.get(base, f"img_${r.getLong(0)}%06d.png"),
+              r.getAs[Array[Byte]](1))
+          }
         }
+        val files = Multimodal.loadBinaryFiles(s, base, "*.png")
+          .select(expr("CAST(regexp_extract(path, 'img_(\\\\d+)\\\\.png', 1) AS BIGINT)")
+            .as("doc_id"), col("payload"))
+        Multimodal.decodeImages(files, "doc_id", "payload")
+          .select("doc_id", "width", "height", "channels").localCheckpoint(true)
       }
-      val files = Multimodal.loadBinaryFiles(s, base, "*.png")
-        .select(expr("CAST(regexp_extract(path, 'img_(\\\\d+)\\\\.png', 1) AS BIGINT)")
-          .as("doc_id"), col("payload"))
-      Multimodal.decodeImages(files, "doc_id", "payload")
-        .select("doc_id", "width", "height", "channels")
     }),
 
     "m09_warc_ingest" -> ((s, dir) => {

@@ -411,8 +411,7 @@ private[graft] object EntriesQ {
     "q98_export_shards" -> ((s, dir) => {
       import graft.operators.Layout
       val o = t(s, dir, "orders").select("o_orderkey", "o_totalprice")
-      val out = java.nio.file.Files.createTempDirectory("graft_q98").toString
-      try {
+      withTempDir("graft_q98") { out =>
         val m1 = Layout.exportShards(o, s"$out/a", nShards = 16,
           keyCols = Seq("o_orderkey"))
         val m2 = Layout.exportShards(o, s"$out/b", nShards = 16,
@@ -425,11 +424,6 @@ private[graft] object EntriesQ {
         eng(s).toDF(Seq(Seq(if (verifyOk) 1L else 0L, if (rowsOk) 1L else 0L,
           if (detOk) 1L else 0L, if (contentOk) 1L else 0L)),
           "verify_ok:long,rows_ok:long,det_ok:long,content_ok:long")
-      } finally {
-        // repeated gate runs must not accumulate orders-sized /tmp garbage
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(out)).iterator()
-          .asScala.toSeq.reverse.foreach(p => p.toFile.delete())
       }
     }),
 

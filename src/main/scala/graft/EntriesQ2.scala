@@ -533,35 +533,36 @@ private[graft] object EntriesQ2 {
     "q75_stream_sketch" -> ((s, dir) => {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val ev = events(s, dir).select("event_type", "user_id")
-      val base = java.nio.file.Files.createTempDirectory("graft_q75_").toString
-      val (inDir, outDir, ck) = (s"$base/in", s"$base/out", s"$base/ck")
-      ev.repartition(6).write.mode("overwrite").parquet(inDir)
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir)
-      graft.streaming.Streaming.foreachBatchSink(stream, ck) { (batch, id) =>
-        if (!batch.isEmpty)
-          Sketches.hllPartial(batch, Seq("event_type"), "user_id")
-            .withColumn("batch_id", lit(id))
-            .write.mode("append").parquet(outDir)
+      withTempDir("graft_q75_") { base =>
+        val (inDir, outDir, ck) = (s"$base/in", s"$base/out", s"$base/ck")
+        ev.repartition(6).write.mode("overwrite").parquet(inDir)
+        val stream = s.readStream.schema(ev.schema)
+          .option("maxFilesPerTrigger", "1").parquet(inDir)
+        graft.streaming.Streaming.foreachBatchSink(stream, ck) { (batch, id) =>
+          if (!batch.isEmpty)
+            Sketches.hllPartial(batch, Seq("event_type"), "user_id")
+              .withColumn("batch_id", lit(id))
+              .write.mode("append").parquet(outDir)
+        }
+        val partials = eng(s).load(outDir, "parquet")
+        val merged = Sketches.hllMergeEstimate(partials, Seq("event_type"))
+        val hier = Sketches.hllMergeEstimate(
+          Sketches.hllMergePartial(
+            partials.withColumn("par", pmod(col("batch_id"), lit(2))),
+            Seq("event_type", "par")),
+          Seq("event_type")).withColumnRenamed("estimate", "hier")
+        val exact = ev.groupBy("event_type")
+          .agg(countDistinct(col("user_id")).as("exact"))
+        val nBatches = partials.select(countDistinct(col("batch_id")))
+          .first().getLong(0)
+        merged.join(hier, "event_type").join(exact, "event_type")
+          .agg(min(when(col("estimate") === col("hier") &&
+              abs(col("estimate") - col("exact")) <= col("exact") * 0.05, 1)
+            .otherwise(0)).as("ma"), count(lit(1)).as("nk"))
+          .select(col("ma").cast("bigint").as("merge_agrees"),
+            (lit(nBatches) >= 2).cast("bigint").as("multi_batch"),
+            col("nk").cast("bigint").as("n_keys")).localCheckpoint(true)
       }
-      val partials = eng(s).load(outDir, "parquet")
-      val merged = Sketches.hllMergeEstimate(partials, Seq("event_type"))
-      val hier = Sketches.hllMergeEstimate(
-        Sketches.hllMergePartial(
-          partials.withColumn("par", pmod(col("batch_id"), lit(2))),
-          Seq("event_type", "par")),
-        Seq("event_type")).withColumnRenamed("estimate", "hier")
-      val exact = ev.groupBy("event_type")
-        .agg(countDistinct(col("user_id")).as("exact"))
-      val nBatches = partials.select(countDistinct(col("batch_id")))
-        .first().getLong(0)
-      merged.join(hier, "event_type").join(exact, "event_type")
-        .agg(min(when(col("estimate") === col("hier") &&
-            abs(col("estimate") - col("exact")) <= col("exact") * 0.05, 1)
-          .otherwise(0)).as("ma"), count(lit(1)).as("nk"))
-        .select(col("ma").cast("bigint").as("merge_agrees"),
-          (lit(nBatches) >= 2).cast("bigint").as("multi_batch"),
-          col("nk").cast("bigint").as("n_keys"))
     }),
 
     // streaming incremental heavy hitters: per-micro-batch Misra-Gries
@@ -574,42 +575,43 @@ private[graft] object EntriesQ2 {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val ev = events(s, dir).select("event_type", "user_id")
         .withColumn("user_id", col("user_id").cast("string"))
-      val base = java.nio.file.Files.createTempDirectory("graft_q83_").toString
-      val (inDir, outDir, ck) = (s"$base/in", s"$base/out", s"$base/ck")
-      ev.repartition(6).write.mode("overwrite").parquet(inDir)
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir)
-      graft.streaming.Streaming.foreachBatchSink(stream, ck) { (batch, id) =>
-        if (!batch.isEmpty)
-          Sketches.frequentItemsPartial(batch, Seq("event_type"), "user_id",
-            k = 30)
-            .withColumn("batch_id", lit(id))
-            .write.mode("append").parquet(outDir)
+      withTempDir("graft_q83_") { base =>
+        val (inDir, outDir, ck) = (s"$base/in", s"$base/out", s"$base/ck")
+        ev.repartition(6).write.mode("overwrite").parquet(inDir)
+        val stream = s.readStream.schema(ev.schema)
+          .option("maxFilesPerTrigger", "1").parquet(inDir)
+        graft.streaming.Streaming.foreachBatchSink(stream, ck) { (batch, id) =>
+          if (!batch.isEmpty)
+            Sketches.frequentItemsPartial(batch, Seq("event_type"), "user_id",
+              k = 30)
+              .withColumn("batch_id", lit(id))
+              .write.mode("append").parquet(outDir)
+        }
+        val partials = eng(s).load(outDir, "parquet")
+        val nBatches = partials.select(countDistinct(col("batch_id")))
+          .first().getLong(0)
+        val hh = Sketches.frequentItems(partials.drop("batch_id"),
+          Seq("event_type"))
+        val exact = ev.groupBy("event_type", "user_id")
+          .agg(count(lit(1)).as("cnt"))
+        val joined = exact.join(
+          hh.select(col("event_type"), col("item").as("user_id"),
+            col("estimate"), col("err_bound")), Seq("event_type", "user_id"),
+          "left")
+        val errByKey = hh.groupBy("event_type").agg(
+          max("err_bound").as("err"), max("n_rows").as("n_sketch"))
+        joined.join(errByKey, "event_type")
+          .groupBy("event_type").agg(
+            sum("cnt").as("n_rows"),
+            sum(when(col("cnt") > col("err") && col("estimate").isNull, 1L)
+              .otherwise(0L)).as("missed"),
+            sum(when(col("estimate").isNotNull &&
+                (col("estimate") > col("cnt") ||
+                  col("estimate") + col("err") < col("cnt")), 1L)
+              .otherwise(0L)).as("violations"),
+            (max("n_sketch") === sum("cnt")).as("n_consistent"),
+            lit(nBatches >= 2).as("multi_batch")).localCheckpoint(true)
       }
-      val partials = eng(s).load(outDir, "parquet")
-      val nBatches = partials.select(countDistinct(col("batch_id")))
-        .first().getLong(0)
-      val hh = Sketches.frequentItems(partials.drop("batch_id"),
-        Seq("event_type"))
-      val exact = ev.groupBy("event_type", "user_id")
-        .agg(count(lit(1)).as("cnt"))
-      val joined = exact.join(
-        hh.select(col("event_type"), col("item").as("user_id"),
-          col("estimate"), col("err_bound")), Seq("event_type", "user_id"),
-        "left")
-      val errByKey = hh.groupBy("event_type").agg(
-        max("err_bound").as("err"), max("n_rows").as("n_sketch"))
-      joined.join(errByKey, "event_type")
-        .groupBy("event_type").agg(
-          sum("cnt").as("n_rows"),
-          sum(when(col("cnt") > col("err") && col("estimate").isNull, 1L)
-            .otherwise(0L)).as("missed"),
-          sum(when(col("estimate").isNotNull &&
-              (col("estimate") > col("cnt") ||
-                col("estimate") + col("err") < col("cnt")), 1L)
-            .otherwise(0L)).as("violations"),
-          (max("n_sketch") === sum("cnt")).as("n_consistent"),
-          lit(nBatches >= 2).as("multi_batch"))
     }),
 
     // streaming ingestion dedup: micro-batches are deduplicated
@@ -621,43 +623,44 @@ private[graft] object EntriesQ2 {
     // the corpus (it was dropped FOR something), and the exact corpus size
     "q84_stream_ingest_dedup" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select("doc_id", "text")
-      val base = java.nio.file.Files.createTempDirectory("graft_q84_").toString
-      val (inDir, outDir, ck) = (s"$base/in", s"$base/out", s"$base/ck")
-      docs.repartition(5).write.mode("overwrite").parquet(inDir)
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir)
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        s.sparkContext.hadoopConfiguration)
-      val outPath = new org.apache.hadoop.fs.Path(outDir)
-      graft.streaming.Streaming.foreachBatchSink(stream, ck) { (batch, _) =>
-        if (!batch.isEmpty) {
-          val pairs = Dedup.ngramJaccardJoin(batch, "doc_id", "text",
-            batch, "doc_id", "text", shingleK = 3, threshold = 0.5)
-            .filter(col("id_a") < col("id_b"))
-          val internal = Dedup.dropNearDuplicates(batch, "doc_id", pairs)
-          val survivors =
-            if (fs.exists(outPath))
-              Dedup.dropNearDuplicatesAgainst(internal, "doc_id", "text",
-                eng(s).load(outDir, "parquet"), "doc_id", "text",
-                shingleK = 3, threshold = 0.5)
-            else internal
-          survivors.write.mode("append").parquet(outDir)
+      withTempDir("graft_q84_") { base =>
+        val (inDir, outDir, ck) = (s"$base/in", s"$base/out", s"$base/ck")
+        docs.repartition(5).write.mode("overwrite").parquet(inDir)
+        val stream = s.readStream.schema(docs.schema)
+          .option("maxFilesPerTrigger", "1").parquet(inDir)
+        val fs = org.apache.hadoop.fs.FileSystem.get(
+          s.sparkContext.hadoopConfiguration)
+        val outPath = new org.apache.hadoop.fs.Path(outDir)
+        graft.streaming.Streaming.foreachBatchSink(stream, ck) { (batch, _) =>
+          if (!batch.isEmpty) {
+            val pairs = Dedup.ngramJaccardJoin(batch, "doc_id", "text",
+              batch, "doc_id", "text", shingleK = 3, threshold = 0.5)
+              .filter(col("id_a") < col("id_b"))
+            val internal = Dedup.dropNearDuplicates(batch, "doc_id", pairs)
+            val survivors =
+              if (fs.exists(outPath))
+                Dedup.dropNearDuplicatesAgainst(internal, "doc_id", "text",
+                  eng(s).load(outDir, "parquet"), "doc_id", "text",
+                  shingleK = 3, threshold = 0.5)
+              else internal
+            survivors.write.mode("append").parquet(outDir)
+          }
         }
+        val surv = eng(s).load(outDir, "parquet")
+        val dropped = docs.join(surv.select("doc_id"), Seq("doc_id"),
+          "left_anti")
+        val survDirty = Dedup.ngramJaccardJoin(surv, "doc_id", "text",
+          surv, "doc_id", "text", shingleK = 3, threshold = 0.5)
+          .filter(col("id_a") =!= col("id_b")).limit(1).count() > 0
+        val uncovered = dropped.join(
+          Dedup.ngramJaccardJoin(dropped, "doc_id", "text",
+            docs, "doc_id", "text", shingleK = 3, threshold = 0.5)
+            .filter(col("id_a") =!= col("id_b"))
+            .select(col("id_a").as("doc_id")).distinct(),
+          Seq("doc_id"), "left_anti").limit(1).count() > 0
+        eng(s).toDF(Seq(Seq(docs.count(), !survDirty, !uncovered)),
+          "n_docs:long,survivors_clean:bool,dropped_covered:bool")
       }
-      val surv = eng(s).load(outDir, "parquet")
-      val dropped = docs.join(surv.select("doc_id"), Seq("doc_id"),
-        "left_anti")
-      val survDirty = Dedup.ngramJaccardJoin(surv, "doc_id", "text",
-        surv, "doc_id", "text", shingleK = 3, threshold = 0.5)
-        .filter(col("id_a") =!= col("id_b")).limit(1).count() > 0
-      val uncovered = dropped.join(
-        Dedup.ngramJaccardJoin(dropped, "doc_id", "text",
-          docs, "doc_id", "text", shingleK = 3, threshold = 0.5)
-          .filter(col("id_a") =!= col("id_b"))
-          .select(col("id_a").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti").limit(1).count() > 0
-      eng(s).toDF(Seq(Seq(docs.count(), !survDirty, !uncovered)),
-        "n_docs:long,survivors_clean:bool,dropped_covered:bool")
     }),
 
     // schema-evolution read: two parquet batches with DIFFERENT schemas
@@ -665,22 +668,23 @@ private[graft] object EntriesQ2 {
     // mergeSchema — v1 rows surface NULLs for the added columns; exact
     // DuckDB oracle recomputes the reconciled aggregate from the split
     "q85_schema_evolution" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_q85_").toString
-      val orders = t(s, dir, "orders")
-      orders.filter(col("o_orderkey") % 2 === 0)
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-        .write.mode("overwrite").parquet(s"$base/d")
-      orders.filter(col("o_orderkey") % 2 === 1)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-          col("o_orderstatus"))
-        .write.mode("append").parquet(s"$base/d")
-      eng(s).load(s"$base/d", "parquet",
-          options = Map("mergeSchema" -> "true"))
-        .groupBy(coalesce(col("o_orderstatus"), lit("<v1>"))
-          .as("o_orderstatus"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
-            .as("total"))
+      withTempDir("graft_q85_") { base =>
+        val orders = t(s, dir, "orders")
+        orders.filter(col("o_orderkey") % 2 === 0)
+          .select("o_orderkey", "o_custkey", "o_totalprice")
+          .write.mode("overwrite").parquet(s"$base/d")
+        orders.filter(col("o_orderkey") % 2 === 1)
+          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
+            col("o_orderstatus"))
+          .write.mode("append").parquet(s"$base/d")
+        eng(s).load(s"$base/d", "parquet",
+            options = Map("mergeSchema" -> "true"))
+          .groupBy(coalesce(col("o_orderstatus"), lit("<v1>"))
+            .as("o_orderstatus"))
+          .agg(count(lit(1)).as("n"),
+            sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
+              .as("total")).localCheckpoint(true)
+      }
     }),
 
     // size-targeted compaction: content identity is the oracle; the file

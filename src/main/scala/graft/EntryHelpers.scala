@@ -39,6 +39,19 @@ private[graft] object EntryHelpers {
 
   private[graft] def eng(s: SparkSession) = SparkGraftEngine(s)
 
+  /** Run `body` on a fresh temp dir named `<prefix>*` and delete the dir
+   * when it returns. A frame that reads the dir must be materialized
+   * inside `body` (`localCheckpoint(true)`) or it fails after the delete. */
+  private[graft] def withTempDir[T](prefix: String)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir.toString)
+    finally {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
+        .foreach(_.toFile.delete())
+    }
+  }
+
   /** Drop a managed table AND its warehouse directory: a fresh session has
    * an empty catalog but the previous run's directory survives, and
    * saveAsTable refuses to reuse the location (LOCATION_ALREADY_EXISTS). */

@@ -35,11 +35,14 @@ final case class PartitionSpec(
   /** Presort as Spark sort columns, always with explicit null placement:
    * nulls LAST in BOTH directions (pandas `na_position="last"` convention
    * of the reference; execution_engine.py:655-665). `Transform.coMap`
-   * sorts its cogroup with these columns; `Transform.sortArr` is the one
-   * copy of the order for ZIP's materialized arrays. */
+   * sorts its cogroup with these columns and `take` its rows;
+   * `Transform.sortArr` is the one copy of the order for ZIP's
+   * materialized arrays. */
   def presortCols: Seq[Column] =
     presort.map { case (c, asc) => if (asc) col(c).asc_nulls_last else col(c).desc_nulls_last }
 
+  /** The same order with nulls FIRST in both directions: `take`'s
+   * `naPosition = "first"`. */
   def presortColsNullsFirst: Seq[Column] =
     presort.map { case (c, asc) => if (asc) col(c).asc_nulls_first else col(c).desc_nulls_first }
 

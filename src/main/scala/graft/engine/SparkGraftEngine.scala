@@ -98,12 +98,11 @@ class SparkGraftEngine(val spark: SparkSession) extends GraftEngine {
   // RunOnce semantics of the reference (execution_engine.py:364-367):
   // broadcast/persist are idempotent per dataframe identity. Values must
   // not strongly reference their keys (WeakHashMap contract), so the
-  // broadcast result is held through a WeakReference and persist stores
-  // only a marker (Dataset.persist returns the receiver).
+  // broadcast result is held through a WeakReference. Persist reads
+  // Spark's own cache state instead of a registry, so a frame whose entry
+  // was dropped (`clearCache`, `unpersist`) is cached again.
   private val broadcasted = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[DataFrame, java.lang.ref.WeakReference[DataFrame]]())
-  private val persisted = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[DataFrame, java.lang.Boolean]())
 
   def broadcast(df: DataFrame): DataFrame = {
     val cached = Option(broadcasted.get(df)).flatMap(r => Option(r.get()))
@@ -116,10 +115,9 @@ class SparkGraftEngine(val spark: SparkSession) extends GraftEngine {
 
   def persist(df: DataFrame, lazyPersist: Boolean = true,
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
-    if (!persisted.containsKey(df)) {
+    if (df.storageLevel == StorageLevel.NONE) {
       df.persist(level)
       if (!lazyPersist) df.count() // eager materialization
-      persisted.put(df, java.lang.Boolean.TRUE)
     }
     df
   }
@@ -226,24 +224,17 @@ class SparkGraftEngine(val spark: SparkSession) extends GraftEngine {
   def take(df: DataFrame, n: Int, spec: PartitionSpec = PartitionSpec.empty,
       naPosition: String = "last"): DataFrame = {
     require(n >= 1, "n must be >= 1")
-    def sortCols(nullsLast: Boolean): Seq[Column] = spec.presort.map { case (c, asc) =>
-      (asc, nullsLast) match {
-        case (true, true) => col(c).asc_nulls_last
-        case (true, false) => col(c).asc_nulls_first
-        case (false, true) => col(c).desc_nulls_last
-        case (false, false) => col(c).desc_nulls_first
-      }
-    }
-    val nullsLast = naPosition != "first"
+    val sortCols =
+      if (naPosition == "first") spec.presortColsNullsFirst else spec.presortCols
     if (spec.by.isEmpty) {
       if (spec.presort.isEmpty) df.limit(n)
-      else df.orderBy(sortCols(nullsLast): _*).limit(n)
+      else df.orderBy(sortCols: _*).limit(n)
     } else if (n == 1 && spec.presort.isEmpty) {
       // fast path: arbitrary row per key without a window
       df.dropDuplicates(spec.by)
     } else {
       val w = Window.partitionBy(spec.by.map(col): _*)
-        .orderBy((if (spec.presort.nonEmpty) sortCols(nullsLast)
+        .orderBy((if (spec.presort.nonEmpty) sortCols
           else Seq(monotonically_increasing_id())): _*)
       df.withColumn("__graft_rn", row_number().over(w))
         .filter(col("__graft_rn") <= n)

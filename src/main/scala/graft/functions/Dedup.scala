@@ -80,8 +80,8 @@ object Dedup {
 
   private val MersennePrime = (1L << 61) - 1
 
-  /** Join-amplification bar for the ngram strategy auto-probe: cooccur at
-   * or below it, prefix-filtered above (see [[ngramJaccardPairs]]). */
+  /** Σdf²/Σdf bar of [[ngramJaccardPairs]]'s one sampled probe: co-occurrence
+   * at or below it, prefix filtering above (a wrong route leans to prefix). */
   private val AmpThreshold = 64.0
 
   /** MinHash signature (H values) of a shingle-hash array — native
@@ -416,27 +416,48 @@ object Dedup {
   }
 
   /**
-   * Exact n-gram Jaccard similarity join (no LSH approximation).
+   * Exact n-gram Jaccard similarity join (no LSH approximation): every
+   * unordered pair (id_a < id_b) whose word-`shingleK`-gram sets have
+   * Jaccard ≥ `threshold`. Two exact candidate generators read the same
+   * [[postings]]:
    *
-   * Default path (no df cut): AllPairs-style prefix filtering (Bayardo,
-   * Ma, Srikant, "Scaling Up All Pairs Similarity Search", WWW'07). Sort
-   * each document's shingles by ascending corpus document-frequency (ties
-   * by hash — any consistent global order works); index ONLY the first
-   * `|S| - ceil(t*|S|) + 1` shingles. Completeness: for a pair with
-   * jaccard >= t, the globally-minimal shared shingle must sit inside
-   * BOTH prefixes — if it escaped A's prefix, A would hold at least
+   * Co-occurrence counting: the inverted index self-joins on the shingle
+   * hash and counts each pair's shared shingles, then joins the set sizes
+   * back. It generates Σdf² join rows — linear in the corpus when dfs are
+   * bounded (duplicate clusters of bounded size, the common curated-corpus
+   * case), where its narrow-row aggregate wins (sf0.1: 3.0 s vs 4.9 s —
+   * a 2.8M-row count aggregate vs 409k verified candidates).
+   *
+   * Prefix filtering: AllPairs (Bayardo, Ma, Srikant, "Scaling Up All
+   * Pairs Similarity Search", WWW'07). Sort each document's shingles by
+   * ascending corpus document-frequency (ties by hash — any consistent
+   * global order works); index ONLY the first `|S| - ceil(t*|S|) + 1`
+   * shingles. Completeness: for a pair with jaccard >= t, the
+   * globally-minimal shared shingle must sit inside BOTH prefixes — if it
+   * escaped A's prefix, A would hold at least
    * `|S_A| - prefixLen + 1 = ceil(t*|S_A|)` shingles ordered strictly
    * before every shared one and absent from B, forcing
    * `|A∩B| <= ceil(t*|S_A|) - 1 < t*|S_A| <= |A∩B|` — a contradiction.
-   * Candidates are then verified against FULL shingle sets, so the
-   * result is exactly all pairs with jaccard >= threshold, while the
-   * quadratic index self-join runs over the df-ASCENDING prefixes —
-   * frequent shingles almost never land in a prefix, collapsing the
-   * sum-of-df² cost that dominates the naive inverted index.
+   * Candidates are then verified against FULL shingle sets. Frequent
+   * shingles almost never land in a df-ascending prefix, so this is the
+   * arm that survives an UNBOUNDED df head (web boilerplate, df in the
+   * millions), where Σdf² explodes quadratically.
+   *
+   * Routing: one probe on a deterministic 1-in-8 document sample measures
+   * the join amplification Σdf²/Σdf of its df table. A heavy shingle's
+   * sampled df concentrates at df/8, so the estimate is de-biased by 8;
+   * co-occurrence runs at or below [[AmpThreshold]], prefix filtering
+   * above. The chosen arm builds its df table lazily inside its own plan,
+   * so routing materializes nothing. Both arms are exact (FunctionsSpec
+   * pins them equal), so a wrong route costs time only, and it leans to
+   * prefix filtering: the 8× de-bias overstates the amplification of
+   * bounded-df corpora (16.6 against an exact 2.67 on the sf0.01
+   * documents), so co-occurrence is picked only when the exact Σdf²/Σdf
+   * is at most about 64.
    *
    * `maxShingleDf` (a documented skew-guard APPROXIMATION that ignores
-   * ubiquitous shingles) keeps the original co-occurrence formulation —
-   * its semantics depend on counting intersections over the cut universe.
+   * ubiquitous shingles) always runs co-occurrence: its semantics depend
+   * on counting intersections over the cut universe.
    */
   def ngramJaccardPairs(
       df: DataFrame,
@@ -447,98 +468,48 @@ object Dedup {
       maxShingleDf: Int = Int.MaxValue): DataFrame = {
     // shared materialized shingle stage — reused across the dedup family
     val sigs = shingleStage(df, idCol, textCol, shingleK)
-    // the df cut's semantics are defined by co-occurrence counting over the
-    // cut universe — the prefix path cannot honor them
     if (maxShingleDf != Int.MaxValue) ngramJaccardCooccur(sigs, threshold, maxShingleDf)
     else {
-      // Decide from the measured df histogram: the co-occurrence path
-      // generates sum(df²) join rows; the prefix path trades that for
-      // per-candidate set verification. With BOUNDED dfs (duplicate
-      // clusters of bounded size — the common curated-corpus case)
-      // sum(df²) grows linearly with the corpus and the narrow-row
-      // aggregate wins (measured at sf0.1: 3.0 s vs 4.9 s — 409k
-      // verified candidates vs a 2.8M-row count aggregate). With an
-      // UNBOUNDED df head (web boilerplate: df in the millions),
-      // sum(df²) explodes quadratically and only the prefix path
-      // survives. The decision statistic is the join amplification
-      // sum(df²)/sum(df).
-      // Sums run in double: a Long sum(df²) overflows at exactly the
+      // Sums run in double: a Long Σdf² overflows at exactly the
       // unbounded-df scale this probe exists to detect (df ~1e7 ⇒
       // df² ~1e14; a few thousand such shingles exceed 2⁶³ — ANSI mode
       // would throw, non-ANSI would wrap negative and mis-route).
-      //
-      // r16: the probe runs on a deterministic 1-in-8 document sample
-      // first — a full-corpus df aggregate PLUS an eager checkpoint of
-      // the df table was a full pass + materialization barrier spent on
-      // a routing decision (guide §1/§2: decide with small rows). For a
-      // doc-sampling rate p, a heavy shingle's sampled df concentrates
-      // at p·df, so est ≈ p·amp on the explosive head the probe exists
-      // to catch; de-bias by 1/p. Routing keeps a safety band: only a
-      // clear-margin estimate (≤ AmpThreshold/2, ≥ 2×AmpThreshold)
-      // routes directly — the chosen arm then computes its df table
-      // lazily inside its own plan (one aggregate either way, no
-      // materialization barrier). An ambiguous estimate falls back to
-      // the exact full-corpus probe with the materialized df frame both
-      // arms can reuse, exactly the pre-r16 behavior. Either arm is
-      // EXACT (differential-pinned equal in FunctionsSpec), so a
-      // borderline mis-route costs only time, never results.
-      val sampleInv = sigs
-        .filter(pmod(xxhash64(col("id")), lit(8)) === 0)
-        .select(col("id"), explode(col("sh")).as("s"))
-      val sr = sampleInv.groupBy("s").agg(count(lit(1)).as("df"))
-        .filter(col("df") >= 2)
-        .select(sum(col("df").cast("double")).as("occ"),
-          sum(col("df").cast("double") * col("df")).as("occ2")).first()
-      val sampledMass = if (sr.isNullAt(0)) 0.0 else sr.getDouble(0)
-      val est =
-        if (sampledMass == 0.0) 0.0
-        else 8.0 * sr.getDouble(1) / sampledMass
-      // r17 (advice): on a small corpus the 1-in-8 sample's estimate has
-      // high variance and a clear-margin-but-wrong route would silently
-      // skip the exact probe (cost: time only — both arms are exact, and
-      // differential-pinned equal — but avoidably). Only let the cheap
-      // probe short-circuit when it saw enough posting mass to be
-      // trusted; below the bar, route via the exact full probe.
-      val trusted = sampledMass >= 4096.0
-      if (trusted && est <= AmpThreshold / 2)
-        ngramJaccardCooccur(sigs, threshold, Int.MaxValue)
-      else if (trusted && est >= 2 * AmpThreshold)
-        ngramJaccardPrefixFiltered(sigs, threshold)
-      else {
-        val inverted = sigs.select(col("id"), explode(col("sh")).as("s"))
-        val dfs = graft.Materialize.eager(
-          inverted.groupBy("s").agg(count(lit(1)).as("df"))
-            .filter(col("df") >= 2))
-        val r = dfs.select(sum(col("df").cast("double")).as("occ"),
-          sum(col("df").cast("double") * col("df")).as("occ2")).first()
-        val amplification =
-          if (r.isNullAt(0) || r.getDouble(0) == 0.0) 0.0
-          else r.getDouble(1) / r.getDouble(0)
-        if (amplification <= AmpThreshold) cooccurFrom(sigs, inverted, dfs, threshold)
-        else prefixFilteredFrom(sigs, inverted, dfs, threshold)
-      }
+      val (_, sampledDfs) = postings(sigs.filter(pmod(xxhash64(col("id")), lit(8)) === 0))
+      val r = sampledDfs.select(sum(col("df").cast("double")),
+        sum(col("df").cast("double") * col("df"))).first()
+      val est = if (r.isNullAt(0) || r.getDouble(0) == 0.0) 0.0
+        else 8.0 * r.getDouble(1) / r.getDouble(0)
+      if (est <= AmpThreshold) ngramJaccardCooccur(sigs, threshold, Int.MaxValue)
+      else ngramJaccardPrefixFiltered(sigs, threshold)
     }
+  }
+
+  /**
+   * The inverted index of the Jaccard/containment family over a (id, sh)
+   * shingle frame: the (id, s) posting stream and its df table (s, df),
+   * both lazy. The df table keeps the shingles of at least two documents,
+   * and of at most `maxShingleDf` when a cut is given. Dropping df = 1
+   * shingles is exact: a shared shingle has df ≥ 2 by definition, and
+   * the prefix-length bound stays valid on the pruned sets (jaccard ≥ t
+   * implies |A∩B| ≥ t·|A| ≥ t·|A'| for the pruned A' ⊆ A). On natural
+   * text most shingles ARE unique (the long tail), so this also removes
+   * the bulk of the join and per-doc sort input. No broadcast hint: AQE
+   * broadcasts the df table when small; forcing it would OOM at 100 TB.
+   */
+  private def postings(
+      sigs: DataFrame, maxShingleDf: Int = Int.MaxValue): (DataFrame, DataFrame) = {
+    val inverted = sigs.select(col("id"), explode(col("sh")).as("s"))
+    val counted = inverted.groupBy("s").agg(count(lit(1)).as("df"))
+    val dfs =
+      if (maxShingleDf == Int.MaxValue) counted.filter(col("df") >= 2)
+      else counted.filter(col("df").between(2, maxShingleDf))
+    (inverted, dfs)
   }
 
   /** Prefix-filtered exact path over a (id, sh) shingle frame. */
   private[graft] def ngramJaccardPrefixFiltered(
       sigs: DataFrame, threshold: Double): DataFrame = {
-    val inverted = sigs.select(col("id"), explode(col("sh")).as("s"))
-    // df=1 shingles cannot form a pair; pruning them is exactness-
-    // preserving (a shared shingle has df >= 2 by definition), and the
-    // prefix-length bound stays valid on the pruned sets: jaccard >= t
-    // implies |A∩B| >= t*|A| >= t*|A'| for the pruned A' ⊆ A. On natural
-    // text most shingles ARE unique (the long tail), so this also removes
-    // the bulk of the per-doc sort input. No broadcast hint: AQE
-    // broadcasts the df frame when small; forcing it would OOM at 100 TB.
-    val dfs = inverted.groupBy("s").agg(count(lit(1)).as("df"))
-      .filter(col("df") >= 2)
-    prefixFilteredFrom(sigs, inverted, dfs, threshold)
-  }
-
-  private def prefixFilteredFrom(
-      sigs: DataFrame, inverted: DataFrame, dfs: DataFrame,
-      threshold: Double): DataFrame = {
+    val (inverted, dfs) = postings(sigs)
     // prefixLen = |S| - ⌈t·|S|⌉ + 1. The ceiling must be the REAL-
     // arithmetic one: the IEEE product t*|S| can land a hair above an
     // exact integer (0.55*20 = 11.000000000000002), which would shorten
@@ -580,25 +551,25 @@ object Dedup {
     verifyJaccard(candidates, sigs.select(col("id"), col("sh")), threshold)
   }
 
-  /** Original inverted-index co-occurrence formulation — kept for the
-   * `maxShingleDf` skew-guard mode (and as the semantic reference the
-   * prefix-filtered path is differential-tested against). */
+  /** Co-occurrence exact path over a (id, sh) shingle frame — also the
+   * `maxShingleDf` skew-guard mode, and the semantic reference the
+   * prefix-filtered path is differential-tested against. */
   private[graft] def ngramJaccardCooccur(
-      sigs: DataFrame, threshold: Double, maxShingleDf: Int): DataFrame = {
-    val inverted = sigs.select(col("id"), explode(col("sh")).as("s"))
-    val dfs = inverted.groupBy("s").agg(count(lit(1)).as("df"))
-      .filter(col("df").between(2, maxShingleDf))
-    cooccurFrom(sigs, inverted, dfs, threshold)
-  }
+      sigs: DataFrame, threshold: Double, maxShingleDf: Int): DataFrame =
+    cooccurCounts(sigs, maxShingleDf)
+      .withColumn("jaccard",
+        col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), col("jaccard"))
 
   /** Shared co-occurrence core: unordered candidate pairs (id_a < id_b)
    * with their exact shingle-intersection count and both set sizes —
-   * jaccard ([[cooccurFrom]]) and directional containment
+   * jaccard ([[ngramJaccardCooccur]]) and directional containment
    * ([[containmentPairs]]) are both one projection away, so the
-   * inverted-index machinery (df pruning, self-join, count aggregate,
-   * size join-back) lives exactly once. */
-  private def cooccurCounts(
-      sigs: DataFrame, inverted: DataFrame, dfs: DataFrame): DataFrame = {
+   * inverted-index machinery (self-join, count aggregate, size
+   * join-back) lives exactly once. */
+  private def cooccurCounts(sigs: DataFrame, maxShingleDf: Int): DataFrame = {
+    val (inverted, dfs) = postings(sigs, maxShingleDf)
     val sizes = sigs.select(col("id"), size(col("sh")).as("sz"))
     // deliberately the SELF-JOIN formulation, not the SortedPairs bucket
     // generator used by bucketPairs: the posting stream is dominated by
@@ -616,15 +587,6 @@ object Dedup {
     co.join(sizes.select(col("id").as("id_a"), col("sz").as("sz_a")), "id_a")
       .join(sizes.select(col("id").as("id_b"), col("sz").as("sz_b")), "id_b")
   }
-
-  private def cooccurFrom(
-      sigs: DataFrame, inverted: DataFrame, dfs: DataFrame,
-      threshold: Double): DataFrame =
-    cooccurCounts(sigs, inverted, dfs)
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
 
   /**
    * Directional n-gram CONTAINMENT join: ordered pairs (id_a, id_b) where
@@ -664,11 +626,8 @@ object Dedup {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
     val sigs = shingleStage(df, idCol, textCol, shingleK)
-    val inverted = sigs.select(col("id"), explode(col("sh")).as("s"))
-    val dfs = inverted.groupBy("s").agg(count(lit(1)).as("df"))
-      .filter(col("df").between(2, maxShingleDf))
     // one row per unordered pair from the shared core; emit both directions
-    cooccurCounts(sigs, inverted, dfs)
+    cooccurCounts(sigs, maxShingleDf)
       .select(explode(array(
         struct(col("id_a"), col("id_b"),
           (col("inter").cast("double") / col("sz_a")).as("containment")),
@@ -870,8 +829,8 @@ object Dedup {
     val evalSh = evalDf
       .select(explode(shingleHashes(col(evalTextCol), shingleK)).as("s"))
       .distinct()
-    val matched = docSh.select(col("id"), explode(col("sh")).as("s"))
-      .join(evalSh, Seq("s"), "left_semi")
+    val (inverted, _) = postings(docSh)
+    val matched = inverted.join(evalSh, Seq("s"), "left_semi")
       .groupBy("id").agg(count(lit(1)).as("n_matched"))
     docSh.select(col("id"), size(col("sh")).as("n_shingles"))
       .join(matched, Seq("id"), "left")

@@ -218,4 +218,18 @@ class EngineOpsSpec extends SparkTestBase {
     assert(b1 eq b2)
     assert(p1.count() === 1)
   }
+
+  test("persist caches a frame again after its cache entry is dropped") {
+    import org.apache.spark.storage.StorageLevel
+    val d = df(Seq(Seq(1)), "x:int")
+    engine.persist(d)
+    spark.catalog.clearCache()
+    assert(d.storageLevel === StorageLevel.NONE)
+    engine.persist(d)
+    assert(d.storageLevel !== StorageLevel.NONE)
+    d.unpersist()
+    engine.persist(d, lazyPersist = false)
+    assert(d.storageLevel !== StorageLevel.NONE)
+    d.unpersist()
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.{Dedup, Multimodal, Similarity, TextFunctions}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-operator correctness: dedup family cross-checked against
@@ -14,8 +15,8 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   /** brute-force word-3-gram jaccard pairs ≥ t, computed driver-side. */
-  private def bruteJaccardPairs(t: Double): Set[(Long, Long)] = {
-    val texts = docs.select("doc_id", "text").collect()
+  private def bruteJaccardPairs(t: Double, corpus: DataFrame = docs): Set[(Long, Long)] = {
+    val texts = corpus.select("doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     def sh(s: String) = s.trim.split("\\s+").sliding(3).filter(_.length == 3)
       .map(_.mkString(" ")).toSet
@@ -35,12 +36,39 @@ class FunctionsSpec extends SparkTestBase {
     assertDfEq(Dedup.exact(d, Seq("t"), "id"), Seq(Seq("x", 1L), Seq("y", 2L)))
   }
 
+  /** 200 documents sharing one 20-word boilerplate run (18 shingles of
+   * df 200) plus a tail of `id % 20` words of their own: the sampled
+   * probe's estimate is about 8 × 25, far above the amplification bar. */
+  private lazy val heavyHeadDocs = {
+    val boiler = (0 until 20).map(i => s"boiler$i").mkString(" ")
+    df((1L to 200L).map { id =>
+      Seq(id, (boiler +: (0L until id % 20).map(j => s"t${id}x$j")).mkString(" "))
+    }, "doc_id:long,text:str")
+  }
+
   test("ngramJaccardPairs matches brute force exactly") {
-    val want = bruteJaccardPairs(0.5)
-    val got = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got === want)
-    assert(want.nonEmpty) // sf0.001 has planted near-dups
+    for ((corpus, arm) <- Seq(docs -> "co-occurrence", heavyHeadDocs -> "prefix")) {
+      val want = bruteJaccardPairs(0.5, corpus)
+      val pairs = Dedup.ngramJaccardPairs(corpus, "doc_id", "text", 3, 0.5)
+      val got = pairs.select("id_a", "id_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got === want, arm)
+      assert(want.nonEmpty, arm) // sf0.001 has planted near-dups
+      // the prefix arm alone slices each document's df-ascending shingles
+      assert(pairs.queryExecution.analyzed.toString.contains("slice(") === (arm == "prefix"), arm)
+    }
+  }
+
+  test("ngramJaccardPairs routes on its sampled probe: no persisted RDD, one RDD in the plan") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    def rdds(d: DataFrame): Set[Int] =
+      d.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id }.toSet
+    val sigs = Dedup.shingleStage(docs, "doc_id", "text", 3)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === persisted)
+    assert(rdds(sigs).size === 1)
+    assert(rdds(pairs) === rdds(sigs))
   }
 
   test("prefix-filtered jaccard path == co-occurrence path (several thresholds)") {

@@ -28,6 +28,16 @@ class HarnessSpec extends SparkTestBase {
     assert(Verify.queryFilter(Seq("sf", "out")) === None)
   }
 
+  test("query bodies that write a temp dir delete it and return rows that outlive it") {
+    for (name <- Seq("m08_binary_ingest", "q75_stream_sketch",
+        "q83_stream_heavy_hitters", "q84_stream_ingest_dedup", "q85_schema_evolution")) {
+      val before = SparkTestBase.scratch
+      val out = SparkEntry.queries(name)(spark, "perfbench/data/sf0.001")
+      assert(SparkTestBase.scratch -- before === Set.empty, name)
+      assert(out.collect().nonEmpty, name)
+    }
+  }
+
   test("Bench result line: valid JSON, 21 keys in order, error for a failed query") {
     val line = Bench.resultLine(
       results = Seq("q01_agg" -> Some(1.2344), "d04_dedup_ngram" -> None),

@@ -21,7 +21,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * Spark directly. Third lint: the SQL dialect compiles to Workflow nodes,
  * so it has no persist, checkpoint, save or yield code of its own. Fourth
  * lint: one main file spells out the join types (`GraftEngine.joinType`),
- * so join, zip and cogroup cannot drift apart again.
+ * so join, zip and cogroup cannot drift apart again. Fifth lint: one
+ * helper in `Dedup.scala` builds the (id, s) posting stream and its df
+ * table, so the Jaccard and containment paths share one df ≥ 2 rule.
  */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -102,5 +104,16 @@ class SourceHygieneSpec extends AnyFunSuite {
       spellings.exists(text.contains)
     }
     assert(files.map(_.toString) === Seq("src/main/scala/graft/engine/GraftEngine.scala"))
+  }
+
+  test("one helper builds the (id, s) shingle posting stream") {
+    import scala.jdk.CollectionConverters._
+    val posting = "select(col(\"id\"), explode(col(\"sh\"))"
+    val hits = scalaSources(java.nio.file.Paths.get("src/main")).flatMap { p =>
+      java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+        .filter(_._1.contains(posting)).map { case (_, i) => s"$p:${i + 1}" }
+    }
+    assert(hits.size === 1, hits.mkString("\n"))
+    assert(hits.head.startsWith("src/main/scala/graft/functions/Dedup.scala:"))
   }
 }
